@@ -168,8 +168,8 @@ object Normalize {
 
   /** S1: JSONL source. Reads path as text, drops blank lines (the
     * reference skips them before any counter, `main.go:354-356`), yields
-    * one `line` column. Streaming variant: [[StreamingPipeline]] uses
-    * `readStream.text` with the same downstream expressions. */
+    * one `line` column. The streaming variant uses `readStream.text`
+    * with the same downstream expressions. */
   def parseLines(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
     spark.read.textFile(path).toDF("line")
       .filter(trim(col("line")) =!= "")

@@ -7,69 +7,72 @@ import org.apache.spark.sql.functions._
   * report — the Spark re-expression of `runPipeline`
   * (`/root/reference/cmd/etl/main.go:234-455`).
   *
-  * One declarative plan end-to-end: the only materializations are the
-  * sink write and the single report aggregation pass over the cached
-  * normalized frame. Worker pools / queues / mutexes from the reference
-  * are Spark's task scheduler; stage timings are measured around the two
-  * actions (documented approximation — pipelined stages aren't separately
-  * timable, SURVEY §2.3 A9).
+  * One declarative plan end-to-end, and one per-batch core for every
+  * driver: [[process]] caches the transformed frame, writes it through
+  * [[writeKept]] (sink + DLQ), then runs the three report jobs of
+  * [[EtlReport.fromDataFrame]] over the cache. [[run]] calls it once,
+  * [[runStdin]] once per line batch, and the streaming layer once per
+  * micro-batch. Worker pools / queues / mutexes from the reference are
+  * Spark's task scheduler; [[StageTimings]] says which actions are
+  * timed (pipelined stages aren't separately timable, SURVEY §2.3 A9).
   */
 object Pipeline {
 
-  case class Result(report: EtlReport, kept: DataFrame)
+  case class Result(report: EtlReport)
 
-  /** Run on an already-loaded raw-lines frame (library/test entry —
-    * mirror of `runPipeline(in io.Reader, …)`). */
-  def run(lines: DataFrame, cfg: EtlConfig): Either[String, Result] = {
-    for {
-      _ <- EtlConfig.validate(cfg)
-      sink <- Sinks.build(cfg)
-      normalized0 = Normalize(lines)
-      transformed0 <- TransformRegistry(cfg)(normalized0)
-    } yield {
+  /** The sink step of one batch: the kept rows ([[Transforms.split]]) in
+    * the sink's record columns go to `sink`; failed writes go to the DLQ
+    * unless the sink wrote its DLQ distributed already (`dlqHandled` —
+    * re-writing the sampled `dlq` seq would duplicate and undercount). */
+  def writeKept(transformed: DataFrame, sink: Sinks.Sink,
+      cfg: EtlConfig): Sinks.WriteResult = {
+    val (kept, _, _) = Transforms.split(transformed)
+    val wr = sink.write(kept.select("ts", "level", "message", "service",
+      "namespace", "pod", "node", "trace_id", "fields"))
+    if (cfg.dlqPath.nonEmpty && wr.dlqHandled.isEmpty)
+      Sinks.writeDlq(cfg.dlqPath, wr.dlq)
+    wr
+  }
+
+  /** One batch end to end: cache `transformed`, write it ([[writeKept]],
+    * A6–A8), compute A1–A5 over the cache ([[EtlReport.fromDataFrame]])
+    * and fold the write stats and both action timings into that report.
+    * Multi-batch callers combine the results with [[EtlReport.merge]];
+    * the duration fields are left to the caller. */
+  def process(transformed: DataFrame, sink: Sinks.Sink,
+      cfg: EtlConfig): EtlReport = {
+    val cached = transformed.cache()
+    try {
       val t0 = System.nanoTime()
-      // fresh run: truncate the DLQ like the reference's os.Create —
-      // stale failure entries from a prior run must not accumulate
-      Sinks.initDlq(cfg.dlqPath)
-      val transformed = transformed0.cache()
-      val (kept, _, _) = Transforms.split(transformed)
-
-      // Sink write (A6–A8 + DLQ rows from the writer).
-      val writeStart = System.nanoTime()
-      val keptClean = kept.select("ts", "level", "message", "service",
-        "namespace", "pod", "node", "trace_id", "fields")
-      val wr = sink.write(keptClean)
-      val writeSecs = (System.nanoTime() - writeStart) / 1e9
-
-      // Report aggregation (A1–A5) in one pass over the cached frame.
-      val aggStart = System.nanoTime()
-      var report = EtlReport.fromDataFrame(transformed)
-      val aggSecs = (System.nanoTime() - aggStart) / 1e9
-
-      // a sink with dlqHandled wrote its DLQ distributed already —
-      // re-writing the (sampled) dlq seq would duplicate and undercount
-      if (cfg.dlqPath.nonEmpty && wr.dlqHandled.isEmpty)
-        Sinks.writeDlq(cfg.dlqPath, wr.dlq)
-      report = report.copy(
+      val wr = writeKept(cached, sink, cfg)
+      val t1 = System.nanoTime()
+      EtlReport.fromDataFrame(cached).copy(
         writtenOk = wr.writtenOk,
         writeFailed = wr.writeFailed,
         retryStats = wr.retry,
         dlqWritten = wr.dlqWritten,
         dlqReasons = wr.dlqReasons,
-        // Pipelined stages aren't separately timable in a fused
-        // whole-stage-codegen plan (SURVEY §2.3 A9): attribute the
-        // aggregation pass to normalization and the sink action to
-        // writing.
         stageTimings = StageTimings(
-          parsingSeconds = 0,
-          normalizationSeconds = aggSecs,
-          filteringSeconds = 0,
-          writingSeconds = writeSecs))
-      report = report.withDuration((System.nanoTime() - t0) / 1e9)
-      transformed.unpersist()
-      Result(report, keptClean)
-    }
+          normalizationSeconds = (System.nanoTime() - t1) / 1e9,
+          writingSeconds = (t1 - t0) / 1e9))
+    } finally { cached.unpersist(); () }
   }
+
+  /** Run on an already-loaded raw-lines frame (library/test entry —
+    * mirror of `runPipeline(in io.Reader, …)`). */
+  def run(lines: DataFrame, cfg: EtlConfig): Either[String, Result] =
+    for {
+      _ <- EtlConfig.validate(cfg)
+      sink <- Sinks.build(cfg)
+      transformed <- TransformRegistry(cfg)(Normalize(lines))
+    } yield {
+      val t0 = System.nanoTime()
+      // fresh run: truncate the DLQ like the reference's os.Create —
+      // stale failure entries from a prior run must not accumulate
+      Sinks.initDlq(cfg.dlqPath)
+      Result(process(transformed, sink, cfg)
+        .withDuration((System.nanoTime() - t0) / 1e9))
+    }
 
   /** Incremental byte-level line reader behind [[runStdin]] (r15 —
     * closes the r14 drain-loop gap): splits on `'\n'` at the BYTE
@@ -141,17 +144,17 @@ object Pipeline {
 
   /** TRUE incremental stdin (r14 — replaces the r13 temp-file spool):
     * a bounded line-batch reader feeding micro-batches, the
-    * reference's incremental consumption (`cmd/etl/main.go:340-359`)
-    * re-expressed as the streaming layer's per-batch core. An
-    * unbounded pipe makes progress: [[LineBatcher]] BLOCKS only while
+    * reference's incremental consumption (`cmd/etl/main.go:340-359`).
+    * An unbounded pipe makes progress: [[LineBatcher]] BLOCKS only while
     * it holds no completed line, then drains whatever complete lines
     * the buffered bytes yield up to `batchLines` (a partial trailing
     * line waits in its tail — it can never stall a drained batch),
-    * processes that batch through parse → normalize → transforms →
-    * sink append → report merge, and loops — so output lands after
-    * every burst instead of after EOF. One Sink instance across
-    * batches gives the append lifecycle (the foreachBatch contract);
-    * reports ADD via [[graft.streaming.StreamingPipeline.merge]].
+    * runs that batch through parse → normalize → transforms →
+    * [[process]], and loops — so output lands after every burst
+    * instead of after EOF. The transform chain is resolved once, before
+    * the first batch. One Sink instance across batches gives the append
+    * lifecycle (the foreachBatch contract); reports ADD via
+    * [[EtlReport.merge]].
     * Driver memory is bounded by `batchLines` raw lines per batch.
     * Returns the merged report at EOF; a never-closed pipe simply
     * keeps consuming (the reference behaves the same). Callers route
@@ -160,47 +163,23 @@ object Pipeline {
     * ([[Main.main]]). */
   def runStdin(spark: SparkSession, cfg: EtlConfig,
       in: java.io.InputStream, batchLines: Int = 10000)
-      : Either[String, EtlReport] = {
+      : Either[String, EtlReport] =
     for {
       _ <- EtlConfig.validate(cfg)
       sink <- Sinks.build(cfg)
+      transform <- TransformRegistry.buildTransforms(cfg)
     } yield {
       val t0 = System.nanoTime()
       Sinks.initDlq(cfg.dlqPath)
       val batcher = new LineBatcher(in)
       import spark.implicits._
-      var acc = EtlReport()
-      var eof = false
-      while (!eof) {
-        batcher.nextBatch(batchLines) match {
-          case None => eof = true
-          case Some(batch) =>
-          val lines = batch.toDS().toDF("line")
-            .filter(trim(col("line")) =!= "")
-          TransformRegistry(cfg)(Normalize(lines)) match {
-            case Right(transformed0) =>
-              val b = transformed0.cache()
-              try {
-                val part = EtlReport.fromDataFrame(b)
-                val (kept, _, _) = Transforms.split(b)
-                val clean = kept.select("ts", "level", "message", "service",
-                  "namespace", "pod", "node", "trace_id", "fields")
-                val wr = sink.write(clean)
-                if (cfg.dlqPath.nonEmpty && wr.dlqHandled.isEmpty)
-                  Sinks.writeDlq(cfg.dlqPath, wr.dlq)
-                acc = graft.streaming.StreamingPipeline.merge(acc, part, wr)
-              } finally { b.unpersist(); () }
-            case Left(e) =>
-              // transform-registry config errors are caught by the
-              // pre-batch validate above; a Left here is unreachable,
-              // but fail loudly rather than silently dropping a batch
-              throw new IllegalStateException(s"transform chain: $e")
-          }
+      Iterator.continually(batcher.nextBatch(batchLines)).takeWhile(_.isDefined)
+        .flatten.foldLeft(EtlReport()) { (acc, batch) =>
+          val lines = batch.toDS().toDF("line").filter(trim(col("line")) =!= "")
+          EtlReport.merge(acc, process(transform(Normalize(lines)), sink, cfg))
         }
-      }
-      acc.withDuration((System.nanoTime() - t0) / 1e9)
+        .withDuration((System.nanoTime() - t0) / 1e9)
     }
-  }
 
   /** Full CLI-equivalent run: read path (or incremental stdin via
     * [[runStdin]] when the path is `-`), execute, write report

@@ -3,15 +3,18 @@ package graft.etl
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** A1–A11: the metrics report.
-  *
-  * The reference maintains mutex-guarded counters updated record-at-a-time
-  * (`/root/reference/internal/report/report.go:14-185`). Here the same
-  * numbers fall out of ONE aggregation pass over the normalized frame
-  * (map-side partial aggregation, no shuffled data beyond a handful of
-  * counter rows), plus sink-side accumulators for write/retry/DLQ stats —
-  * the Spark-idiomatic equivalent of the Go worker counters.
-  */
+/** The report's `stage_timings`: wall seconds of the two driver
+  * actions that [[Pipeline.process]] runs on the cached transformed
+  * frame. Parse, normalize and the transforms fuse into the plan of
+  * the first action, so none of them has an action of its own to time:
+  *   - `writingSeconds`: the sink write plus the DLQ append. It is the
+  *     first action, so it also pays for reading, parsing, normalizing
+  *     and transforming the input into the cache;
+  *   - `normalizationSeconds`: the report pass
+  *     ([[EtlReport.fromDataFrame]]) over the cached frame;
+  *   - `parsingSeconds`, `filteringSeconds`: not measured, always 0,
+  *     kept so the key set matches the reference report.
+  * Multi-batch runs (stdin, streaming) sum them across batches. */
 case class StageTimings(
     parsingSeconds: Double = 0,
     normalizationSeconds: Double = 0,
@@ -23,6 +26,14 @@ case class RetryStats(
     writesWithRetries: Long = 0,
     maxRetriesPerWrite: Long = 0)
 
+/** A1–A11: the metrics report.
+  *
+  * The reference maintains mutex-guarded counters updated record-at-a-time
+  * (`internal/report/report.go:14-185`). Here A1–A5 come
+  * from [[EtlReport.fromDataFrame]] over the transformed frame and
+  * A6–A8 from the sink's [[Sinks.WriteResult]] (write/retry/DLQ stats) —
+  * the Spark-idiomatic equivalent of the Go worker counters.
+  */
 case class EtlReport(
     totalLines: Long = 0,
     jsonFailed: Long = 0,
@@ -165,17 +176,6 @@ case class EtlReport(
 
 object EtlReport {
 
-  /** Compute A1–A5 from a normalized+transformed frame in ONE pass.
-    *
-    * `df` must carry `error_kind`, `level`, `service`, `drop_reason`,
-    * `transform_error` (the standard output of
-    * [[Normalize.normalize]] + [[TransformRegistry.apply]]).
-    *
-    * The by-level / by-service breakdowns are folded into the same job
-    * via `map`-typed aggregation: everything is computed map-side and
-    * merged on the driver — a single narrow pass at any scale, no
-    * repeated scans of the input.
-    */
   /** Deterministic top-N breakdown with an `(other)` rollup: the
     * driver-side map is bounded by `cap` keys no matter the corpus —
     * a `by_service` map over a 100 TB multi-tenant stream is otherwise
@@ -196,10 +196,18 @@ object EtlReport {
     if (rest > 0) top + ("(other)" -> rest) else top
   }
 
+  /** Compute A1–A5 from a normalized+transformed frame in three jobs:
+    * one global aggregate for the counters (A1, A2, A5), then one
+    * groupBy per breakdown (A3 by level, A4 by service), each capped by
+    * [[breakdown]]'s top-N. Every job is a map-side partial aggregate
+    * that shuffles only counter rows; cache `df` first (as
+    * [[Pipeline.process]] does) or each job re-reads the input.
+    *
+    * `df` must carry `error_kind`, `level`, `service`, `drop_reason`,
+    * `transform_error` (the standard output of
+    * [[Normalize.normalize]] + [[TransformRegistry.apply]]). Write
+    * stats (A6–A8) and timings stay zero here. */
   def fromDataFrame(df: DataFrame, maxBreakdownKeys: Int = 10000): EtlReport = {
-    // Counters (A1, A2, A5) in one aggregate row. By-level/by-service
-    // (A3, A4) need a groupBy each, but all three jobs share the cached
-    // normalized frame; at 100 TB each is a partial-agg + tiny shuffle.
     val isJson = col("error_kind") === "json"
     val isNormErr = (col("error_kind") === "normalize") ||
       col(Transforms.TransformErrorCol).isNotNull
@@ -244,5 +252,40 @@ object EtlReport {
       filteredLevel = row.getLong(4),
       filteredService = row.getLong(5),
       filteredOther = row.getLong(6))
+  }
+
+  /** Combine the reports of two batches of one run (stdin batches,
+    * streaming micro-batches): counters, breakdown maps and stage
+    * timings add; the retry maximum takes the max. Duration-derived
+    * fields are left to the caller's [[EtlReport.withDuration]]. */
+  def merge(a: EtlReport, b: EtlReport): EtlReport = {
+    def addM(x: Map[String, Long], y: Map[String, Long]) =
+      (x.keySet ++ y.keySet).map(k =>
+        k -> (x.getOrElse(k, 0L) + y.getOrElse(k, 0L))).toMap
+    val (ta, tb) = (a.stageTimings, b.stageTimings)
+    a.copy(
+      totalLines = a.totalLines + b.totalLines,
+      jsonFailed = a.jsonFailed + b.jsonFailed,
+      jsonParsed = a.jsonParsed + b.jsonParsed,
+      normalizedOk = a.normalizedOk + b.normalizedOk,
+      normalizedFailed = a.normalizedFailed + b.normalizedFailed,
+      writtenOk = a.writtenOk + b.writtenOk,
+      writeFailed = a.writeFailed + b.writeFailed,
+      byLevel = addM(a.byLevel, b.byLevel),
+      byService = addM(a.byService, b.byService),
+      filteredLevel = a.filteredLevel + b.filteredLevel,
+      filteredService = a.filteredService + b.filteredService,
+      filteredOther = a.filteredOther + b.filteredOther,
+      dlqWritten = a.dlqWritten + b.dlqWritten,
+      dlqReasons = addM(a.dlqReasons, b.dlqReasons),
+      stageTimings = StageTimings(
+        ta.parsingSeconds + tb.parsingSeconds,
+        ta.normalizationSeconds + tb.normalizationSeconds,
+        ta.filteringSeconds + tb.filteringSeconds,
+        ta.writingSeconds + tb.writingSeconds),
+      retryStats = RetryStats(
+        a.retryStats.totalRetries + b.retryStats.totalRetries,
+        a.retryStats.writesWithRetries + b.retryStats.writesWithRetries,
+        math.max(a.retryStats.maxRetriesPerWrite, b.retryStats.maxRetriesPerWrite)))
   }
 }

@@ -17,8 +17,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * a Ctrl-C today gets a drained batch boundary instead of raw JVM
   * teardown. Batch jobs are cancelled outright (the reference's
   * context-cancel path aborts unfinished batch work the same way); the
-  * checkpoint + replay guard in [[graft.streaming.StreamingPipeline]]
-  * makes the cut crash-safe regardless.
+  * streaming layer's checkpoint + replay guard makes the cut
+  * crash-safe regardless.
   */
 object Shutdown {
 

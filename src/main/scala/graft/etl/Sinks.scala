@@ -153,8 +153,8 @@ object Sinks {
     * restarts is AT-LEAST-ONCE: the streaming layer skips micro-batches
     * its last-batch marker says were already written, which shrinks —
     * but cannot close — the replay window of a crash between the sink
-    * write and the marker write (see
-    * [[graft.streaming.StreamingPipeline.writeStream]]). */
+    * write and the marker write (the streaming layer's query starter
+    * documents the guard). */
   trait Sink {
     /** Write all rows of a normalized frame; never throws per-record. */
     def write(df: DataFrame): WriteResult

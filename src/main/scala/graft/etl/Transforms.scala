@@ -119,19 +119,20 @@ object TransformRegistry {
 
   def lookup(name: String): Option[Transform] = registry.get(name.toLowerCase)
 
-  /** Build the configured chain; `Left(error)` on unknown names. */
-  def buildTransforms(cfg: EtlConfig): Either[String, Seq[DataFrame => DataFrame]] = {
+  /** Build the configured chain as one function, stages applied in
+    * config order; `Left(error)` on unknown names. */
+  def buildTransforms(cfg: EtlConfig): Either[String, DataFrame => DataFrame] = {
     val names = if (cfg.transforms.isEmpty) Seq("filter_redact") else cfg.transforms
     val resolved = names.map(n => n -> lookup(n))
     resolved.collectFirst { case (n, None) => n } match {
       case Some(bad) => Left(s"""unknown transform "$bad"""")
-      case None => Right(resolved.flatMap(_._2).map(_(cfg)))
+      case None => Right(Function.chain(resolved.flatMap(_._2).map(_(cfg))))
     }
   }
 
-  /** Apply the configured chain: fold over `df.transform`. */
+  /** Apply the configured chain. */
   def apply(cfg: EtlConfig)(df: DataFrame): Either[String, DataFrame] =
-    buildTransforms(cfg).map(_.foldLeft(df)((d, t) => t(d)))
+    buildTransforms(cfg).map(_(df))
 
   register("filter_redact", cfg => Transforms.filterRedact(cfg))
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.etl._
 
 /** Structured Streaming form of the ETL pipeline.
@@ -56,14 +56,6 @@ object StreamingPipeline {
     TransformRegistry(cfg)(Normalize(lines))
       .fold(err => throw new IllegalArgumentException(err), identity)
 
-  /** Per-micro-batch sink writer: kept rows go to the configured sink,
-    * failures to the DLQ, counters to the listener bus — the exact
-    * once-per-batch semantics the reference's BatchedSink provided
-    * (`internal/sink/batched.go`), with Spark supplying the
-    * time+size batching. ONE sink instance serves the whole query:
-    * Sink's write lifecycle (first call truncates, later calls append —
-    * see [[graft.etl.Sinks.Sink]]) makes batch N+1 extend batch N's
-    * output instead of overwriting it. */
   /** True when `checkpoint` holds a prior run's state — the restart
     * case where sinks must append from their first write instead of
     * truncating (the checkpointed source will NOT re-read already
@@ -94,159 +86,66 @@ object StreamingPipeline {
     java.nio.file.Files.writeString(p, batchId.toString)
   }
 
-  def writeStream(transformed: DataFrame, cfg: EtlConfig,
-      checkpoint: String,
-      triggerMs: Long = 1000): Either[String, StreamingQuery] = {
-    if (!isResume(checkpoint)) Sinks.initDlq(cfg.dlqPath)
-    Sinks.build(cfg, resume = isResume(checkpoint)).map { sink =>
+  /** The one query starter behind [[writeStream]] and [[runOnce]]: a
+    * fresh checkpoint truncates the DLQ and builds truncate-first sinks,
+    * a resumed one appends ([[isResume]]); ONE sink instance serves the
+    * whole query, and `body` runs once per micro-batch that the replay
+    * guard ([[lastWrittenBatch]]) has not seen written. */
+  private def start(transformed: DataFrame, cfg: EtlConfig,
+      checkpoint: String, trigger: Trigger)(
+      body: (DataFrame, Sinks.Sink) => Unit): Either[String, StreamingQuery] = {
+    val resume = isResume(checkpoint)
+    if (!resume) Sinks.initDlq(cfg.dlqPath)
+    Sinks.build(cfg, resume).map { sink =>
       transformed.writeStream
         .outputMode("append")
         .option("checkpointLocation", checkpoint)
-        .trigger(Trigger.ProcessingTime(triggerMs, java.util.concurrent.TimeUnit.MILLISECONDS))
+        .trigger(trigger)
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           if (batchId > lastWrittenBatch(checkpoint)) {
-            val (kept, _, _) = Transforms.split(batch)
-            val clean = kept.select("ts", "level", "message", "service",
-              "namespace", "pod", "node", "trace_id", "fields")
-            val res = sink.write(clean)
-            if (cfg.dlqPath.nonEmpty && res.dlqHandled.isEmpty)
-              Sinks.writeDlq(cfg.dlqPath, res.dlq)
+            body(batch, sink)
             markBatchWritten(checkpoint, batchId)
           }
-          ()
         }
         .start()
     }
   }
 
-  /** Result of a drain-the-input streaming run: the assembled report
-    * plus the summed `observe()` counters (one entry per A1–A5 metric,
-    * totalled across micro-batches). */
-  case class StreamRunResult(report: EtlReport, observed: Map[String, Long])
+  /** Per-micro-batch sink writer: kept rows go to the configured sink,
+    * failures to the DLQ ([[graft.etl.Pipeline.writeKept]]) — the exact
+    * once-per-batch semantics the reference's BatchedSink provided
+    * (`internal/sink/batched.go`), with Spark supplying the
+    * time+size batching. Sink's write lifecycle (first call truncates,
+    * later calls append — see [[graft.etl.Sinks.Sink]]) makes batch N+1
+    * extend batch N's output instead of overwriting it. */
+  def writeStream(transformed: DataFrame, cfg: EtlConfig,
+      checkpoint: String,
+      triggerMs: Long = 1000): Either[String, StreamingQuery] =
+    start(transformed, cfg, checkpoint, Trigger.ProcessingTime(
+        triggerMs, java.util.concurrent.TimeUnit.MILLISECONDS)) { (batch, sink) =>
+      Pipeline.writeKept(batch, sink, cfg)
+    }
+
+  /** Result of a drain-the-input streaming run: the merged report. */
+  case class StreamRunResult(report: EtlReport)
 
   /** Run the full streaming pipeline over `inDir` until the input is
     * drained (Trigger.AvailableNow) and assemble the SAME [[EtlReport]]
-    * the batch [[graft.etl.Pipeline]] produces: per-micro-batch reports
-    * come from the identical `EtlReport.fromDataFrame` aggregation and
-    * ADD across batches; sink writes go through one Sink instance
-    * (append lifecycle) exactly like the batch run's single write.
-    * This is the reference's integration-test contract
+    * the batch [[graft.etl.Pipeline]] produces: every micro-batch runs
+    * the batch core [[graft.etl.Pipeline.process]] and the per-batch
+    * reports combine through [[graft.etl.EtlReport.merge]]. This is the
+    * reference's integration-test contract
     * (`cmd/etl/integration_test.go:69-93`) stated as batch↔streaming
     * equivalence — asserted in StreamingSpec. */
   def runOnce(spark: SparkSession, inDir: String, cfg: EtlConfig,
       checkpoint: String,
       maxFilesPerTrigger: Int = 1): Either[String, StreamRunResult] = {
-    if (!isResume(checkpoint)) Sinks.initDlq(cfg.dlqPath)
-    Sinks.build(cfg, resume = isResume(checkpoint)).map { sink =>
-      @volatile var acc = EtlReport()
-      // observed metrics come from a listener, NOT q.recentProgress:
-      // recentProgress is a ring buffer capped at
-      // spark.sql.streaming.numRecentProgressUpdates (default 100), so
-      // a >100-micro-batch run would silently undercount there
-      // accumulate per (queryId, field) so no filtering happens inside
-      // the callback — the query id is only known after start(), and a
-      // shared session may run concurrent queries
-      val obsAcc =
-        new java.util.concurrent.ConcurrentHashMap[(String, String), Long]()
-      val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-        import org.apache.spark.sql.streaming.StreamingQueryListener._
-        override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-        override def onQueryProgress(e: QueryProgressEvent): Unit = {
-          val row = e.progress.observedMetrics.get("etl_counters")
-          if (row != null) row.schema.fieldNames.foreach { f =>
-            obsAcc.merge((e.progress.id.toString, f), row.getAs[Long](f),
-              (a, b) => a + b)
-          }
-        }
-        override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-      }
-      spark.streams.addListener(listener)
-      try {
-        val transformed = observed(
-          transformedStream(readLines(spark, inDir, maxFilesPerTrigger), cfg))
-        val q = transformed.writeStream
-          .outputMode("append")
-          .option("checkpointLocation", checkpoint)
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            val b = batch.cache()
-            try {
-              val part = EtlReport.fromDataFrame(b)
-              val (kept, _, _) = Transforms.split(b)
-              val clean = kept.select("ts", "level", "message", "service",
-                "namespace", "pod", "node", "trace_id", "fields")
-              val wr = sink.write(clean)
-              if (cfg.dlqPath.nonEmpty && wr.dlqHandled.isEmpty)
-                Sinks.writeDlq(cfg.dlqPath, wr.dlq)
-              acc = merge(acc, part, wr)
-            } finally b.unpersist()
-            ()
-          }
-          .start()
-        q.awaitTermination()
-        // listener events are delivered asynchronously (the internal
-        // bus-drain API is private) — wait for the accumulated counters
-        // to go quiescent before reading them
-        import scala.jdk.CollectionConverters._
-        val qid = q.id.toString
-        def snapshot(): Map[String, Long] = obsAcc.asScala.collect {
-          case ((id, f), v) if id == qid => f -> v
-        }.toMap
-        var prev = snapshot()
-        var stable = 0
-        var waitedMs = 0
-        while (stable < 2 && waitedMs < 5000) {
-          Thread.sleep(50); waitedMs += 50
-          val cur = snapshot()
-          if (cur == prev) stable += 1 else { stable = 0; prev = cur }
-        }
-        StreamRunResult(acc, prev)
-      } finally spark.streams.removeListener(listener)
-    }
+    @volatile var acc = EtlReport()
+    start(transformedStream(readLines(spark, inDir, maxFilesPerTrigger), cfg),
+        cfg, checkpoint, Trigger.AvailableNow()) { (batch, sink) =>
+      acc = EtlReport.merge(acc, Pipeline.process(batch, sink, cfg))
+    }.map { q => q.awaitTermination(); StreamRunResult(acc) }
   }
-
-  /** Counter fields and breakdown maps add across micro-batches;
-    * retry maxima take the max. Timing-derived fields stay zero (they
-    * are normalized out of equivalence checks). */
-  private[graft] def merge(a: EtlReport, b: EtlReport,
-      wr: Sinks.WriteResult): EtlReport = {
-    def addM(x: Map[String, Long], y: Map[String, Long]) =
-      (x.keySet ++ y.keySet).map(k =>
-        k -> (x.getOrElse(k, 0L) + y.getOrElse(k, 0L))).toMap
-    a.copy(
-      totalLines = a.totalLines + b.totalLines,
-      jsonFailed = a.jsonFailed + b.jsonFailed,
-      jsonParsed = a.jsonParsed + b.jsonParsed,
-      normalizedOk = a.normalizedOk + b.normalizedOk,
-      normalizedFailed = a.normalizedFailed + b.normalizedFailed,
-      writtenOk = a.writtenOk + wr.writtenOk,
-      writeFailed = a.writeFailed + wr.writeFailed,
-      byLevel = addM(a.byLevel, b.byLevel),
-      byService = addM(a.byService, b.byService),
-      filteredLevel = a.filteredLevel + b.filteredLevel,
-      filteredService = a.filteredService + b.filteredService,
-      filteredOther = a.filteredOther + b.filteredOther,
-      dlqWritten = a.dlqWritten + wr.dlqWritten,
-      dlqReasons = addM(a.dlqReasons, wr.dlqReasons),
-      retryStats = RetryStats(
-        a.retryStats.totalRetries + wr.retry.totalRetries,
-        a.retryStats.writesWithRetries + wr.retry.writesWithRetries,
-        math.max(a.retryStats.maxRetriesPerWrite, wr.retry.maxRetriesPerWrite)))
-  }
-
-  /** A1–A5 as streaming-native `observe()` metrics: per-micro-batch
-    * counter rows on the listener bus with zero extra passes — the
-    * Structured Streaming twin of [[graft.etl.EtlReport.fromDataFrame]].
-    * Read them from `QueryProgressEvent.progress.observedMetrics`
-    * ("etl_counters"). */
-  def observed(transformed: DataFrame): DataFrame =
-    transformed.observe("etl_counters",
-      count(lit(1)).as("total_lines"),
-      count(when(col("error_kind") === "json", 1)).as("json_failed"),
-      count(when(col("error_kind").isNull, 1)).as("normalized_ok"),
-      count(when(col("error_kind") === "normalize", 1)).as("normalized_failed"),
-      count(when(col(Transforms.DropReasonCol) === "level", 1)).as("filtered_level"),
-      count(when(col(Transforms.DropReasonCol) === "service", 1)).as("filtered_service"))
 
   /** Streaming exact dedup: first occurrence per content fingerprint
     * wins, with bounded state — duplicates arriving within the

@@ -256,6 +256,7 @@ class PipelineSpec extends SparkSpec {
       inputPath = fixturePath,
       outputType = "file",
       outputPath = s"${java.nio.file.Files.createTempDirectory("etl-golden")}/out.jsonl",
+      reportPath = "", // the default would rewrite ./report.json
       filterLevels = Seq("WARN", "ERROR"),
       redactKeys = Seq("user_email", "token"))
     val r0 = Pipeline.runFile(spark, cfg).toOption.get.report
@@ -323,6 +324,41 @@ class PipelineSpec extends SparkSpec {
     assert(r.normalizedFailed == 1)
     assert(r.normalizedOk == 1)
     assert(r.writtenOk == 1)
+  }
+
+  test("transform errors are counted alike by run, runStdin and runOnce (main.go:386-397)") {
+    // a test transform that errors every still-active `auth` row
+    TransformRegistry.register("test_error_auth", _ => df =>
+      df.withColumn(Transforms.TransformErrorCol,
+        when(col("error").isNull && col(Transforms.DropReasonCol).isNull &&
+          col(Transforms.TransformErrorCol).isNull && col("service") === "auth",
+          lit("auth rejected")).otherwise(col(Transforms.TransformErrorCol))))
+    val out = java.nio.file.Files.createTempDirectory("etl-terr")
+    def cfg(name: String) = EtlConfig.default.copy(
+      outputType = "file", outputPath = s"$out/$name.jsonl",
+      filterLevels = Nil, transforms = Seq("filter_redact", "test_error_auth"))
+    val batch = Pipeline.run(Normalize.parseLines(spark, fixturePath),
+      cfg("batch")).fold(e => fail(e), _.report)
+    val fixtureIn = new java.io.FileInputStream(fixturePath)
+    val stdin = try Pipeline.runStdin(spark, cfg("stdin"), fixtureIn,
+      batchLines = 4).fold(e => fail(e), identity) finally fixtureIn.close()
+    val in = java.nio.file.Files.createTempDirectory("etl-terr-in")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(fixturePath),
+      in.resolve("a.jsonl"))
+    val stream = graft.streaming.StreamingPipeline.runOnce(spark, in.toString,
+      cfg("stream"), s"${java.nio.file.Files.createTempDirectory("etl-terr-ckpt")}")
+      .fold(e => fail(e), _.report)
+
+    def norm(r: EtlReport) = r.copy(durationSeconds = 0, throughput = 0,
+      jsonErrorRate = 0, normalizeErrorRate = 0, writeErrorRate = 0,
+      stageTimings = StageTimings())
+    assert(norm(stdin) == norm(batch), s"stdin=$stdin\nbatch=$batch")
+    assert(norm(stream) == norm(batch), s"stream=$stream\nbatch=$batch")
+    // the two auth rows: failed by the transform, yet still normalized
+    assert(batch.totalLines == 6)
+    assert(batch.normalizedFailed == 2)
+    assert(batch.normalizedOk == 6)
+    assert(batch.writtenOk == 4)
   }
 
   test("breakdown maps are capped at top-N with an (other) rollup that still sums") {

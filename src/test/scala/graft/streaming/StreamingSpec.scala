@@ -1561,17 +1561,78 @@ class StreamingSpec extends SparkSpec {
     assert(lines.size == 2, s"restart truncated prior output: $lines")
   }
 
-  test("streaming run produces the EXACT batch report + sink output (equivalence)") {
-    // fixture split into two files + maxFilesPerTrigger=1 → the
-    // streaming run MUST cross micro-batch boundaries
-    val in = tmpDir("equiv-in")
+  /** The fixture split into two files: two micro-batches (ids 0 and 1)
+    * at maxFilesPerTrigger = 1. */
+  private def twoBatchInput(prefix: String): String = {
+    val in = tmpDir(prefix)
     val all = java.nio.file.Files.readAllLines(
       java.nio.file.Paths.get(fixturePath))
-    val (h1, h2) = (all.subList(0, 3), all.subList(3, all.size))
-    java.nio.file.Files.write(java.nio.file.Paths.get(s"$in/a.jsonl"),
-      String.join("\n", h1).getBytes)
+    val a = java.nio.file.Paths.get(s"$in/a.jsonl")
+    java.nio.file.Files.write(a, String.join("\n", all.subList(0, 3)).getBytes)
+    a.toFile.setLastModified(System.currentTimeMillis() - 60000)
     java.nio.file.Files.write(java.nio.file.Paths.get(s"$in/b.jsonl"),
-      String.join("\n", h2).getBytes)
+      String.join("\n", all.subList(3, all.size)).getBytes)
+    in
+  }
+
+  /** Simulate a crash between the sink write and the checkpoint commit:
+    * delete the last `commits/<n>` entry, so a restart re-runs batch n. */
+  private def dropLastCommit(ckpt: String): Long = {
+    val commits = new java.io.File(ckpt, "commits")
+    val last = commits.listFiles().map(_.getName)
+      .filter(n => n.nonEmpty && n.forall(_.isDigit)).map(_.toLong).max
+    assert(new java.io.File(commits, last.toString).delete())
+    new java.io.File(commits, s".$last.crc").delete()
+    last
+  }
+
+  private def assertNoDuplicates(path: String, expected: Int): Unit = {
+    val lines = java.nio.file.Files.readAllLines(java.nio.file.Paths.get(path))
+    assert(lines.size == expected, s"sink lines: $lines")
+    assert(lines.stream().distinct().count() == lines.size,
+      s"replayed batch appended twice: $lines")
+  }
+
+  test("replay guard: writeStream skips a micro-batch whose commit was lost") {
+    val in = twoBatchInput("replay-ws-in")
+    val out = tmpDir("replay-ws-out")
+    val ckpt = tmpDir("replay-ws-ckpt")
+    val cfg = EtlConfig.default.copy(
+      outputType = "file", outputPath = s"$out/out.jsonl", filterLevels = Nil)
+    def drain(): Unit = {
+      val q = StreamingPipeline.writeStream(
+        StreamingPipeline.transformedStream(
+          StreamingPipeline.readLines(spark, in, maxFilesPerTrigger = 1), cfg),
+        cfg, checkpoint = ckpt, triggerMs = 100).fold(e => fail(e), identity)
+      try q.processAllAvailable() finally q.stop()
+    }
+    drain()
+    assertNoDuplicates(s"$out/out.jsonl", 6)
+    assert(dropLastCommit(ckpt) == 1)
+    drain()
+    assertNoDuplicates(s"$out/out.jsonl", 6)
+  }
+
+  test("replay guard: runOnce skips a micro-batch whose commit was lost and does not count it") {
+    val in = twoBatchInput("replay-once-in")
+    val out = tmpDir("replay-once-out")
+    val ckpt = tmpDir("replay-once-ckpt")
+    val cfg = EtlConfig.default.copy(
+      outputType = "file", outputPath = s"$out/out.jsonl", filterLevels = Nil)
+    def drain() = StreamingPipeline.runOnce(spark, in, cfg, ckpt)
+      .fold(e => fail(e), _.report)
+    assert(drain().totalLines == 6)
+    assertNoDuplicates(s"$out/out.jsonl", 6)
+    assert(dropLastCommit(ckpt) == 1)
+    val replay = drain()
+    assertNoDuplicates(s"$out/out.jsonl", 6)
+    assert(replay.totalLines == 0 && replay.writtenOk == 0 &&
+      replay.byLevel.isEmpty, s"the skipped batch was counted: $replay")
+  }
+
+  test("streaming run produces the EXACT batch report + sink output (equivalence)") {
+    // the streaming run MUST cross micro-batch boundaries
+    val in = twoBatchInput("equiv-in")
     val out = tmpDir("equiv-out")
     def cfg(p: String) = EtlConfig.default.copy(
       outputType = "file", outputPath = p,
@@ -1594,14 +1655,6 @@ class StreamingSpec extends SparkSpec {
       stageTimings = graft.etl.StageTimings())
     assert(norm(res.report) == norm(batch.report),
       s"streaming=${norm(res.report)}\nbatch=${norm(batch.report)}")
-
-    // observe() counters agree with the batch report too
-    assert(res.observed("total_lines") == batch.report.totalLines)
-    assert(res.observed("json_failed") == batch.report.jsonFailed)
-    assert(res.observed("normalized_ok") == batch.report.normalizedOk)
-    assert(res.observed("normalized_failed") == batch.report.normalizedFailed)
-    assert(res.observed("filtered_level") == batch.report.filteredLevel)
-    assert(res.observed("filtered_service") == batch.report.filteredService)
 
     // sink outputs: same record set (order is partition/batch dependent)
     def sortedLines(p: String) = {
@@ -1659,30 +1712,6 @@ class StreamingSpec extends SparkSpec {
         .collect().map(r => (r.getAs[String]("service"),
           r.getAs[Long]("n_events"))).toSet
       assert(rows == Set(("api", 2L), ("db", 1L)), s"got=$rows")
-    } finally q.stop()
-  }
-
-  test("observe(): A1-A5 counters arrive as streaming metrics") {
-    val in = tmpDir("stream-obs")
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(fixturePath),
-      java.nio.file.Paths.get(s"$in/b.jsonl"))
-    val cfg = EtlConfig.default.copy(filterLevels = Seq("WARN", "ERROR"))
-    val observed = StreamingPipeline.observed(
-      StreamingPipeline.transformedStream(
-        StreamingPipeline.readLines(spark, in), cfg))
-    val q = observed.writeStream.outputMode("append")
-      .format("memory").queryName("obs_stream").start()
-    try {
-      q.processAllAvailable()
-      val metrics = q.recentProgress.flatMap(p =>
-        Option(p.observedMetrics.get("etl_counters")))
-      assert(metrics.nonEmpty, "no observed metrics surfaced")
-      val m = metrics.last
-      assert(m.getAs[Long]("total_lines") == 6)
-      assert(m.getAs[Long]("json_failed") == 0)
-      assert(m.getAs[Long]("normalized_ok") == 6)
-      assert(m.getAs[Long]("filtered_level") == 3)
     } finally q.stop()
   }
 
