@@ -8,13 +8,14 @@ import org.apache.spark.sql.functions._
   * (`/root/reference/cmd/etl/main.go:234-455`).
   *
   * One declarative plan end-to-end, and one per-batch core for every
-  * driver: [[process]] caches the transformed frame, writes it through
-  * [[writeKept]] (sink + DLQ), then runs the three report jobs of
-  * [[EtlReport.fromDataFrame]] over the cache. [[run]] calls it once,
+  * driver: [[process]] observes the report counters on the transformed
+  * frame ([[EtlReport.observed]]) and writes it through [[writeKept]]
+  * (sink + DLQ), so the sink's pass also computes the report — one
+  * Spark job per batch for a distributed sink. [[run]] calls it once,
   * [[runStdin]] once per line batch, and the streaming layer once per
   * micro-batch. Worker pools / queues / mutexes from the reference are
-  * Spark's task scheduler; [[StageTimings]] says which actions are
-  * timed (pipelined stages aren't separately timable, SURVEY §2.3 A9).
+  * Spark's task scheduler; [[StageTimings]] says what is timed
+  * (pipelined stages aren't separately timable, SURVEY §2.3 A9).
   */
 object Pipeline {
 
@@ -34,28 +35,25 @@ object Pipeline {
     wr
   }
 
-  /** One batch end to end: cache `transformed`, write it ([[writeKept]],
-    * A6–A8), compute A1–A5 over the cache ([[EtlReport.fromDataFrame]])
-    * and fold the write stats and both action timings into that report.
+  /** One batch end to end, in one pass: observe A1–A5 on `transformed`
+    * ([[EtlReport.observed]]), write the observed frame ([[writeKept]],
+    * A6–A8), then read the report the sink's action completed and fold
+    * the write stats and the pass timing into it. Nothing is cached.
     * Multi-batch callers combine the results with [[EtlReport.merge]];
     * the duration fields are left to the caller. */
   def process(transformed: DataFrame, sink: Sinks.Sink,
       cfg: EtlConfig): EtlReport = {
-    val cached = transformed.cache()
-    try {
-      val t0 = System.nanoTime()
-      val wr = writeKept(cached, sink, cfg)
-      val t1 = System.nanoTime()
-      EtlReport.fromDataFrame(cached).copy(
-        writtenOk = wr.writtenOk,
-        writeFailed = wr.writeFailed,
-        retryStats = wr.retry,
-        dlqWritten = wr.dlqWritten,
-        dlqReasons = wr.dlqReasons,
-        stageTimings = StageTimings(
-          normalizationSeconds = (System.nanoTime() - t1) / 1e9,
-          writingSeconds = (t1 - t0) / 1e9))
-    } finally { cached.unpersist(); () }
+    val (observed, report) = EtlReport.observed(transformed)
+    val t0 = System.nanoTime()
+    val wr = writeKept(observed, sink, cfg)
+    val writing = (System.nanoTime() - t0) / 1e9
+    report().copy(
+      writtenOk = wr.writtenOk,
+      writeFailed = wr.writeFailed,
+      retryStats = wr.retry,
+      dlqWritten = wr.dlqWritten,
+      dlqReasons = wr.dlqReasons,
+      stageTimings = StageTimings(writingSeconds = writing))
   }
 
   /** Run on an already-loaded raw-lines frame (library/test entry —

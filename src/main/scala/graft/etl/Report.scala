@@ -1,19 +1,18 @@
 package graft.etl
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
+import graft.etl.expressions.SpaceSavingTopK
 
-/** The report's `stage_timings`: wall seconds of the two driver
-  * actions that [[Pipeline.process]] runs on the cached transformed
-  * frame. Parse, normalize and the transforms fuse into the plan of
-  * the first action, so none of them has an action of its own to time:
-  *   - `writingSeconds`: the sink write plus the DLQ append. It is the
-  *     first action, so it also pays for reading, parsing, normalizing
-  *     and transforming the input into the cache;
-  *   - `normalizationSeconds`: the report pass
-  *     ([[EtlReport.fromDataFrame]]) over the cached frame;
-  *   - `parsingSeconds`, `filteringSeconds`: not measured, always 0,
-  *     kept so the key set matches the reference report.
+/** The report's `stage_timings`. [[Pipeline.process]] runs one batch
+  * as one fused pass — read, parse, normalize, transforms, the sink
+  * write and the report counters observed on it — so there is one
+  * action to time:
+  *   - `writingSeconds`: that pass plus the DLQ append;
+  *   - `parsingSeconds`, `normalizationSeconds`, `filteringSeconds`:
+  *     not measured, always 0 (their work fuses into the pass), kept so
+  *     the key set matches the reference report.
   * Multi-batch runs (stdin, streaming) sum them across batches. */
 case class StageTimings(
     parsingSeconds: Double = 0,
@@ -29,10 +28,12 @@ case class RetryStats(
 /** A1–A11: the metrics report.
   *
   * The reference maintains mutex-guarded counters updated record-at-a-time
-  * (`internal/report/report.go:14-185`). Here A1–A5 come
-  * from [[EtlReport.fromDataFrame]] over the transformed frame and
-  * A6–A8 from the sink's [[Sinks.WriteResult]] (write/retry/DLQ stats) —
-  * the Spark-idiomatic equivalent of the Go worker counters.
+  * (`internal/report/report.go:14-185`). Here A1–A5 are metrics
+  * observed on the sink write's own pass over the transformed frame
+  * ([[EtlReport.observed]]) and A6–A8 come from the sink's
+  * [[Sinks.WriteResult]] (write/retry/DLQ stats) — the Spark-idiomatic
+  * equivalent of the Go worker counters, counted inline as records flow
+  * to the sink.
   */
 case class EtlReport(
     totalLines: Long = 0,
@@ -183,9 +184,10 @@ object EtlReport {
     * limit` plans as TakeOrderedAndProject (per-partition top-N, ~cap
     * rows shuffled); the remainder is reconstructed from the already-
     * computed total so the map still sums to it. Ties broken by key, so
-    * the reported map is stable run-to-run. With distinct keys <= cap
-    * (every fixture, and the reference's own use) the map is bit-equal
-    * to the reference's full map. */
+    * the reported map is stable run-to-run. Only [[observed]]'s
+    * overflow case runs it: with distinct keys <= cap (every fixture,
+    * and the reference's own use) the observed summary already is the
+    * reference's full map. */
   private def breakdown(grouped: DataFrame, keyCol: String, keyTotal: Long,
       cap: Int): Map[String, Long] = {
     val top = grouped
@@ -196,18 +198,27 @@ object EtlReport {
     if (rest > 0) top + ("(other)" -> rest) else top
   }
 
-  /** Compute A1–A5 from a normalized+transformed frame in three jobs:
-    * one global aggregate for the counters (A1, A2, A5), then one
-    * groupBy per breakdown (A3 by level, A4 by service), each capped by
-    * [[breakdown]]'s top-N. Every job is a map-side partial aggregate
-    * that shuffles only counter rows; cache `df` first (as
-    * [[Pipeline.process]] does) or each job re-reads the input.
+  /** A1–A5 as observed metrics of `df`'s next action: returns `df` with
+    * `Dataset.observe` applied, and a reader that builds the report once
+    * an action over the observed frame (or a plan on top of it) has run
+    * — [[Pipeline.process]] passes it to the sink, so the report costs
+    * no job of its own.
+    *
+    * The counters (A1, A2, A5) are one sum each. The breakdowns (A3 by
+    * level, A4 by service) are [[expressions.SpaceSavingTopK]] summaries
+    * of capacity `maxBreakdownKeys + 1`: a summary that ends with at
+    * most `maxBreakdownKeys` entries never filled up, so nothing was
+    * evicted or trimmed and its counts are exact and complete. Only a
+    * summary that overflowed (more distinct keys than the cap) costs a
+    * [[breakdown]] groupBy, over `df` itself, which recomputes it.
     *
     * `df` must carry `error_kind`, `level`, `service`, `drop_reason`,
     * `transform_error` (the standard output of
     * [[Normalize.normalize]] + [[TransformRegistry.apply]]). Write
-    * stats (A6–A8) and timings stay zero here. */
-  def fromDataFrame(df: DataFrame, maxBreakdownKeys: Int = 10000): EtlReport = {
+    * stats (A6–A8) and timings stay zero here. The reader blocks until
+    * the action's metrics arrive: call it only after that action. */
+  def observed(df: DataFrame, maxBreakdownKeys: Int = 10000)
+      : (DataFrame, () => EtlReport) = {
     val isJson = col("error_kind") === "json"
     val isNormErr = (col("error_kind") === "normalize") ||
       col(Transforms.TransformErrorCol).isNotNull
@@ -216,8 +227,11 @@ object EtlReport {
     // every sum is coalesced: a global aggregate over ZERO rows (empty
     // input file, empty streaming micro-batch) yields NULL sums, and a
     // bare getLong would NPE where the reference prints a zero report
-    def zsum(c: org.apache.spark.sql.Column) = coalesce(sum(c), lit(0L))
-    val row = df.agg(
+    def zsum(c: Column) = coalesce(sum(c), lit(0L))
+    def summary(key: Column) = Bridge.column(SpaceSavingTopK(
+      Bridge.expression(key), maxBreakdownKeys + 1).toAggregateExpression())
+    val obs = Observation()
+    val out = df.observe(obs,
       count(lit(1)).as("total"),
       zsum(when(isJson, 1L).otherwise(0L)).as("json_failed"),
       zsum(when(isNormErr, 1L).otherwise(0L)).as("norm_failed"),
@@ -230,28 +244,47 @@ object EtlReport {
       zsum(when(col(Transforms.DropReasonCol).isNotNull &&
         !col(Transforms.DropReasonCol).isin("level", "service"), 1L)
         .otherwise(0L)).as("f_other"),
-      zsum(when(withServiceC, 1L).otherwise(0L)).as("with_service")).head()
+      zsum(when(withServiceC, 1L).otherwise(0L)).as("with_service"),
+      // A3: counted after normalize, before filtering (`main.go:387`);
+      // empty level impossible post-normalize, empty service skipped
+      // (`report.go:71-88`)
+      summary(when(normalizedOkC, col("level"))).as("by_level"),
+      summary(when(withServiceC, col("service"))).as("by_service"))
 
-    // A3: counted after normalize, before filtering (`main.go:387`);
-    // empty level impossible post-normalize, empty service skipped
-    // (`report.go:71-88`). Both maps bounded by [[breakdown]]'s top-N.
-    val byLevel = breakdown(df.filter(normalizedOkC).groupBy("level").count(),
-      "level", row.getLong(3), maxBreakdownKeys)
-    val byService = breakdown(df.filter(withServiceC).groupBy("service").count(),
-      "service", row.getLong(7), maxBreakdownKeys)
+    def read(): EtlReport = {
+      val m = obs.get
+      def n(k: String) = m(k).asInstanceOf[Long]
+      def top(keyCol: String, cond: Column, keyTotal: Long): Map[String, Long] = {
+        val entries = m(s"by_$keyCol").asInstanceOf[Seq[Row]]
+        if (entries.size <= maxBreakdownKeys)
+          entries.map(e => e.getString(0) -> e.getLong(1)).toMap
+        else breakdown(df.filter(cond).groupBy(keyCol).count(), keyCol,
+          keyTotal, maxBreakdownKeys)
+      }
+      val total = n("total")
+      EtlReport(
+        totalLines = total,
+        jsonFailed = n("json_failed"),
+        jsonParsed = total - n("json_failed"),
+        normalizedFailed = n("norm_failed"),
+        normalizedOk = n("norm_ok"),
+        byLevel = top("level", normalizedOkC, n("norm_ok")),
+        byService = top("service", withServiceC, n("with_service")),
+        filteredLevel = n("f_level"),
+        filteredService = n("f_service"),
+        filteredOther = n("f_other"))
+    }
+    (out, () => read())
+  }
 
-    val total = row.getLong(0)
-    EtlReport(
-      totalLines = total,
-      jsonFailed = row.getLong(1),
-      jsonParsed = total - row.getLong(1),
-      normalizedFailed = row.getLong(2),
-      normalizedOk = row.getLong(3),
-      byLevel = byLevel,
-      byService = byService,
-      filteredLevel = row.getLong(4),
-      filteredService = row.getLong(5),
-      filteredOther = row.getLong(6))
+  /** A1–A5 of `df` on their own: [[observed]] followed by a `noop`
+    * write, one job (plus [[breakdown]]'s groupBy when a map overflows
+    * `maxBreakdownKeys`). The pipeline itself observes the sink's pass
+    * instead ([[Pipeline.process]]). */
+  def fromDataFrame(df: DataFrame, maxBreakdownKeys: Int = 10000): EtlReport = {
+    val (out, report) = observed(df, maxBreakdownKeys)
+    out.write.format("noop").mode("overwrite").save()
+    report()
   }
 
   /** Combine the reports of two batches of one run (stdin batches,

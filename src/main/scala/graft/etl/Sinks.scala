@@ -1,6 +1,7 @@
 package graft.etl
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.functions.{coalesce, count, lit, max, sum, when, col}
 
 /** K1–K7: sinks.
@@ -156,7 +157,14 @@ object Sinks {
     * write and the marker write (the streaming layer's query starter
     * documents the guard). */
   trait Sink {
-    /** Write all rows of a normalized frame; never throws per-record. */
+    /** Write all rows of a normalized frame; never throws per-record.
+      * Contract: `write` runs `df`'s plan to completion in an action —
+      * the report counters are `observe`d on that plan
+      * ([[EtlReport.observed]]) and complete only when it has run.
+      * Driver-side sinks drain through
+      * [[org.apache.spark.sql.graft.Bridge.drainToDriver]], never
+      * through `toLocalIterator`, whose execution ends before any row
+      * is read. */
     def write(df: DataFrame): WriteResult
   }
 
@@ -190,12 +198,12 @@ object Sinks {
   }
 
   /** K1: stdout JSONL. Inherently a driver-side sink; stream partitions
-    * through `toLocalIterator` so nothing is collected wholesale. */
+    * through [[org.apache.spark.sql.graft.Bridge.drainToDriver]] so
+    * nothing is collected wholesale. */
   final class StdoutSink(out: java.io.PrintStream = System.out) extends Sink {
     def write(df: DataFrame): WriteResult = {
       var n = 0L
-      val it = df.toLocalIterator()
-      while (it.hasNext) { out.println(renderRecord(it.next())); n += 1 }
+      Bridge.drainToDriver(df) { r => out.println(renderRecord(r)); n += 1 }
       WriteResult(n, 0, RetryStats(), Nil)
     }
   }
@@ -323,9 +331,8 @@ object Sinks {
       initialized = true
       var n = 0L
       try {
-        val it = df.toLocalIterator()
-        while (it.hasNext) {
-          val data = renderRecord(it.next()) + "\n"
+        Bridge.drainToDriver(df) { r =>
+          val data = renderRecord(r) + "\n"
           val bytes = data.getBytes("UTF-8").length
           // rotate whenever the record would overflow — even into an
           // empty base (rotate.go:41 has no size>0 guard: an oversized
@@ -355,7 +362,11 @@ object Sinks {
     * guarantees must dedupe on a record key). A6–A8 metrics are NOT
     * accumulators — accumulator updates in a transformation are
     * re-counted on exactly such retries — they are aggregated from a
-    * per-record status frame materialized exactly once.
+    * per-record status frame materialized exactly once. The report's
+    * A1–A5 counters, in contrast, are `observe`d on `df`'s plan
+    * ([[EtlReport.observed]]) and complete in this sink's first action
+    * (`status.agg`); under speculation they carry the same caveat as
+    * [[ParquetSink]]'s observed row count.
     *
     * Failures are NEVER collected wholesale to the driver: under a total
     * endpoint outage the failure set is the whole batch, and a driver

@@ -56,6 +56,25 @@ object Bridge {
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
       .queryExecution.toRdd
 
+  /** Stream `df`'s rows to the driver partition by partition (no
+    * collect) and hand each one to `f`, inside ONE SQL execution that
+    * ends after the last row. `Dataset.toLocalIterator` ends its
+    * execution as soon as the iterator exists, before any partition
+    * ran, so `observe`d metrics on the plan complete with zeros; here
+    * they complete with the rows actually drained. Rows are
+    * deserialized with the schema's `RowEncoder`. */
+  def drainToDriver(df: org.apache.spark.sql.Dataset[_])(
+      f: org.apache.spark.sql.Row => Unit): Unit = {
+    val qe = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+      .queryExecution
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(
+        qe, Some("toLocalIterator")) {
+      val fromRow = org.apache.spark.sql.catalyst.encoders
+        .ExpressionEncoder(df.schema).resolveAndBind().createDeserializer()
+      qe.executedPlan.executeToIterator().foreach(r => f(fromRow(r)))
+    }
+  }
+
   /** DataFrame over an RDD[InternalRow] with a known schema —
     * `SparkSession.internalCreateDataFrame` is private[sql], hence
     * here. The inverse of [[toInternalRdd]]: together they let a

@@ -1,10 +1,8 @@
 package graft.etl
 
-import org.scalatest.funsuite.AnyFunSuite
-
 /** Config surface: defaults, YAML-subset/JSON loading, env overrides,
   * merge precedence, validation — ports of internal/config semantics. */
-class EtlConfigSpec extends AnyFunSuite {
+class EtlConfigSpec extends TempDirs {
 
   test("defaults match config.go:45-67") {
     val d = EtlConfig.default
@@ -61,7 +59,7 @@ class EtlConfigSpec extends AnyFunSuite {
   }
 
   test("YAML subset: scalars, lists, comments (config.go:279-333)") {
-    val dir = java.nio.file.Files.createTempDirectory("cfg")
+    val dir = tempDir("cfg")
     val p = s"$dir/c.yaml"
     java.nio.file.Files.writeString(java.nio.file.Paths.get(p),
       """# comment
@@ -81,7 +79,7 @@ class EtlConfigSpec extends AnyFunSuite {
   }
 
   test("JSON config load") {
-    val dir = java.nio.file.Files.createTempDirectory("cfg")
+    val dir = tempDir("cfg")
     val p = s"$dir/c.json"
     java.nio.file.Files.writeString(java.nio.file.Paths.get(p),
       """{"input": "j.jsonl", "redact_keys": ["a", "b"], "batch_size": 9}""")
@@ -115,7 +113,7 @@ class EtlConfigSpec extends AnyFunSuite {
   test("curation_config: default off, file/env/merge precedence chain") {
     assert(EtlConfig.default.curationConfig.isEmpty)
     // file key
-    val dir = java.nio.file.Files.createTempDirectory("cfg").toString
+    val dir = tempDir("cfg").toString
     val p = s"$dir/c.json"
     java.nio.file.Files.writeString(java.nio.file.Paths.get(p),
       """{"curation_config": "stages.yaml"}""")

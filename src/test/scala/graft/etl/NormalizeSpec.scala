@@ -202,7 +202,7 @@ class NormalizeSpec extends SparkSpec {
 
   test("CSV source: rows normalize identically to their JSONL twins") {
     // a real CSV file (header, alias columns, empty cells, PII column)
-    val dir = java.nio.file.Files.createTempDirectory("csv-src")
+    val dir = tempDir("csv-src")
     java.nio.file.Files.write(dir.resolve("logs.csv"),
       ("""time,severity,msg,app,user_email,extra
         |2025-01-02T03:04:05Z,warn,disk low,storage,u1@example.com,42
@@ -245,7 +245,7 @@ class NormalizeSpec extends SparkSpec {
   }
 
   test("CSV source: dotted header is a flat residual key, not nested access") {
-    val dir = java.nio.file.Files.createTempDirectory("csv-dot")
+    val dir = tempDir("csv-dot")
     java.nio.file.Files.write(dir.resolve("logs.csv"),
       ("""ts,level,msg,user.name
         |2025-01-02T03:04:05Z,INFO,ok,jo
@@ -257,7 +257,7 @@ class NormalizeSpec extends SparkSpec {
 
   test("ORC source: typed records normalize through the same chain") {
     import spark.implicits._
-    val dir = s"${java.nio.file.Files.createTempDirectory("orc-src")}/logs.orc"
+    val dir = s"${tempDir("orc-src")}/logs.orc"
     // typed columns (long/double) — to_json renders them as JSON
     // numbers, which coerce into the map<string,string> residuals
     Seq(("2025-01-02T03:04:05Z", "error", "oom", "api", 17L, 0.5),

@@ -1,6 +1,7 @@
 package graft.etl
 
 import org.apache.spark.sql.functions._
+import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
 /** Flagship end-to-end: port of `cmd/etl/integration_test.go:16-99` —
   * the canonical behavioral contract (BASELINE.md functional floor). */
@@ -8,7 +9,7 @@ class PipelineSpec extends SparkSpec {
   import spark.implicits._
 
   test("integration: 6-line fixture → 3 records, redacted, exact report") {
-    val out = java.nio.file.Files.createTempDirectory("etl-it")
+    val out = tempDir("etl-it")
     val cfg = EtlConfig.default.copy(
       inputPath = fixturePath,
       outputType = "file",
@@ -55,7 +56,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("runStdin: a never-closed pipe makes progress batch by batch; EOF report equals the batch run") {
-    val out = java.nio.file.Files.createTempDirectory("etl-stdin-it")
+    val out = tempDir("etl-stdin-it")
     val cfg = EtlConfig.default.copy(
       inputPath = "-",
       outputType = "file",
@@ -193,7 +194,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("curation mode: 3-stage config file drives the curation registry end-to-end") {
-    val dir = java.nio.file.Files.createTempDirectory("cur-it").toString
+    val dir = tempDir("cur-it").toString
     // corpus: shared boilerplate line across two docs, one too-short doc
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/docs.jsonl"),
       Seq(
@@ -255,7 +256,7 @@ class PipelineSpec extends SparkSpec {
     val cfg = EtlConfig.default.copy(
       inputPath = fixturePath,
       outputType = "file",
-      outputPath = s"${java.nio.file.Files.createTempDirectory("etl-golden")}/out.jsonl",
+      outputPath = s"${tempDir("etl-golden")}/out.jsonl",
       reportPath = "", // the default would rewrite ./report.json
       filterLevels = Seq("WARN", "ERROR"),
       redactKeys = Seq("user_email", "token"))
@@ -326,6 +327,11 @@ class PipelineSpec extends SparkSpec {
     assert(r.writtenOk == 1)
   }
 
+  /** A report with its run-dependent timing fields zeroed. */
+  private def timingFree(r: EtlReport) = r.copy(durationSeconds = 0,
+    throughput = 0, jsonErrorRate = 0, normalizeErrorRate = 0,
+    writeErrorRate = 0, stageTimings = StageTimings())
+
   test("transform errors are counted alike by run, runStdin and runOnce (main.go:386-397)") {
     // a test transform that errors every still-active `auth` row
     TransformRegistry.register("test_error_auth", _ => df =>
@@ -333,7 +339,7 @@ class PipelineSpec extends SparkSpec {
         when(col("error").isNull && col(Transforms.DropReasonCol).isNull &&
           col(Transforms.TransformErrorCol).isNull && col("service") === "auth",
           lit("auth rejected")).otherwise(col(Transforms.TransformErrorCol))))
-    val out = java.nio.file.Files.createTempDirectory("etl-terr")
+    val out = tempDir("etl-terr")
     def cfg(name: String) = EtlConfig.default.copy(
       outputType = "file", outputPath = s"$out/$name.jsonl",
       filterLevels = Nil, transforms = Seq("filter_redact", "test_error_auth"))
@@ -342,18 +348,15 @@ class PipelineSpec extends SparkSpec {
     val fixtureIn = new java.io.FileInputStream(fixturePath)
     val stdin = try Pipeline.runStdin(spark, cfg("stdin"), fixtureIn,
       batchLines = 4).fold(e => fail(e), identity) finally fixtureIn.close()
-    val in = java.nio.file.Files.createTempDirectory("etl-terr-in")
+    val in = tempDir("etl-terr-in")
     java.nio.file.Files.copy(java.nio.file.Paths.get(fixturePath),
       in.resolve("a.jsonl"))
     val stream = graft.streaming.StreamingPipeline.runOnce(spark, in.toString,
-      cfg("stream"), s"${java.nio.file.Files.createTempDirectory("etl-terr-ckpt")}")
+      cfg("stream"), s"${tempDir("etl-terr-ckpt")}")
       .fold(e => fail(e), _.report)
 
-    def norm(r: EtlReport) = r.copy(durationSeconds = 0, throughput = 0,
-      jsonErrorRate = 0, normalizeErrorRate = 0, writeErrorRate = 0,
-      stageTimings = StageTimings())
-    assert(norm(stdin) == norm(batch), s"stdin=$stdin\nbatch=$batch")
-    assert(norm(stream) == norm(batch), s"stream=$stream\nbatch=$batch")
+    assert(timingFree(stdin) == timingFree(batch), s"stdin=$stdin\nbatch=$batch")
+    assert(timingFree(stream) == timingFree(batch), s"stream=$stream\nbatch=$batch")
     // the two auth rows: failed by the transform, yet still normalized
     assert(batch.totalLines == 6)
     assert(batch.normalizedFailed == 2)
@@ -379,8 +382,106 @@ class PipelineSpec extends SparkSpec {
     assert(capped.byLevel == full.byLevel) // under the cap → identical
   }
 
+  test("one report, every sink: file, stdout, rotate, parquet and http observe the same counters") {
+    // the report counters are observed on the sink's own pass, so every
+    // sink must run the whole plan inside its action — the driver-side
+    // sinks (stdout, rotate) included
+    val dir = tempDir("etl-sinks")
+    val cfg = EtlConfig.default.copy(filterLevels = Seq("WARN", "ERROR"),
+      redactKeys = Seq("user_email", "token"))
+    val server = HttpServer.create(new java.net.InetSocketAddress(0), 0)
+    server.createContext("/ok", (ex: HttpExchange) => {
+      ex.sendResponseHeaders(200, -1); ex.close()
+    })
+    server.start()
+    val stdout = new java.io.ByteArrayOutputStream()
+    val reports = try Seq(
+      "file" -> new Sinks.FileSink(s"$dir/out.jsonl"),
+      "stdout" -> new Sinks.StdoutSink(new java.io.PrintStream(stdout, true, "UTF-8")),
+      "rotate" -> new Sinks.RotatingSink(s"$dir/rot.jsonl", 1L << 20, 3),
+      "parquet" -> new Sinks.ParquetSink(s"$dir/pq"),
+      "http" -> new Sinks.HttpSink(
+        s"http://localhost:${server.getAddress.getPort}/ok",
+        new Sinks.RetryPolicy(0, 1, 2, 0))
+    ).map { case (name, sink) =>
+      val transformed = TransformRegistry(cfg)(Normalize(
+        Normalize.parseLines(spark, fixturePath))).fold(e => fail(e), identity)
+      name -> timingFree(Pipeline.process(transformed, sink, cfg))
+    }.toMap finally server.stop(0)
+    assert(reports("stdout").totalLines == 6 && reports("rotate").totalLines == 6,
+      s"driver-side sinks must complete the observed counters: $reports")
+    assert(reports.values.toSet.size == 1, reports.mkString("\n"))
+    assert(reports("file").writtenOk == 3 && reports("file").filteredLevel == 3)
+    assert(reports("file").byService == Map("orders" -> 2L, "gateway" -> 1L,
+      "payments" -> 1L, "auth" -> 2L))
+    assert(stdout.toString("UTF-8").linesIterator.size == 3)
+  }
+
+  /** Runs `body` under a fresh job group; returns its result and the
+    * number of Spark jobs it started. The status tracker is fed through
+    * the listener bus, so a marker job in a second group is awaited
+    * first: once the marker is visible, every earlier job is too. */
+  private def countingJobs[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"job-budget-${java.util.UUID.randomUUID}"
+    sc.setJobGroup(group, "job budget")
+    val res = try body finally sc.clearJobGroup()
+    sc.setJobGroup(s"$group-marker", "marker")
+    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    while (sc.statusTracker.getJobIdsForGroup(s"$group-marker").isEmpty &&
+        System.nanoTime() < deadline) Thread.sleep(10)
+    (res, sc.statusTracker.getJobIdsForGroup(group).length)
+  }
+
+  test("job budget: one Spark job per batch and no cache left behind, for run and runStdin") {
+    val dir = tempDir("etl-jobs")
+    val cfg = EtlConfig.default.copy(outputType = "file",
+      outputPath = s"$dir/out.jsonl", reportPath = "",
+      filterLevels = Seq("WARN", "ERROR"), redactKeys = Seq("user_email", "token"))
+    val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val (run, runJobs) =
+      countingJobs(Pipeline.run(Normalize.parseLines(spark, fixturePath), cfg))
+    assert(run.fold(e => fail(e), _.report.writtenOk) == 3)
+    assert(runJobs == 1, s"run: $runJobs jobs for one batch")
+    val in = new java.io.FileInputStream(fixturePath)
+    val (stdin, stdinJobs) =
+      try countingJobs(Pipeline.runStdin(spark, cfg, in, batchLines = 3))
+      finally in.close()
+    assert(stdin.fold(e => fail(e), identity).totalLines == 6)
+    assert(stdinJobs == 2, s"runStdin: $stdinJobs jobs for two batches")
+    assert(spark.sparkContext.getPersistentRDDs.keySet == persistedBefore,
+      "a batch must leave no persisted RDD behind")
+  }
+
+  test("breakdown exactness: across 4 partitions, at the cap and one or two under it") {
+    // 12 services with skewed, tied counts, shuffled over 4 partitions so
+    // the summaries merge; levels stay far under every cap
+    val counts = Seq(9, 7, 7, 5, 4, 4, 3, 2, 2, 1, 1, 1)
+    val lines = new scala.util.Random(7).shuffle(counts.zipWithIndex.flatMap {
+      case (c, i) => Seq.fill(c)(
+        s"""{"ts":"2025-01-01T00:00:00Z","level":"L${i % 3}","msg":"m","service":"svc$i"}""")
+    }).toDF("line").repartition(4)
+    val df = TransformRegistry(EtlConfig.default.copy(filterLevels = Nil))(
+      Normalize(lines)).fold(e => fail(e), identity)
+    def exact(key: String) = df.filter(col("error_kind").isNull && col(key) =!= "")
+      .groupBy(key).count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val services = exact("service")
+    val d = services.size
+    assert(d == counts.size)
+    def topN(cap: Int) = {
+      val top = services.toSeq.sortBy { case (k, v) => (-v, k) }.take(cap).toMap
+      top + ("(other)" -> (services.values.sum - top.values.sum))
+    }
+    val atCap = EtlReport.fromDataFrame(df, maxBreakdownKeys = d)
+    assert(atCap.byService == services, "under the cap: exact, no (other)")
+    assert(atCap.byLevel == exact("level"))
+    assert(EtlReport.fromDataFrame(df, d - 1).byService == topN(d - 1))
+    assert(EtlReport.fromDataFrame(df, d - 2).byService == topN(d - 2))
+  }
+
   test("runFile with input_format=csv: full pipeline over a CSV file") {
-    val dir = java.nio.file.Files.createTempDirectory("csv-cli")
+    val dir = tempDir("csv-cli")
     java.nio.file.Files.write(dir.resolve("logs.csv"),
       ("""ts,level,msg,service,user_email
         |2025-01-01T00:00:00Z,ERROR,boom,api,u1@example.com

@@ -39,7 +39,7 @@ class SinksSpec extends SparkSpec {
     // append to the oldest file and the first rotation would TRUNCATE
     // the existing base.1 (the 'restart must not truncate' contract).
     import java.nio.file.{Files, Paths}
-    val dir = Files.createTempDirectory("rotres")
+    val dir = tempDir("rotres")
     val base = s"$dir/out.jsonl"
     Files.writeString(Paths.get(base), "old-run-base\n")
     Files.writeString(Paths.get(s"$base.1"), "old-run-rotated\n")
@@ -57,7 +57,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("rotating sink: byte-threshold rotation + retention (rotate_test.go)") {
-    val dir = java.nio.file.Files.createTempDirectory("rot")
+    val dir = tempDir("rot")
     val base = s"$dir/out.jsonl"
     // ~190-byte records, 400-byte threshold, keep 2 rotated files
     val df = normalized((1 to 10).map(i =>
@@ -129,7 +129,7 @@ class SinksSpec extends SparkSpec {
       val df = normalized((1 to n).map(i =>
         s"""{"ts":"2025-01-01T00:00:00Z","level":"INFO","msg":"m$i"}"""): _*)
         .repartition(8)
-      val dir = java.nio.file.Files.createTempDirectory("dlqdist")
+      val dir = tempDir("dlqdist")
       val dlq = s"$dir/dlq.jsonl"
       val policy = new Sinks.RetryPolicy(0, 1, 2, 0)
       val res = new Sinks.HttpSink(s"http://localhost:$port/dead", policy,
@@ -154,7 +154,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("DLQ file: {record, reason} JSONL appended (openDLQ semantics)") {
-    val dir = java.nio.file.Files.createTempDirectory("dlq")
+    val dir = tempDir("dlq")
     val path = s"$dir/sub/dlq.jsonl" // parent dirs created
     Sinks.writeDlq(path, Seq(("""{"TS":"t"}""", "write failed after 3 retries")))
     Sinks.writeDlq(path, Seq(("""{"TS":"u"}""", "boom")))
@@ -185,7 +185,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("parquet sink: round-trips the normalized schema") {
-    val dir = java.nio.file.Files.createTempDirectory("pq")
+    val dir = tempDir("pq")
     val df = normalized(recordLine)
     val res = new Sinks.ParquetSink(s"$dir/out").write(df)
     assert(res.writtenOk == 1)
@@ -197,7 +197,7 @@ class SinksSpec extends SparkSpec {
   test("sink lifecycle: second write on the same instance appends, fresh instance truncates") {
     def rec(i: Int) =
       s"""{"ts":"2025-01-01T00:00:00Z","level":"INFO","msg":"m$i"}"""
-    val dir = java.nio.file.Files.createTempDirectory("appnd")
+    val dir = tempDir("appnd")
 
     // FileSink: batch 2 must extend batch 1's file
     val f = new Sinks.FileSink(s"$dir/out.jsonl")
@@ -228,7 +228,7 @@ class SinksSpec extends SparkSpec {
   }
   test("render: a string field that LOOKS like JSON but is not stays quoted") {
     // "{oops" must not be emitted raw — the whole line would be invalid
-    val dir = java.nio.file.Files.createTempDirectory("jsonq")
+    val dir = tempDir("jsonq")
     val out = s"$dir/out.jsonl"
     new Sinks.FileSink(out).write(normalized(
       """{"ts":"2025-01-01T00:00:00Z","level":"INFO","msg":"x","bad":"{oops","good":"{\"a\":1}","num":"5"}"""))
@@ -242,7 +242,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("fresh pipeline run truncates the DLQ (os.Create parity); resume keeps it") {
-    val dir = java.nio.file.Files.createTempDirectory("dlqfresh")
+    val dir = tempDir("dlqfresh")
     val path = s"$dir/dlq.jsonl"
     Sinks.writeDlq(path, Seq(("""{"TS":"stale"}""", "old failure")))
     assert(java.nio.file.Files.readAllLines(
@@ -256,7 +256,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("rotating sink: oversized record rotates even into an empty base (rotate.go:41)") {
-    val dir = java.nio.file.Files.createTempDirectory("rotbig")
+    val dir = tempDir("rotbig")
     val base = s"$dir/out.jsonl"
     val sink = new Sinks.RotatingSink(base, maxBytes = 10, maxFiles = 5)
     sink.write(normalized(recordLine)) // record far over 10 bytes
@@ -270,7 +270,7 @@ class SinksSpec extends SparkSpec {
 
   test("builder floors zero config values like the reference") {
     // output_max_bytes=0 must mean 10MB, not rotate-per-record
-    val dir = java.nio.file.Files.createTempDirectory("floors")
+    val dir = tempDir("floors")
     val cfg = EtlConfig.default.copy(outputType = "rotate",
       outputPath = s"$dir/r.jsonl", outputMaxBytes = 0, outputMaxFiles = 0,
       sinkBackoffBaseMs = 0, sinkBackoffMaxMs = 0)

@@ -128,7 +128,7 @@ class BpeSpec extends SparkSpec {
     // leaders (digits / punctuation / >20 chars) push every gated
     // word past widx 8 — the r15 `widx <= 8` buffer bound collected
     // NOTHING here while the oracle takes the true first 8 tokens.
-    val dir = java.nio.file.Files.createTempDirectory("bpehead").toString
+    val dir = tempDir("bpehead").toString
     val text = "1 2 3 4 5 6 7 8 overlongwordpastthetwentychargate " +
       "low lower lowest low lower lowest low low lower"
     Seq((1L, text), (2L, "low lowest")).toDF("doc_id", "text")
@@ -155,7 +155,7 @@ class BpeSpec extends SparkSpec {
   test("MergesArtifact round-trips; truncated ranks are rejected") {
     val d = corpus("low low low lower lowest")
     val (merges, _) = Bpe.learnMerges(d, 4)
-    val dir = java.nio.file.Files.createTempDirectory("bpe-art").toString
+    val dir = tempDir("bpe-art").toString
     Bpe.MergesArtifact.save(spark, merges, s"$dir/m")
     assert(Bpe.MergesArtifact.load(spark, s"$dir/m") == merges)
     // drop rank 2 → contiguity check must fail loudly

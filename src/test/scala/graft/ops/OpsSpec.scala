@@ -1089,8 +1089,8 @@ class OpsSpec extends SparkSpec {
   }
 
   test("AnnModels: saved models load bit-identical; assign/encode unchanged") {
-    val cDir = java.nio.file.Files.createTempDirectory("ivf-model").toString + "/c"
-    val bDir = java.nio.file.Files.createTempDirectory("pq-model").toString + "/b"
+    val cDir = tempDir("ivf-model").toString + "/c"
+    val bDir = tempDir("pq-model").toString + "/b"
     val centroids = Ivf.train(emb, numCentroids = 8)
     AnnModels.saveCentroids(spark, centroids, cDir)
     val loadedC = AnnModels.loadCentroids(spark, cDir)
@@ -1132,7 +1132,7 @@ class OpsSpec extends SparkSpec {
     // index, append each day's new vectors with the model FROZEN
     val old = emb.filter(col("vec_id") % 10 =!= 0)
     val fresh = emb.filter(col("vec_id") % 10 === 0)
-    val dir = java.nio.file.Files.createTempDirectory("ann-idx").toString
+    val dir = tempDir("ann-idx").toString
     def rows(df: org.apache.spark.sql.DataFrame) = df
       .select("qid", "cid", "sim").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
@@ -1219,8 +1219,8 @@ class OpsSpec extends SparkSpec {
 
     val ev = graft.queries.Tables.events(spark, "/root/testdata/sf0.001")
       .select(col("event_id"), col("user_id"), col("value"))
-    val zDir = java.nio.file.Files.createTempDirectory("zord").toString + "/d"
-    val uDir = java.nio.file.Files.createTempDirectory("unsort").toString + "/d"
+    val zDir = tempDir("zord").toString + "/d"
+    val uDir = tempDir("unsort").toString + "/d"
     Layout.zorderWrite(ev, zDir, "user_id", "value", numFiles = 8)
     ev.repartition(8).write.mode("overwrite").parquet(uDir)
     // same data back
@@ -1252,7 +1252,7 @@ class OpsSpec extends SparkSpec {
 
   test("partitioned layout: a filtered dimension prunes fact partitions at runtime (DPP)") {
     import org.apache.spark.sql.execution.FileSourceScanExec
-    val dir = java.nio.file.Files.createTempDirectory("part").toString + "/d"
+    val dir = tempDir("part").toString + "/d"
     val fact = (0 until 400).map(i =>
       (i.toLong, Seq("en", "de", "fr", "es")(i % 4), i * 1.0))
       .toDF("doc_id", "lang", "w")
@@ -1262,7 +1262,7 @@ class OpsSpec extends SparkSpec {
     // fact scan — a static planner sees no literal predicate on lang.
     // The dim must be file-backed: a filter over a local relation is
     // constant-folded away and DPP sees no selective predicate
-    val dimDir = java.nio.file.Files.createTempDirectory("dim").toString + "/d"
+    val dimDir = tempDir("dim").toString + "/d"
     Seq(("en", 1), ("de", 2), ("fr", 3), ("es", 4))
       .toDF("lang", "grp").write.mode("overwrite").parquet(dimDir)
     val dim = spark.read.parquet(dimDir).filter(col("grp") === 1)
@@ -1293,8 +1293,8 @@ class OpsSpec extends SparkSpec {
   }
 
   test("compact: fragmented parquet rewrites to sized files with identical data") {
-    val in = java.nio.file.Files.createTempDirectory("compact-in").toString
-    val out = java.nio.file.Files.createTempDirectory("compact-out").toString + "/d"
+    val in = tempDir("compact-in").toString
+    val out = tempDir("compact-out").toString + "/d"
     // 64 tiny files
     docs.limit(64).repartition(64).write.mode("overwrite").parquet(in)
     val inFiles = new java.io.File(in).listFiles.count(_.getName.endsWith(".parquet"))
@@ -1310,7 +1310,7 @@ class OpsSpec extends SparkSpec {
     val b = spark.read.parquet(out).select("doc_id").collect().map(_.getLong(0)).sorted
     assert(a.toSeq == b.toSeq)
     // coalesce path: no shuffle, still compacts
-    val out2 = java.nio.file.Files.createTempDirectory("compact-out2").toString + "/d"
+    val out2 = tempDir("compact-out2").toString + "/d"
     val (_, nOut2) = Layout.compact(spark, in, out2, targetBytes = target,
       shuffle = false)
     assert(nOut2 >= 3 && nOut2 <= 6)
@@ -1633,7 +1633,7 @@ class OpsSpec extends SparkSpec {
         alpha = 0.5, targetFraction = 1.5, "source", "doc_id")
     }
     // compaction: empty input dir
-    val empty = java.nio.file.Files.createTempDirectory("cmp-empty").toString
+    val empty = tempDir("cmp-empty").toString
     intercept[IllegalArgumentException] {
       Layout.compact(spark, empty, empty + "/out")
     }
@@ -2172,7 +2172,7 @@ class OpsSpec extends SparkSpec {
   }
 
   test("SuffixIndex: artifact round-trip is bit-equal, reload hits, corpus edit triggers rebuild") {
-    val dir = java.nio.file.Files.createTempDirectory("sfxidx").toString
+    val dir = tempDir("sfxidx").toString
     def write(rows: Seq[(Long, String)]): Unit =
       rows.toDF("doc_id", "text").repartition(2)
         .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -2218,7 +2218,7 @@ class OpsSpec extends SparkSpec {
   }
 
   test("ArtifactStore: an XOR-cancelling corpus edit still triggers rebuild (the sum half of the fingerprint)") {
-    val dir = java.nio.file.Files.createTempDirectory("artfp").toString
+    val dir = tempDir("artfp").toString
     def write(rows: Seq[(Long, String)]): Unit =
       rows.toDF("doc_id", "text")
         .write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -2280,7 +2280,7 @@ class OpsSpec extends SparkSpec {
   }
 
   test("ArtifactStore: a warm consumer load runs ZERO Spark jobs (metadata fingerprint, r17 verdict #3)") {
-    val dir = java.nio.file.Files.createTempDirectory("artwarm").toString
+    val dir = tempDir("artwarm").toString
     Seq((1L, "a b"), (2L, "c d")).toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     var builds = 0
@@ -2325,7 +2325,7 @@ class OpsSpec extends SparkSpec {
   }
 
   test("ArtifactStore: an in-place corpus edit (same file names) still triggers rebuild via the metadata fingerprint") {
-    val dir = java.nio.file.Files.createTempDirectory("artmeta").toString
+    val dir = tempDir("artmeta").toString
     Seq((1L, "a b"), (2L, "c d")).toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     var builds = 0
@@ -2350,7 +2350,7 @@ class OpsSpec extends SparkSpec {
   }
 
   test("ArtifactStore: sweep grace runs from supersession, not build time (r17 ADVICE)") {
-    val dir = java.nio.file.Files.createTempDirectory("artsweep").toString
+    val dir = tempDir("artsweep").toString
     Seq((1L, "a b")).toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val fam = "sweep_test_" + dir.reverse.takeWhile(_ != '/').reverse
@@ -2381,7 +2381,7 @@ class OpsSpec extends SparkSpec {
   }
 
   test("ArtifactStore: the live CURRENT version is never stamped or swept by a losing racer's sweep; publish clears a stale marker (r17 ADVICE)") {
-    val dir = java.nio.file.Files.createTempDirectory("artlive").toString
+    val dir = tempDir("artlive").toString
     Seq((1L, "a b")).toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val fam = "live_test_" + dir.reverse.takeWhile(_ != '/').reverse
@@ -2421,7 +2421,7 @@ class OpsSpec extends SparkSpec {
   }
 
   test("ArtifactStore: corpusMetaFingerprint recurses into nested layouts and refuses an empty listing (r17 ADVICE)") {
-    val dir = java.nio.file.Files.createTempDirectory("artnest").toString
+    val dir = tempDir("artnest").toString
     // a PARTITIONED corpus layout: part files live under partition
     // subdirectories, so a direct-children listing sees zero parquet
     // files — the constant-md5("") silent-staleness failure mode
@@ -2444,7 +2444,7 @@ class OpsSpec extends SparkSpec {
     assert(ArtifactStore.corpusMetaFingerprint(spark, dir) != fp1,
       "a nested part-file edit must change the metadata fingerprint")
     // zero parquet leaves: a hard error, never a constant fingerprint
-    val empty = java.nio.file.Files.createTempDirectory("artempty").toString
+    val empty = tempDir("artempty").toString
     new java.io.File(s"$empty/documents.parquet").mkdirs()
     intercept[IllegalArgumentException] {
       ArtifactStore.corpusMetaFingerprint(spark, empty)
@@ -2452,7 +2452,7 @@ class OpsSpec extends SparkSpec {
   }
 
   test("ArtifactStore: a reader's frames survive a concurrent rebuild; torn versions never serve (r16 cross-process protocol)") {
-    val dir = java.nio.file.Files.createTempDirectory("artver").toString
+    val dir = tempDir("artver").toString
     Seq((1L, "a b"), (2L, "c d")).toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     var builds = 0
@@ -2533,7 +2533,7 @@ class OpsSpec extends SparkSpec {
   }
 
   test("SuffixIndex: a held handle survives a rebuild under the versioned protocol") {
-    val dir = java.nio.file.Files.createTempDirectory("sfxver").toString
+    val dir = tempDir("sfxver").toString
     Seq((1L, "a b c a b"), (2L, "b c d")).toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val h1 = SuffixIndex.loadOrBuild(spark, dir)
@@ -2553,7 +2553,7 @@ class OpsSpec extends SparkSpec {
   }
 
   test("SuffixIndex.sweepStale: newest RetainKeys key dirs survive a build, older keys are removed") {
-    val fam = java.nio.file.Files.createTempDirectory("sweep").toFile
+    val fam = tempDir("sweep").toFile
     val dirs = (0 until SuffixIndex.RetainKeys + 4).map { i =>
       val d = new java.io.File(fam, f"key$i%02d")
       d.mkdirs()
@@ -3649,7 +3649,7 @@ class OpsSpec extends SparkSpec {
   }
 
   test("release shards: manifest round-trip verifies intact; tampering is detected") {
-    val out = java.nio.file.Files.createTempDirectory("release").toString
+    val out = tempDir("release").toString
     val d = (0L until 40L)
       .map(i => (i, s"doc $i body ${"tok " * (i % 7).toInt}".trim))
       .toDF("doc_id", "text")
@@ -4044,7 +4044,7 @@ class OpsSpec extends SparkSpec {
     assert(m.numBuckets == 256)
     assert(scores(TextAnalysis.scoreWithClfModel(d, m)) == trained,
       "scoreWithClfModel under the trained model must equal logisticScore")
-    val path = java.nio.file.Files.createTempDirectory("clfw").toString + "/w"
+    val path = tempDir("clfw").toString + "/w"
     TextAnalysis.saveClfModel(spark, m, path)
     val m2 = TextAnalysis.loadClfModel(spark, path)
     assert(m2 == m, "parquet round-trip must be bit-identical")
@@ -4068,7 +4068,7 @@ class OpsSpec extends SparkSpec {
     val narrowScores = scores(TextAnalysis.scoreWithClfModel(d, mNarrow))
     assert(narrowScores.keySet == trained.keySet)
     // an empty artifact is a broken write, not a model
-    val emptyPath = java.nio.file.Files.createTempDirectory("clfw").toString + "/e"
+    val emptyPath = tempDir("clfw").toString + "/e"
     spark.emptyDataFrame.select(lit(0L).as("b"), lit(0.0).as("w"),
       lit(256).as("nb")).write.parquet(emptyPath)
     intercept[IllegalArgumentException] {
@@ -4201,7 +4201,7 @@ class OpsSpec extends SparkSpec {
   test("bloom artifact: bit-exact round-trip; parameters recorded; empty rejected") {
     val block = Seq("bad1", "bad2", "evil").toDF("v")
     val words = Bloom.buildBits(block, "v", mBits = 256, k = 4)
-    val dir = java.nio.file.Files.createTempDirectory("bloom-art").toString
+    val dir = tempDir("bloom-art").toString
     Bloom.Artifact.save(spark, words, 4, dir)
     val (loaded, k) = Bloom.Artifact.load(spark, dir)
     assert(k == 4 && loaded.toSeq == words.toSeq,
@@ -4269,7 +4269,7 @@ class OpsSpec extends SparkSpec {
   test("cms artifact: exact round-trip, recorded parameters, empty-meta rejection") {
     val stream = (Seq.fill(9)("x") ++ Seq.fill(4)("y") ++ Seq("z")).toDF("v")
     val probes = Seq("x", "y", "z", "none").toDF("v")
-    val dir = java.nio.file.Files.createTempDirectory("cms-art").toString
+    val dir = tempDir("cms-art").toString
     val counters = Sketch.Cms.counters(stream, "v", w = 256, d = 3)
     Sketch.Cms.save(spark, counters, 256, 3, dir)
     val (loaded, w, d) = Sketch.Cms.load(spark, dir)
@@ -4292,7 +4292,7 @@ class OpsSpec extends SparkSpec {
     val p = 9
     val bA = Sketch.perBucketMax(shardA, Seq("g"), "v", p)
     val bB = Sketch.perBucketMax(shardB, Seq("g"), "v", p)
-    val dirA = java.nio.file.Files.createTempDirectory("hll-a").toString
+    val dirA = tempDir("hll-a").toString
     Sketch.Hll.save(spark, bA, Seq("g"), p, dirA)
     val (loadedA, gcols, pLoaded) = Sketch.Hll.load(spark, dirA)
     assert(pLoaded == p && gcols == Seq("g"),
@@ -4653,7 +4653,7 @@ class OpsSpec extends SparkSpec {
     val test = Seq((10L, "the cat ran"), (11L, "zebra crossing ahead"))
       .toDF("doc_id", "text")
     val model = TextAnalysis.knBigramModel(train)
-    val path = java.nio.file.Files.createTempDirectory("kn").toString + "/m"
+    val path = tempDir("kn").toString + "/m"
     TextAnalysis.saveKnModel(model, path)
     val loaded = TextAnalysis.loadKnModel(spark, path)
     assert(loaded.discount == model.discount)

@@ -52,7 +52,7 @@ class RobustSpec extends SparkSpec {
     val shardB = Seq.tabulate(300)(i => ("en", (i % 11).toDouble)).toDF("k", "x")
     def histOf(df: org.apache.spark.sql.DataFrame) =
       df.groupBy(col("k"), col("x").as("v")).agg(count(lit(1)).as("c"))
-    val dir = java.nio.file.Files.createTempDirectory("hist-art").toString
+    val dir = tempDir("hist-art").toString
     Robust.Artifact.save(spark, histOf(shardA), Seq("k"), 0, dir)
     val (loaded, keys, grain) = Robust.Artifact.load(spark, dir)
     assert(keys == Seq("k") && grain == 0)

@@ -8,8 +8,7 @@ import graft.etl.{EtlConfig, SparkSpec}
   * micro-batch execution (memory sink driven synchronously). */
 class StreamingSpec extends SparkSpec {
 
-  private def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+  private def tmpDir(prefix: String): String = tempDir(prefix).toString
 
   test("streaming ETL: fixture file streamed -> same kept records as batch") {
     val in = tmpDir("stream-in")
