@@ -11,10 +11,15 @@ import org.apache.spark.sql.functions._
   *
   * The pipeline frame contract: `doc_id` + `textCol`, with any other
   * columns riding along untouched (gates filter rows, rewrites replace
-  * the text column in place, dedup stages join their cleaned text back
-  * by id so passthrough columns survive). Every stage here is a thin
-  * binding to an operator that already has its own oracle-checked
-  * query — the registry adds composition, never new semantics.
+  * the text column in place, dedup stages carry the passthrough
+  * columns through their exploded frame and emit `doc_id`, the
+  * passthrough columns, then the cleaned text). Every stage reads its
+  * upstream frame once, so a chain's plan grows linearly with its
+  * length, never doubling per stage. `doc_id` is the document key: a
+  * row with a null `doc_id` drops at the first dedup or keeper stage.
+  * Every stage here is a thin binding to an operator that already has
+  * its own oracle-checked query — the registry adds composition,
+  * never new semantics.
   *
   * Config shape (the reference's limited-YAML spirit):
   * {{{
@@ -37,11 +42,18 @@ object CurationPipeline {
   private def textRewrite(d: DataFrame, c: Column => Column): DataFrame =
     d.withColumn("text", c(col("text")))
 
-  /** Dedup stages emit (doc_id, clean_text, …); join the cleaned text
-    * back so passthrough columns survive. */
-  private def rejoinClean(d: DataFrame, cleaned: DataFrame): DataFrame =
-    d.drop("text").join(
-      cleaned.select(col("doc_id"), col("clean_text").as("text")), Seq("doc_id"))
+  /** Dedup stages: `dedup(docs, carry)` emits (doc_id, clean_text, …,
+    * `Dedup.CarryCol`) with every column other than `doc_id` and `text`
+    * carried in the struct; unpack it as `doc_id`, those columns in
+    * their input order, then the cleaned `text`. */
+  private def dedupStage(d: DataFrame,
+      dedup: (DataFrame, Seq[String]) => DataFrame): DataFrame = {
+    val carry = d.columns.toSeq.filterNot(Set("doc_id", "text"))
+    val out = dedup(d.filter(col("doc_id").isNotNull), carry)
+    out.select(col("doc_id") +:
+      carry.map(c => out(Dedup.CarryCol).getField(c).as(c)) :+
+      col("clean_text").as("text"): _*)
+  }
 
   val registry: Map[String, Stage] = Map(
     "html_extract" -> ((d, _) => textRewrite(d, t =>
@@ -53,13 +65,15 @@ object CurationPipeline {
     }),
     "canonicalize" -> ((d, _) => textRewrite(d, TextAnalysis.canonicalText)),
     "pii_scrub" -> ((d, _) => textRewrite(d, TextAnalysis.scrubPii)),
-    "line_dedup" -> ((d, prm) => rejoinClean(d,
-      Dedup.lineDedup(d, p(prm, "max_occurrences", "1").toLong))),
-    "para_dedup" -> ((d, prm) => rejoinClean(d,
-      Dedup.paragraphDedup(d, p(prm, "max_occurrences", "1").toLong))),
-    "substr_dedup" -> ((d, prm) => rejoinClean(d,
-      Dedup.exactSubstringDedup(d, p(prm, "k", "8").toInt,
-        p(prm, "max_occurrences", "1").toLong))),
+    "line_dedup" -> ((d, prm) => dedupStage(d, (docs, carry) =>
+      Dedup.lineDedup(docs, p(prm, "max_occurrences", "1").toLong,
+        carry = carry))),
+    "para_dedup" -> ((d, prm) => dedupStage(d, (docs, carry) =>
+      Dedup.paragraphDedup(docs, p(prm, "max_occurrences", "1").toLong,
+        carry = carry))),
+    "substr_dedup" -> ((d, prm) => dedupStage(d, (docs, carry) =>
+      Dedup.exactSubstringDedup(docs, p(prm, "k", "8").toInt,
+        p(prm, "max_occurrences", "1").toLong, carry = carry))),
     "quality_gate" -> ((d, prm) => d.filter(
       TextAnalysis.qualityScore(col("text")) >=
         p(prm, "min_quality", "0.5").toDouble)),
@@ -71,12 +85,23 @@ object CurationPipeline {
         n <= p(prm, "max_tokens", Int.MaxValue.toString).toInt)
     }),
     "exact_keeper" -> ((d, _) => {
-      val keep = d
-        .select(TextAnalysis.md5Fingerprint(col("text")).as("_fp"),
-          col("doc_id"))
-        .groupBy("_fp").agg(min(col("doc_id")).as("doc_id"))
-        .select("doc_id")
-      d.join(keep, Seq("doc_id"), "left_semi")
+      // one aggregate keyed by the text itself (what its md5
+      // fingerprint stands for) keeps each text's min doc_id; min
+      // skips null doc_ids, so a text with none drops. A fixed-width
+      // min keeps it a code-generated hash aggregate whose partial
+      // aggregation shrinks a hot text before the shuffle (a struct
+      // buffer would make it a sort aggregate and triple the classes
+      // the stage generates); passthrough columns, if any, ride in
+      // one min_by struct
+      val carry = d.columns.toSeq.filterNot(Set("doc_id", "text"))
+      val kept = d.groupBy(col("text")).agg(min(col("doc_id")).as("doc_id"),
+          Dedup.carryStruct(d, carry).map(s =>
+            min_by(s, col("doc_id")).as(Dedup.CarryCol)): _*)
+        .filter(col("doc_id").isNotNull)
+      kept.select(d.columns.toSeq.map {
+        case c @ ("doc_id" | "text") => kept(c)
+        case c => kept(Dedup.CarryCol).getField(c).as(c)
+      }: _*)
     }))
 
   /** Apply stages in order. Unknown stage = hard error naming the

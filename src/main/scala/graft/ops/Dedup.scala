@@ -147,14 +147,24 @@ object Dedup {
     * keys IS skewed on those keys, but it is an outer equi-join, which
     * AQE skew-join splits at runtime. The join carries a keep MARKER
     * (left outer) rather than filtering, so one doc-id aggregation
-    * computes `n_lines`, `n_kept`, and the reassembled text together —
-    * three shuffles of the exploded frame total (key count, key join,
-    * doc reassembly), none partitioned by a single hot value. */
+    * computes `n_lines`, `n_kept`, and the reassembled text together.
+    * At most three shuffles, none partitioned by a single hot value:
+    * the key count (map-side partial counts, not lines), the key join
+    * (the exploded frame by `k`; none when AQE broadcasts a small
+    * kept-key table) and the doc reassembly (partial aggregates by
+    * id).
+    *
+    * `carry` names other columns of `docs` to pass through: they
+    * come back as one [[CarryCol]] struct column, stored on each
+    * document's first line only and read back by the reassembly
+    * aggregate. A caller that needs them has no join back to `docs`
+    * by id — that join would shuffle again and make the plan read
+    * `docs` twice. */
   def lineDedup(docs: DataFrame, maxOccurrences: Long = 1,
       idCol: String = "doc_id", textCol: String = "text",
-      sep: String = "\n"): DataFrame = {
+      sep: String = "\n", carry: Seq[String] = Nil): DataFrame = {
     require(maxOccurrences >= 1, "maxOccurrences must be >= 1")
-    val lines = persistTracked(explodeLines(docs, idCol, textCol, sep))
+    val lines = persistTracked(explodeLines(docs, idCol, textCol, sep, carry))
     val counts = lines.groupBy("k").agg(count(lit(1)).as("occ"))
     reassembleAgainstCounts(lines, counts, maxOccurrences, idCol, sep)
   }
@@ -164,23 +174,52 @@ object Dedup {
     * nothing else changes, which is the point of the shared
     * separator-generalized core. */
   def paragraphDedup(docs: DataFrame, maxOccurrences: Long = 1,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    lineDedup(docs, maxOccurrences, idCol, textCol, sep = "\n\n")
+      idCol: String = "doc_id", textCol: String = "text",
+      carry: Seq[String] = Nil): DataFrame =
+    lineDedup(docs, maxOccurrences, idCol, textCol, sep = "\n\n", carry)
+
+  /** The struct column in which the dedup operators carry `carry`
+    * columns (the `carry` parameter of [[lineDedup]],
+    * [[paragraphDedup]] and [[exactSubstringDedup]]) from their input
+    * to their output. */
+  val CarryCol = "_carry"
+
+  /** `carry`'s columns of `docs` as one [[CarryCol]] struct; nothing
+    * when `carry` is empty. */
+  private[graft] def carryStruct(docs: DataFrame, carry: Seq[String]): Seq[Column] =
+    if (carry.isEmpty) Nil
+    else Seq(struct(carry.map(c =>
+      docs.col("`" + c.replace("`", "``") + "`")): _*).as(CarryCol))
+
+  /** Keeps the [[CarryCol]] struct (if any) on the `first` exploded row
+    * of each document only, so it is stored once per document, not
+    * once per line or token. Every document has that row: the explode
+    * input is never NULL and a split never yields an empty array. */
+  private def carryOnFirst(exploded: DataFrame, first: Column): DataFrame =
+    if (!exploded.columns.contains(CarryCol)) exploded
+    else exploded.withColumn(CarryCol, when(first, col(CarryCol)))
+
+  /** The reassembly aggregates' read-back of [[carryOnFirst]]. */
+  private def carriedBack(exploded: DataFrame): Seq[Column] =
+    if (!exploded.columns.contains(CarryCol)) Nil
+    else Seq(first(col(CarryCol), ignoreNulls = true).as(CarryCol))
 
   /** The exploded narrow `(idCol, pos, line, k)` frame batch and
-    * streaming line dedup share (`k` = the normalized occurrence key).
+    * streaming line dedup share (`k` = the normalized occurrence key),
+    * plus the [[CarryCol]] struct on `pos = 0` when `carry` is given.
     * NULL text coalesces to "" BEFORE the explode: posexplode emits
     * zero rows for a NULL split, and since the operator's output is
     * built entirely from this frame, an unguarded NULL row would
     * vanish from the output — the silent row loss the contract
     * forbids. */
   private[graft] def explodeLines(docs: DataFrame, idCol: String,
-      textCol: String, sep: String = "\n"): DataFrame =
-    docs.select(col(idCol),
+      textCol: String, sep: String = "\n",
+      carry: Seq[String] = Nil): DataFrame =
+    carryOnFirst(docs.select(Seq(col(idCol),
         posexplode(split(coalesce(col(textCol), lit("")),
           java.util.regex.Pattern.quote(sep)))
-          .as(Seq("pos", "line")))
-      .withColumn("k", lower(trim(col("line"))))
+          .as(Seq("pos", "line"))) ++ carryStruct(docs, carry): _*)
+      .withColumn("k", lower(trim(col("line")))), col("pos") === 0)
 
   /** Reassemble documents from `lines` judged against `counts`
     * (`(k, occ)` — cumulative over whatever corpus the caller counts):
@@ -191,6 +230,7 @@ object Dedup {
       sep: String = "\n"): DataFrame = {
     val keptKeys = counts.filter(col("occ") <= maxOccurrences)
       .select(col("k"), lit(1).as("_keep"))
+    val carried = carriedBack(lines)
     lines.join(keptKeys, Seq("k"), "left")
       .groupBy(idCol)
       .agg(
@@ -200,10 +240,11 @@ object Dedup {
           array_sort(collect_list(when(col("_keep").isNotNull,
             struct(col("pos"), col("line"))))),
           s => s.getField("line")), sep).as("clean_text"),
-        count(col("_keep")).as("n_kept"),
-        count(lit(1)).as("n_lines"))
-      .select(col(idCol), col("clean_text"), col("n_kept"),
-        (col("n_lines") - col("n_kept")).as("n_dropped"))
+        Seq(count(col("_keep")).as("n_kept"),
+          count(lit(1)).as("n_lines")) ++ carried: _*)
+      .select(Seq(col(idCol), col("clean_text"), col("n_kept"),
+        (col("n_lines") - col("n_kept")).as("n_dropped")) ++
+        carried.map(_ => col(CarryCol)): _*)
   }
 
   /** Exact repeated-SUBSTRING removal in the spirit of ExactSubstr
@@ -236,12 +277,15 @@ object Dedup {
     * position-keyed token hashes — order-sensitive, 2^-64 collision
     * odds at ANY k (no rotation stride to wrap), and the count/join
     * shuffles move 8-byte longs instead of k-token strings (the
-    * k-gram string is never materialized). */
+    * k-gram string is never materialized). `carry` passes other
+    * columns of `docs` through as in [[lineDedup]], stored on each
+    * document's first token. */
   def exactSubstringDedup(docs: DataFrame, k: Int = 8,
       maxOccurrences: Long = 1,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+      idCol: String = "doc_id", textCol: String = "text",
+      carry: Seq[String] = Nil): DataFrame = {
     require(maxOccurrences >= 1, "maxOccurrences must be >= 1")
-    val (toks, gramsRaw) = substringFrames(docs, k, idCol, textCol)
+    val (toks, gramsRaw) = substringFrames(docs, k, idCol, textCol, carry)
     val grams = persistTracked(gramsRaw)
     val hot = grams.groupBy("gram").agg(count(lit(1)).as("occ"))
       .filter(col("occ") > maxOccurrences)
@@ -277,16 +321,20 @@ object Dedup {
           array_sort(collect_list(when(col("cv") === 0,
             struct(col("pos"), col("tok"))))),
           s => s.getField("tok")), " ").as("clean_text"),
-        count(lit(1)).as("n_tokens"),
-        sum(col("cv")).cast("long").as("n_removed"))
+        Seq(count(lit(1)).as("n_tokens"),
+          sum(col("cv")).cast("long").as("n_removed")) ++
+          carriedBack(toks): _*)
   }
 
   /** The exploded hashed-gram and token frames [[exactSubstringDedup]]
     * builds — exposed for the streaming twin, which persists them as
     * per-batch state. Returns `(toks, grams)`:
-    * `(idCol, pos, tok)` and `(idCol, gpos, gram)` (both 1-based). */
+    * `(idCol, pos, tok)` and `(idCol, gpos, gram)` (both 1-based);
+    * `toks` also holds the [[CarryCol]] struct on `pos = 1` when
+    * `carry` is given. */
   private[graft] def substringFrames(docs: DataFrame, k: Int,
-      idCol: String, textCol: String): (DataFrame, DataFrame) = {
+      idCol: String, textCol: String,
+      carry: Seq[String] = Nil): (DataFrame, DataFrame) = {
     require(k >= 2, "k must be >= 2")
     // position-KEYED hash contributions, not position-rotated ones:
     // rotation strides wrap at 64 bits, so for k >= 65 (ExactSubstr
@@ -301,8 +349,9 @@ object Dedup {
     // NULL text coalesces to "" so the row survives (same no-silent-
     // row-loss contract as explodeLines).
     val base = persistTracked(docs
-      .select(col(idCol),
-        TextAnalysis.tokens(coalesce(col(textCol), lit(""))).as("_tk"))
+      .select(Seq(col(idCol),
+        TextAnalysis.tokens(coalesce(col(textCol), lit(""))).as("_tk")) ++
+        carryStruct(docs, carry): _*)
       .withColumn("_th", transform(col("_tk"), t => xxhash64(t))))
     val grams = base.select(col(idCol), posexplode(
         when(size(col("_th")) >= k,
@@ -312,9 +361,12 @@ object Dedup {
               .reduce(_.bitwiseXOR(_))))
           .otherwise(array().cast("array<long>"))).as(Seq("g0", "gram")))
       .select(col(idCol), (col("g0") + 1).as("gpos"), col("gram"))
-    val toks = base
-      .select(col(idCol), posexplode(col("_tk")).as(Seq("p0", "tok")))
-      .select(col(idCol), (col("p0") + 1).as("pos"), col("tok"))
+    val carried = if (carry.isEmpty) Nil else Seq(col(CarryCol))
+    val toks = carryOnFirst(base
+      .select(Seq(col(idCol), posexplode(col("_tk")).as(Seq("p0", "tok"))) ++
+        carried: _*)
+      .select(Seq(col(idCol), (col("p0") + 1).as("pos"), col("tok")) ++
+        carried: _*), col("pos") === 1)
     (toks, grams)
   }
 

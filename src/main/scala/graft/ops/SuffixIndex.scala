@@ -178,7 +178,7 @@ object SuffixIndex {
     keys.drop(RetainKeys).foreach(deleteRecursively)
   }
 
-  private[ops] def deleteRecursively(f: java.io.File): Unit = {
+  private[graft] def deleteRecursively(f: java.io.File): Unit = {
     if (f.isDirectory)
       Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
     f.delete(); ()

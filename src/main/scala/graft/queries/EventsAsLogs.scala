@@ -72,7 +72,10 @@ object EventsAsLogs {
     * an in-memory frame). A CSV has a fixed header, so the key-alias
     * and corrupt-JSON variants don't apply; the twin keeps the
     * invalid-timestamp (`%83`) and missing-level (`%89` → empty cell →
-    * absent key) error paths and the PII column (`%11`). */
+    * absent key) error paths and the PII column (`%11`). The read-back
+    * lines are checkpointed and the temp dir deleted before this
+    * returns: materialize the result before
+    * [[graft.ops.Dedup.releaseCaches]], which frees the blocks. */
   def csvLines(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables.events(spark, dir)
     val id = col("event_id")
@@ -95,9 +98,14 @@ object EventsAsLogs {
     // race concurrent sessions on the same fixture (one JVM's overwrite
     // deleting files under another's in-flight scan)
     val out = java.nio.file.Files.createTempDirectory("graft-csv-twin-")
-      .toString
-    csv.write.mode("overwrite").option("header", "true").csv(out)
-    graft.etl.Normalize.parseCsvLines(spark, out)
+      .toFile
+    try {
+      csv.write.mode("overwrite").option("header", "true").csv(out.getPath)
+      // read back once into checkpoint blocks, so the directory can go
+      // now; Dedup.releaseCaches frees the blocks
+      graft.ops.Dedup.checkpointTracked(
+        graft.etl.Normalize.parseCsvLines(spark, out.getPath))
+    } finally graft.ops.SuffixIndex.deleteRecursively(out)
   }
 
   /** Synthesized lines run through the real Normalize + transform chain

@@ -222,7 +222,7 @@ class PipelineSpec extends SparkSpec {
       id -> l
     }.toMap
     // boilerplate line deduped away, text canonicalized, passthrough
-    // column (lang) survives the dedup rejoin
+    // column (lang) rides through the dedup stage
     assert(byId(1L).contains("\"text\":\"hello world\""), byId(1L))
     assert(byId(2L).contains("\"text\":\"another doc here\""), byId(2L))
     assert(!byId.contains(3L), "the 1-token doc must be gated out")
@@ -415,23 +415,6 @@ class PipelineSpec extends SparkSpec {
     assert(reports("file").byService == Map("orders" -> 2L, "gateway" -> 1L,
       "payments" -> 1L, "auth" -> 2L))
     assert(stdout.toString("UTF-8").linesIterator.size == 3)
-  }
-
-  /** Runs `body` under a fresh job group; returns its result and the
-    * number of Spark jobs it started. The status tracker is fed through
-    * the listener bus, so a marker job in a second group is awaited
-    * first: once the marker is visible, every earlier job is too. */
-  private def countingJobs[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = s"job-budget-${java.util.UUID.randomUUID}"
-    sc.setJobGroup(group, "job budget")
-    val res = try body finally sc.clearJobGroup()
-    sc.setJobGroup(s"$group-marker", "marker")
-    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-    while (sc.statusTracker.getJobIdsForGroup(s"$group-marker").isEmpty &&
-        System.nanoTime() < deadline) Thread.sleep(10)
-    (res, sc.statusTracker.getJobIdsForGroup(group).length)
   }
 
   test("job budget: one Spark job per batch and no cache left behind, for run and runStdin") {

@@ -38,4 +38,21 @@ trait SparkSpec extends TempDirs {
   lazy val spark: SparkSession = TestSpark.spark
   def fixturePath: String =
     getClass.getResource("/k8s_logs.jsonl").getPath
+
+  /** Runs `body` under a fresh job group; returns its result and the
+    * number of Spark jobs it started. The status tracker is fed through
+    * the listener bus, so a marker job in a second group is awaited
+    * first: once the marker is visible, every earlier job is too. */
+  def countingJobs[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"job-budget-${java.util.UUID.randomUUID}"
+    sc.setJobGroup(group, "job budget")
+    val res = try body finally sc.clearJobGroup()
+    sc.setJobGroup(s"$group-marker", "marker")
+    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    while (sc.statusTracker.getJobIdsForGroup(s"$group-marker").isEmpty &&
+        System.nanoTime() < deadline) Thread.sleep(10)
+    (res, sc.statusTracker.getJobIdsForGroup(group).length)
+  }
 }

@@ -3683,43 +3683,82 @@ class OpsSpec extends SparkSpec {
   }
 
   test("curation pipeline: config-built chain equals hand-built; registry contract holds") {
-    val docs = Seq(
-      (1L, "<html><body>Hello <b>world</b> of text</body></html>", "en"),
-      (2L, "damaged � text here", "en"),          // encoding gate drops
-      (3L, "subscribe now\nunique three keeps", "en"), // boilerplate line
-      (4L, "subscribe now\nunique four keeps", "en"),
-      (5L, "twin text body", "en"),                    // exact pair: keep 5
-      (6L, "twin text body", "de"))
+    val docs = Seq[(Option[Long], Option[String], String)](
+      (Some(1L), Some("<html><body>Hello <b>world</b> of text</body></html>"), "en"),
+      (Some(2L), Some("damaged \uFFFD text here"), "en"), // encoding gate drops
+      (Some(3L), Some("subscribe now\nunique three keeps"), "en"), // boilerplate line
+      (Some(4L), Some("subscribe now\nunique four keeps"), "en"),
+      (Some(5L), Some("twin text body"), "en"),          // exact pair: keep 5
+      (Some(6L), Some("twin text body"), "de"),
+      (Some(7L), None, "fr"),                            // null text
+      (Some(8L), Some("subscribe now"), "en"),           // every line drops
+      (None, Some("orphan text without an id"), "en"))   // null doc_id drops
       .toDF("doc_id", "text", "lang")
+    // the stage forms the registry replaced: every dedup stage joins
+    // its cleaned text back by id, the keeper semi-joins its ids
+    def rejoin(d: org.apache.spark.sql.DataFrame,
+        cleaned: org.apache.spark.sql.DataFrame) =
+      d.drop("text").join(cleaned.select(col("doc_id"),
+        col("clean_text").as("text")), Seq("doc_id"))
+    def keeper(d: org.apache.spark.sql.DataFrame) =
+      d.join(d.select(TextAnalysis.md5Fingerprint(col("text")).as("f"),
+          col("doc_id")).groupBy("f").agg(min("doc_id").as("doc_id"))
+        .select("doc_id"), Seq("doc_id"), "left_semi")
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      (d.columns.toSeq, d.collect().map(_.toSeq).sortBy(_.toString).toSeq)
     val cfg = """stages:
-                |  # crawl front half, then keeper
+                |  # crawl front half, boilerplate dedup, rewrites, gates, keeper
                 |  - html_extract
                 |  - encoding_gate max_bad_ratio=0.01
-                |  - line_dedup max_occurrences=1
+                |  - line_dedup max_occurrences=2
+                |  - para_dedup max_occurrences=2
+                |  - canonicalize
+                |  - pii_scrub
+                |  - quality_gate min_quality=0.5
+                |  - length_gate min_tokens=1 max_tokens=1000
                 |  - Exact_Keeper
                 |""".stripMargin
-    val got = CurationPipeline.fromConfig(docs, cfg).collect()
-      .map(r => r.getAs[Long]("doc_id") ->
-        ((r.getAs[String]("text"), r.getAs[String]("lang")))).toMap
-    val hand = {
+    val got = rows(CurationPipeline.fromConfig(docs, cfg))
+    val hand = rows {
       val a = docs.withColumn("text", when(col("text").contains("<html"),
         TextAnalysis.htmlToText(col("text"))).otherwise(col("text")))
       val (_, _, _, keep) = TextAnalysis.encodingQuality(col("text"), 0.01)
       val b = a.filter(keep)
-      val c = b.drop("text").join(Dedup.lineDedup(b)
-        .select(col("doc_id"), col("clean_text").as("text")), Seq("doc_id"))
-      val ids = c.select(TextAnalysis.md5Fingerprint(col("text")).as("f"),
-          col("doc_id")).groupBy("f").agg(min("doc_id").as("doc_id"))
-        .select("doc_id")
-      c.join(ids, Seq("doc_id"), "left_semi")
-    }.collect().map(r => r.getAs[Long]("doc_id") ->
-      ((r.getAs[String]("text"), r.getAs[String]("lang")))).toMap
+      val c = rejoin(b, Dedup.lineDedup(b, 2))
+      val e = rejoin(c, Dedup.paragraphDedup(c, 2))
+        .withColumn("text", TextAnalysis.canonicalText(col("text")))
+        .withColumn("text", TextAnalysis.scrubPii(col("text")))
+        .filter(TextAnalysis.qualityScore(col("text")) >= 0.5)
+      val n = TextAnalysis.tokenCount(col("text"))
+      keeper(e.filter(n >= 1 && n <= 1000))
+    }
+    // the dedup stages alone see the null text (the encoding gate
+    // drops it above)
+    val dedupCfg = """stages:
+                     |  - line_dedup
+                     |  - para_dedup
+                     |  - substr_dedup k=2
+                     |""".stripMargin
+    val gotDedup = rows(CurationPipeline.fromConfig(docs, dedupCfg))
+    val handDedup = rows {
+      val c = rejoin(docs, Dedup.lineDedup(docs))
+      val e = rejoin(c, Dedup.paragraphDedup(c))
+      rejoin(e, Dedup.exactSubstringDedup(e, k = 2))
+    }
     Dedup.releaseCaches()
     assert(got == hand, s"config=$got hand=$hand")
-    assert(!got.contains(2L), "mojibake doc must be gated")
-    assert(!got.contains(6L), "exact twin keeps the min doc_id")
-    assert(got(3L)._1 == "unique three keeps", "boilerplate line dropped")
-    assert(got(1L)._2 == "en", "passthrough columns must survive the chain")
+    assert(gotDedup == handDedup, s"config=$gotDedup hand=$handDedup")
+    assert(got._1 == Seq("doc_id", "lang", "text"), got._1)
+    val byId = got._2.map(r => r(0) -> ((r(2), r(1)))).toMap
+    assert(!byId.contains(2L), "mojibake doc must be gated")
+    assert(!byId.contains(6L), "exact twin keeps the min doc_id")
+    assert(byId(5L) == (("twin text body", "en")))
+    assert(byId(3L)._1 == "unique three keeps", "boilerplate line dropped")
+    assert(byId(8L) == (("", "en")), "a doc whose every line drops survives")
+    assert(byId(1L)._2 == "en", "passthrough columns must survive the chain")
+    assert(!byId.contains(null), "a null doc_id drops")
+    assert(gotDedup._2.exists(_ == Seq(7L, "fr", "")),
+      s"null text survives the dedup stages as an empty text: $gotDedup")
     // registry contract: unknown stage is a hard error NAMING the registry
     val err = intercept[IllegalArgumentException] {
       CurationPipeline.apply(docs, Seq("no_such_stage" -> Map.empty))
@@ -3729,6 +3768,72 @@ class OpsSpec extends SparkSpec {
     // parser errors are loud, not silent no-ops
     assert(CurationPipeline.parseStages("not a config").isLeft)
     assert(CurationPipeline.parseStages("stages:\n  oops").isLeft)
+  }
+
+  test("curation pipeline: the input is scanned once, the job count stays under budget, no cache is left") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.SortAggregateExec
+    import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
+    val dir = tempDir("curation-jobs")
+    // boilerplate lines and paragraphs, HTML, an exact duplicate pair
+    (1 to 48).map { i =>
+      val body = s"document $i talks about topic ${i % 7} with words " +
+        s"alpha$i beta$i gamma$i delta$i and more"
+      val text = i % 6 match {
+        case 0 => s"<html><body><p>$body</p></body></html>"
+        case 1 => s"subscribe to our newsletter\n$body"
+        case 2 => s"$body\n\ncookie banner paragraph\naccept all cookies"
+        case 3 if i < 12 => "twin document body with words enough to pass every gate"
+        case _ => body
+      }
+      (i.toLong, text)
+    }.toDF("doc_id", "text").write.json(s"$dir/docs")
+    val stages = Seq(
+      "html_extract" -> Map.empty[String, String],
+      "encoding_gate" -> Map("max_bad_ratio" -> "0.01"),
+      "line_dedup" -> Map("max_occurrences" -> "3"),
+      "para_dedup" -> Map("max_occurrences" -> "3"),
+      "canonicalize" -> Map.empty[String, String],
+      "pii_scrub" -> Map.empty[String, String],
+      "quality_gate" -> Map("min_quality" -> "0.5"),
+      "length_gate" -> Map("min_tokens" -> "5"),
+      "exact_keeper" -> Map.empty[String, String])
+    val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val curated = CurationPipeline(
+      spark.read.schema("doc_id LONG, text STRING").json(s"$dir/docs"), stages)
+    // input scans in the plan and in every cached relation it reads
+    // (each cached relation counted once, however often it is read)
+    val seen = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[AnyRef, java.lang.Boolean]())
+    def cached(r: InMemoryRelation): Int =
+      if (seen.add(r.cacheBuilder)) physicalScans(r.cachedPlan) else 0
+    def physicalScans(p: SparkPlan): Int =
+      new AdaptiveSparkPlanHelper {}.collect(p) {
+        case _: FileSourceScanExec => 1
+        case m: InMemoryTableScanExec => cached(m.relation)
+      }.sum
+    val scans = curated.queryExecution.optimizedPlan.collectLeaves().map {
+      case _: LogicalRelation => 1
+      case r: InMemoryRelation => cached(r)
+      case _ => 0
+    }.sum
+    val (_, jobs) = countingJobs(
+      curated.write.format("noop").mode("overwrite").save())
+    Dedup.releaseCaches(blocking = true)
+    assert(scans == 1, s"the input is scanned $scans times:\n" +
+      curated.queryExecution.optimizedPlan)
+    // the keeper is a code-generated hash aggregate: as a sort
+    // aggregate (a struct buffer) it generated 18 classes instead of 6
+    val sortAggs = new AdaptiveSparkPlanHelper {}.collect(
+        curated.queryExecution.executedPlan) { case a: SortAggregateExec => a }
+    assert(sortAggs.isEmpty, s"sort aggregates in the curation plan: $sortAggs")
+    // 11 jobs; 23 (and 4 input scans) when the dedup stages joined
+    // their text back by id and the keeper semi-joined its ids
+    assert(jobs <= 11, s"$jobs jobs for one curation pass")
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- persistedBefore)
+      .isEmpty, "a curation pass must leave no persisted RDD behind")
   }
 
   test("incrementalApply: equals full recompute; transform provably never sees a clean doc") {
