@@ -5,6 +5,12 @@
 #
 #   scripts/run_main.sh graft.Bench [args...]
 #
+# To time a few queries without the whole suite, name them and the run
+# count:
+#
+#   SPARK_GRAFT_BENCH_ONLY=q1,q2 SPARK_GRAFT_BENCH_RUNS=3 \
+#     scripts/run_main.sh graft.Bench
+#
 # Honors SPARK_DRIVER_MEM like build.sbt (default 8g).
 set -eu
 cd "$(dirname "$0")/.."

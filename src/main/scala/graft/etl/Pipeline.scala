@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
   *
   * One declarative plan end-to-end, and one per-batch core for every
   * driver: [[process]] observes the report counters on the transformed
-  * frame ([[EtlReport.observed]]) and writes it through [[writeKept]]
-  * (sink + DLQ), so the sink's pass also computes the report — one
+  * frame ([[EtlReport.observed]]) and writes it through [[writeKept]],
+  * so the sink's pass also computes the report — one
   * Spark job per batch for a distributed sink. [[run]] calls it once,
   * [[runStdin]] once per line batch, and the streaming layer once per
   * micro-batch. Worker pools / queues / mutexes from the reference are
@@ -22,18 +22,11 @@ object Pipeline {
   case class Result(report: EtlReport)
 
   /** The sink step of one batch: the kept rows ([[Transforms.split]]) in
-    * the sink's record columns go to `sink`; failed writes go to the DLQ
-    * unless the sink wrote its DLQ distributed already (`dlqHandled` —
-    * re-writing the sampled `dlq` seq would duplicate and undercount). */
-  def writeKept(transformed: DataFrame, sink: Sinks.Sink,
-      cfg: EtlConfig): Sinks.WriteResult = {
-    val (kept, _, _) = Transforms.split(transformed)
-    val wr = sink.write(kept.select("ts", "level", "message", "service",
-      "namespace", "pod", "node", "trace_id", "fields"))
-    if (cfg.dlqPath.nonEmpty && wr.dlqHandled.isEmpty)
-      Sinks.writeDlq(cfg.dlqPath, wr.dlq)
-    wr
-  }
+    * the sink's record columns go to `sink`, which writes its own DLQ
+    * (the HTTP sink, the only one that can fail a record). */
+  def writeKept(transformed: DataFrame, sink: Sinks.Sink): Sinks.WriteResult =
+    sink.write(Transforms.split(transformed)._1.select("ts", "level",
+      "message", "service", "namespace", "pod", "node", "trace_id", "fields"))
 
   /** One batch end to end, in one pass: observe A1–A5 on `transformed`
     * ([[EtlReport.observed]]), write the observed frame ([[writeKept]],
@@ -41,11 +34,10 @@ object Pipeline {
     * the write stats and the pass timing into it. Nothing is cached.
     * Multi-batch callers combine the results with [[EtlReport.merge]];
     * the duration fields are left to the caller. */
-  def process(transformed: DataFrame, sink: Sinks.Sink,
-      cfg: EtlConfig): EtlReport = {
+  def process(transformed: DataFrame, sink: Sinks.Sink): EtlReport = {
     val (observed, report) = EtlReport.observed(transformed)
     val t0 = System.nanoTime()
-    val wr = writeKept(observed, sink, cfg)
+    val wr = writeKept(observed, sink)
     val writing = (System.nanoTime() - t0) / 1e9
     report().copy(
       writtenOk = wr.writtenOk,
@@ -68,7 +60,7 @@ object Pipeline {
       // fresh run: truncate the DLQ like the reference's os.Create —
       // stale failure entries from a prior run must not accumulate
       Sinks.initDlq(cfg.dlqPath)
-      Result(process(transformed, sink, cfg)
+      Result(process(transformed, sink)
         .withDuration((System.nanoTime() - t0) / 1e9))
     }
 
@@ -152,7 +144,10 @@ object Pipeline {
     * instead of after EOF. The transform chain is resolved once, before
     * the first batch. One Sink instance across batches gives the append
     * lifecycle (the foreachBatch contract); reports ADD via
-    * [[EtlReport.merge]].
+    * [[EtlReport.merge]]. A batch is an RDD-backed frame, so it runs on
+    * the executors: over a local relation, the optimizer's
+    * `ConvertToLocalRelation` would fold parse and normalize into it
+    * and evaluate the batch on the driver, interpreted.
     * Driver memory is bounded by `batchLines` raw lines per batch.
     * Returns the merged report at EOF; a never-closed pipe simply
     * keeps consuming (the reference behaves the same). Callers route
@@ -173,8 +168,9 @@ object Pipeline {
       import spark.implicits._
       Iterator.continually(batcher.nextBatch(batchLines)).takeWhile(_.isDefined)
         .flatten.foldLeft(EtlReport()) { (acc, batch) =>
-          val lines = batch.toDS().toDF("line").filter(trim(col("line")) =!= "")
-          EtlReport.merge(acc, process(transform(Normalize(lines)), sink, cfg))
+          val lines = spark.createDataset(spark.sparkContext.parallelize(batch))
+            .toDF("line").filter(trim(col("line")) =!= "")
+          EtlReport.merge(acc, process(transform(Normalize(lines)), sink))
         }
         .withDuration((System.nanoTime() - t0) / 1e9)
     }
@@ -216,8 +212,9 @@ object Pipeline {
     * (`internal/plugins/registry.go:26-28`, the config `transforms`
     * list) scaled from log records to corpus curation. Input `jsonl`
     * (schema inferred) or `parquet`; output parquet
-    * (`output_type=parquet`) or single-file JSONL (streamed through
-    * `toLocalIterator`, never collected). Returns (docs_in, docs_out).
+    * (`output_type=parquet`) or single-file JSONL (one document per
+    * line, written like the file sink's first write:
+    * [[Sinks.writeLines]]). Returns (docs_in, docs_out).
     * Config-shape errors come back Left BEFORE any Spark job runs. */
   def runCuration(spark: SparkSession, cfg: EtlConfig)
       : Either[String, (Long, Long)] = {
@@ -245,21 +242,7 @@ object Pipeline {
           if (cfg.outputType == "parquet") {
             out.write.mode("overwrite").parquet(cfg.outputPath)
             spark.read.parquet(cfg.outputPath).count()
-          } else {
-            // Files.newBufferedWriter: UTF-8 regardless of platform
-            // default, and IOExceptions PROPAGATE (PrintWriter would
-            // swallow a disk-full and report success) — the Sinks.scala
-            // writer contract
-            val w = java.nio.file.Files.newBufferedWriter(
-              java.nio.file.Paths.get(cfg.outputPath),
-              java.nio.charset.StandardCharsets.UTF_8)
-            try {
-              val it = out.toJSON.toLocalIterator()
-              var n = 0L
-              while (it.hasNext) { w.write(it.next()); w.newLine(); n += 1 }
-              n
-            } finally w.close()
-          }
+          } else Sinks.writeLines(out.toJSON, cfg.outputPath, fresh = true)
         Right((nIn, nOut))
       }
     }

@@ -9,7 +9,8 @@ import graft.etl.expressions.SpaceSavingTopK
   * as one fused pass — read, parse, normalize, transforms, the sink
   * write and the report counters observed on it — so there is one
   * action to time:
-  *   - `writingSeconds`: that pass plus the DLQ append;
+  *   - `writingSeconds`: that pass plus the sink's own appends (the
+  *     file sink's target, the HTTP sink's DLQ);
   *   - `parsingSeconds`, `normalizationSeconds`, `filteringSeconds`:
   *     not measured, always 0 (their work fuses into the pass), kept so
   *     the key set matches the reference report.

@@ -1,8 +1,10 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.graft.Bridge
-import org.apache.spark.sql.functions.{coalesce, count, lit, max, sum, when, col}
+import org.apache.spark.sql.functions.{coalesce, concat, count, expr, lit,
+  max, sum, when, col}
 
 /** K1–K7: sinks.
   *
@@ -21,14 +23,22 @@ import org.apache.spark.sql.functions.{coalesce, count, lit, max, sum, when, col
   *     (`cmd/etl/main.go:480-537`) live inside the partition writer; Spark
   *     task retry is the outer layer;
   *   - `s3`/`kafka`, declared-but-unimplemented in the reference
-  *     (`builder.go:46-49`), become native here: any Hadoop-FS scheme
-  *     (s3a://, hdfs://) works through the same writers, and parquet is a
-  *     first-class output type.
+  *     (`builder.go:46-49`), become native here: parquet is a
+  *     first-class output type on any Hadoop-FS scheme (s3a://,
+  *     hdfs://);
+  *   - single-file JSONL output — the file sink (K2), the HTTP sink's
+  *     DLQ (K6) and the curation CLI's JSONL output — has one writer,
+  *     [[writeLines]]: distributed part files, appended in place to the
+  *     one target. It needs a FileSystem with `append` (local, HDFS);
+  *     on object stores use `output_type=parquet|s3`.
   *
-  * Failure protocol: writers NEVER throw for a record-level failure —
-  * failures are captured per-partition and returned as DLQ rows
-  * `{record, reason}` so A6–A8 metrics and the DLQ file work exactly like
-  * the reference.
+  * Failure protocol: writers NEVER throw for a record-level failure.
+  * Only the HTTP sink (K4) can fail a record: it captures failures per
+  * partition, writes them to its DLQ file `{record, reason}` itself
+  * (K6, `main.go:319-325`) and returns the exact counts and per-reason
+  * totals in [[WriteResult]], so the A6–A8 metrics and the DLQ file
+  * work like the reference's. Every other sink fails as a whole (an
+  * exception) or not at all, and reports no DLQ entries.
   */
 object Sinks {
 
@@ -120,26 +130,18 @@ object Sinks {
       true
     } catch { case _: Exception => false }
 
-  /** Per-sink write outcome; feeds A6–A8 + DLQ (report wiring in
-    * [[Pipeline]]).
-    *
-    * `dlq` carries record-level failures as (record JSON, reason). For
-    * driver-side sinks it is complete and the pipeline writes it to the
-    * DLQ file; a sink that persists its own DLQ distributed (HttpSink)
-    * sets `dlqHandled = Some((written, reasonCounts))` and `dlq` is only
-    * a CAPPED SAMPLE — callers must use [[WriteResult.dlqWritten]] /
-    * [[WriteResult.dlqReasons]] instead of sizing `dlq`, and must NOT
-    * re-write `dlq` to the DLQ path when `dlqHandled` is set. */
+  /** Per-sink write outcome; feeds A6–A8 (report wiring in
+    * [[Pipeline.process]]). `dlqWritten` counts the failed records the
+    * sink appended to its DLQ file and `dlqReasons` totals them per
+    * reason; both stay empty when no DLQ is configured (the reference
+    * counts `dlq_written` only with a live DLQ writer, main.go:319-325)
+    * and for every sink that cannot fail a record. */
   case class WriteResult(
       writtenOk: Long,
       writeFailed: Long,
       retry: RetryStats,
-      dlq: Seq[(String, String)], // (record JSON, reason)
-      dlqHandled: Option[(Long, Map[String, Long])] = None) {
-    def dlqWritten: Long = dlqHandled.map(_._1).getOrElse(dlq.size.toLong)
-    def dlqReasons: Map[String, Long] = dlqHandled.map(_._2).getOrElse(
-      dlq.groupBy(_._2).view.mapValues(_.size.toLong).toMap)
-  }
+      dlqWritten: Long = 0,
+      dlqReasons: Map[String, Long] = Map.empty)
 
   /** Write lifecycle: a Sink instance has PROCESS semantics — the first
     * `write` starts the output fresh (the reference CLI's `os.Create`
@@ -150,12 +152,19 @@ object Sinks {
     * semantics. A RESTARTED streaming query resuming from a checkpoint
     * must not truncate either — `build(cfg, resume = true)` constructs
     * sinks that append from their very first write (the streaming layer
-    * passes resume when the checkpoint already exists). Delivery across
-    * restarts is AT-LEAST-ONCE: the streaming layer skips micro-batches
-    * its last-batch marker says were already written, which shrinks —
-    * but cannot close — the replay window of a crash between the sink
-    * write and the marker write (the streaming layer's query starter
-    * documents the guard). */
+    * passes resume when the checkpoint already exists).
+    *
+    * Single-file targets append IN PLACE ([[writeLines]]): a batch
+    * writes only its own bytes, and the target keeps its file identity.
+    * A crash mid-append can leave a torn last line (no trailing `'\n'`);
+    * the next appending write — a resumed sink's first — cuts it back to
+    * the previous newline before it appends, so the file stays whole
+    * JSONL. Delivery across restarts is AT-LEAST-ONCE: the streaming
+    * layer skips micro-batches its last-batch marker says were already
+    * written, which shrinks — but cannot close — the replay window of a
+    * crash between the sink write and the marker write (the streaming
+    * layer's query starter documents the guard); lines of a crashed
+    * batch that were appended whole are written again on replay. */
   trait Sink {
     /** Write all rows of a normalized frame; never throws per-record.
       * Contract: `write` runs `df`'s plan to completion in an action —
@@ -204,73 +213,119 @@ object Sinks {
     def write(df: DataFrame): WriteResult = {
       var n = 0L
       Bridge.drainToDriver(df) { r => out.println(renderRecord(r)); n += 1 }
-      WriteResult(n, 0, RetryStats(), Nil)
+      WriteResult(n, 0, RetryStats())
     }
   }
 
   /** K2: single-file JSONL, CLI parity with `os.Create` + JSONL encode
-    * (`builder.go:19-27`). Renders distributed (mapPartitions), writes a
-    * part directory, then merges parts into the single target file —
-    * the explicit `coalesce(1)`-style decision documented in SURVEY §7.4.
-    */
+    * (`builder.go:19-27`). Renders distributed (mapPartitions) and
+    * writes through [[writeLines]]: the first write creates or
+    * truncates the target, later writes (and every write of a sink
+    * resumed from a checkpoint) append to it in place. */
   final class FileSink(path: String, startAppend: Boolean = false)
       extends Sink {
-    // first write truncates (os.Create) unless resuming a checkpointed
-    // stream, where prior batches' output must survive the restart
-    private var keepExisting = startAppend
+    private var fresh = !startAppend
     def write(df: DataFrame): WriteResult = {
       import df.sparkSession.implicits._
-      val tmp = path + ".spark-tmp"
-      val lines = df.mapPartitions(_.map(renderRecord))
-      lines.write.mode("overwrite").text(tmp)
-      val n = mergeParts(df.sparkSession, tmp, path, keepExisting)
-      keepExisting = true
-      WriteResult(n, 0, RetryStats(), Nil)
+      val n = writeLines(df.mapPartitions(_.map(renderRecord)), path, fresh)
+      fresh = false
+      WriteResult(n, 0, RetryStats())
     }
   }
 
-  /** Merge a text part-directory into one file; returns the number of
-    * NEW lines. With `keepExisting` the previous target content is
-    * carried over (streamed into the staging file first) — Hadoop
-    * local/checksum filesystems don't support `append()`, so
-    * copy-then-rename is the portable append. Rename after delete is a
-    * short non-atomic window; single-writer semantics (which a single
-    * JSONL target file implies anyway) make that safe. */
-  private[etl] def mergeParts(spark: org.apache.spark.sql.SparkSession,
-      dir: String, target: String, keepExisting: Boolean = false): Long = {
-    import org.apache.hadoop.fs.Path
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(dir).getFileSystem(conf)
-    val tgt = new Path(target)
-    if (tgt.getParent != null) fs.mkdirs(tgt.getParent)
-    val parts = fs.listStatus(new Path(dir)).map(_.getPath)
-      .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-    val staging = new Path(target + ".merging")
-    var lines = 0L
-    val out = fs.create(staging, true)
-    def copyInto(p: Path, countLines: Boolean): Unit = {
-      val in = fs.open(p)
-      try {
-        val buf = new Array[Byte](1 << 16)
-        var r = in.read(buf)
-        while (r > 0) {
-          if (countLines) {
-            var i = 0
-            while (i < r) { if (buf(i) == '\n') lines += 1; i += 1 }
-          }
-          out.write(buf, 0, r); r = in.read(buf)
-        }
-      } finally in.close()
-    }
+  /** The one single-file JSONL writer: writes `lines` as text part files
+    * next to `target` (distributed, one job), then streams them in part
+    * order into `target` and returns the number of lines added. `fresh`
+    * creates or truncates the target in place (`os.Create`); otherwise
+    * the target is created if absent and appended to, after a torn last
+    * line is cut ([[cutTornLine]]). Only the new lines are written, so a
+    * batch costs its own bytes, not the output so far.
+    *
+    * Any Hadoop FileSystem with `append` works (local, HDFS). The local
+    * FileSystem checksums its files and cannot append, so a local target
+    * is written through its raw FileSystem, and a stale `.crc` beside it
+    * is deleted. A FileSystem without `append` (object stores, s3a://)
+    * fails the first appending write with an
+    * UnsupportedOperationException that points to
+    * `output_type=parquet|s3`. Single writer per target. */
+  private[graft] def writeLines(lines: Dataset[String], target: String,
+      fresh: Boolean): Long = {
+    val tmp = new Path(target + ".spark-tmp")
+    lines.write.mode("overwrite").text(tmp.toString)
+    val conf = lines.sparkSession.sparkContext.hadoopConfiguration
+    val fs = tmp.getFileSystem(conf)
+    val out = openTarget(target, fresh, conf)
+    var n = 0L
     try {
-      if (keepExisting && fs.exists(tgt)) copyInto(tgt, countLines = false)
-      parts.foreach(copyInto(_, countLines = true))
+      val buf = new Array[Byte](1 << 16)
+      fs.listStatus(tmp).map(_.getPath).filter(_.getName.startsWith("part-"))
+        .sortBy(_.getName).foreach { p =>
+          val in = fs.open(p)
+          try {
+            var r = in.read(buf)
+            while (r > 0) {
+              var i = 0
+              while (i < r) { if (buf(i) == '\n') n += 1; i += 1 }
+              out.write(buf, 0, r); r = in.read(buf)
+            }
+          } finally in.close()
+        }
     } finally out.close()
-    fs.delete(tgt, false)
-    if (!fs.rename(staging, tgt))
-      throw new java.io.IOException(s"rename $staging -> $tgt failed")
-    fs.delete(new Path(dir), true)
-    lines
+    fs.delete(tmp, true)
+    n
+  }
+
+  /** `target` opened for writing through its Hadoop FileSystem: created
+    * or truncated in place when `fresh`, else created if absent or
+    * appended to after a torn last line is cut. */
+  private def openTarget(target: String, fresh: Boolean,
+      conf: org.apache.hadoop.conf.Configuration)
+      : org.apache.hadoop.fs.FSDataOutputStream = {
+    val tgt = new Path(target)
+    val fs = tgt.getFileSystem(conf) match {
+      case c: ChecksumFileSystem =>
+        c.getRawFileSystem.delete(c.getChecksumFile(tgt), false)
+        c.getRawFileSystem
+      case f => f
+    }
+    if (fresh || !fs.exists(tgt)) fs.create(tgt, true)
+    else
+      try { cutTornLine(fs, tgt); fs.append(tgt) }
+      catch { case e: UnsupportedOperationException =>
+        throw new UnsupportedOperationException(s"$target: the " +
+          s"${fs.getScheme} filesystem cannot append, and a single-file " +
+          "JSONL target appends every write after its first; use " +
+          "output_type=parquet|s3 on this filesystem", e)
+      }
+  }
+
+  /** Cut a torn last line — the bytes after the last `'\n'`, left by a
+    * crash mid-append — off `p`, so the next append starts a whole line.
+    * A whole file costs a one-byte read. */
+  private def cutTornLine(fs: FileSystem, p: Path): Unit = {
+    val len = fs.getFileStatus(p).getLen
+    val in = fs.open(p)
+    val keep = try {
+      val buf = new Array[Byte](1 << 16)
+      var chunk = 1
+      var end = len
+      var keep = -1L
+      while (keep < 0 && end > 0) {
+        val start = math.max(0L, end - chunk)
+        val k = (end - start).toInt
+        in.readFully(start, buf, 0, k)
+        var i = k - 1
+        while (i >= 0 && buf(i) != '\n') i -= 1
+        if (i >= 0) keep = start + i + 1 else end = start
+        chunk = buf.length
+      }
+      math.max(keep, 0L)
+    } finally in.close()
+    // HDFS may finish a truncate in the background (false): the file
+    // cannot take the append until it has
+    if (keep < len && !fs.truncate(p, keep))
+      throw new java.io.IOException(
+        s"$p: cutting its torn last line is still in progress; retry the write")
   }
 
   /** K3: rotating JSONL with byte threshold + retention
@@ -348,14 +403,14 @@ object Sinks {
           out.write(data); size += bytes; n += 1
         }
       } finally out.close()
-      WriteResult(n, 0, RetryStats(), Nil)
+      WriteResult(n, 0, RetryStats())
     }
   }
 
   /** K4: HTTP/webhook sink — per record `POST url`, JSON body, 30 s
     * timeout, success = 2xx, retry ≤ maxRetries with backoff
     * (`internal/sink/http.go:14-97`). One HTTP client per partition;
-    * failures captured (not thrown) and returned as DLQ rows.
+    * failures are captured (not thrown) and go to the DLQ file.
     *
     * Delivery is AT-LEAST-ONCE: a Spark task retry or speculative copy
     * re-sends its partition's records (endpoints needing stronger
@@ -368,14 +423,15 @@ object Sinks {
     * (`status.agg`); under speculation they carry the same caveat as
     * [[ParquetSink]]'s observed row count.
     *
-    * Failures are NEVER collected wholesale to the driver: under a total
-    * endpoint outage the failure set is the whole batch, and a driver
+    * Failures are NEVER collected to the driver: under a total endpoint
+    * outage the failure set is the whole batch, and a driver
     * materialization is an OOM exactly when the system is already
-    * degraded. Instead, when `dlqPath` is set the failure frame is
-    * rendered and written DISTRIBUTED (part files merged into the single
-    * JSONL target, same machinery as FileSink); the report gets exact
-    * counts + per-reason totals from a tiny aggregation, and `dlq`
-    * carries only a `DlqSampleCap`-bounded sample for logs/summary. */
+    * degraded. Instead, when `dlqPath` is set, the failure frame is
+    * rendered as `{record, reason}` lines and appended DISTRIBUTED to the
+    * DLQ file through [[writeLines]] (the pipeline truncates it at run
+    * start, [[initDlq]]); the report gets exact counts and per-reason
+    * totals from a tiny aggregation. With no `dlqPath`, failures are
+    * counted in `writeFailed` only. */
   final class HttpSink(url: String, policy: RetryPolicy,
       timeoutMs: Int = 30000, dlqPath: String = "") extends Sink {
     def write(df: DataFrame): WriteResult = {
@@ -383,8 +439,8 @@ object Sinks {
       val pol = policy
       val tmo = timeoutMs
       import df.sparkSession.implicits._
-      // one status row per record, persisted so the metrics agg and the
-      // failure collect read one materialization. persist (not
+      // one status row per record, persisted so the metrics agg, the
+      // reason totals and the DLQ write read one materialization. persist (not
       // localCheckpoint): on executor loss the partition RECOMPUTES —
       // re-sending its records, which the documented at-least-once
       // contract already covers — instead of failing the whole write on
@@ -428,52 +484,30 @@ object Sinks {
         coalesce(max(col("retries")), lit(0L)).as("max_retries")).head()
       val okCount = agg.getAs[Long]("ok")
       val failed = agg.getAs[Long]("total") - okCount
-      var sample: Seq[(String, String)] = Nil
-      var handled: Option[(Long, Map[String, Long])] = None
-      if (failed > 0) {
-        import org.apache.spark.sql.functions.concat
-        val failFrame = status.filter(col("ok") === 0)
-        // the ACTUAL last error (e.g. "unexpected status 500") — the
-        // reference keys DLQ reasons on err.Error() (main.go:319-325),
-        // so an operator can tell 4xx from 5xx from timeouts
-        val reasonCol = coalesce(col("err"),
-          concat(lit("write failed after "),
-            col("retries").cast("string"), lit(" retries")))
-        // reason cardinality = distinct error messages (HTTP failures
-        // are low-cardinality by nature) — a tiny aggregate
-        val reasons = failFrame.groupBy(reasonCol.as("reason")).count()
-          .collect().map(r => (r.getString(0), r.getLong(1))).toMap
-        sample = failFrame.select(col("body"), reasonCol.as("reason"))
-          .limit(HttpSink.DlqSampleCap).collect()
-          .map(r => (r.getString(0), r.getString(1))).toSeq
-        if (dlqPath.nonEmpty) {
-          // distributed DLQ write: render lines on executors, merge the
-          // part files into the single JSONL target (append semantics —
-          // prior DLQ content from earlier batches is carried over)
-          val lines = failFrame.select(concat(
-            lit("{\"record\":"), col("body"),
-            lit(",\"reason\":\""), reasonCol, lit("\"}")).as("value"))
-          val tmp = dlqPath + ".spark-tmp"
-          lines.write.mode("overwrite").text(tmp)
-          mergeParts(df.sparkSession, tmp, dlqPath, keepExisting = true)
+      val (dlqWritten, reasons) =
+        if (failed == 0 || dlqPath.isEmpty) (0L, Map.empty[String, Long])
+        else {
+          // the ACTUAL last error (e.g. "unexpected status 500") — the
+          // reference keys DLQ reasons on err.Error() (main.go:319-325),
+          // so an operator can tell 4xx from 5xx from timeouts
+          val failFrame = status.filter(col("ok") === 0).select(col("body"),
+            coalesce(col("err"), concat(lit("write failed after "),
+              col("retries").cast("string"), lit(" retries"))).as("reason"))
+          // reason cardinality = distinct error messages (HTTP failures
+          // are low-cardinality by nature) — a tiny aggregate
+          val reasons = failFrame.groupBy("reason").count()
+            .collect().map(r => (r.getString(0), r.getLong(1))).toMap
+          // `record` is the rendered record; to_json escapes the reason
+          val lines = failFrame.select(concat(lit("{\"record\":"), col("body"),
+            lit(","), expr("substr(to_json(named_struct('reason', reason)), 2)")))
+          (writeLines(lines.as[String], dlqPath, fresh = false), reasons)
         }
-        // no DLQ configured → failures are LOST, not "written": the
-        // reference only counts dlq_written with a live dlqWriter
-        // (main.go:319-325); the capped sample still feeds logs
-        handled = Some(if (dlqPath.nonEmpty) (failed, reasons)
-          else (0L, Map.empty[String, Long]))
-      }
       status.unpersist(blocking = false)
       WriteResult(okCount, failed,
         RetryStats(agg.getAs[Long]("retries"), agg.getAs[Long]("retried"),
           agg.getAs[Long]("max_retries")),
-        sample, handled)
+        dlqWritten, reasons)
     }
-  }
-
-  object HttpSink {
-    /** Max failure rows surfaced driver-side (summary/log sample). */
-    val DlqSampleCap = 100
   }
 
   /** Parquet sink — the reference's `s3` placeholder made real: any
@@ -491,7 +525,7 @@ object Sinks {
       df.observe(obs, count(lit(1)).as("n")).write.mode(mode).parquet(path)
       firstWrite = false
       val n = obs.get("n").asInstanceOf[Long]
-      WriteResult(n, 0, RetryStats(), Nil)
+      WriteResult(n, 0, RetryStats())
     }
   }
 
@@ -520,7 +554,7 @@ object Sinks {
         .option("kafka.bootstrap.servers", bootstrapServers)
         .option("topic", topic)
         .save()
-      WriteResult(obs.get("n").asInstanceOf[Long], 0, RetryStats(), Nil)
+      WriteResult(obs.get("n").asInstanceOf[Long], 0, RetryStats())
     }
   }
 
@@ -530,30 +564,9 @@ object Sinks {
     * entries. Batch runs call this always; a streaming query calls it
     * only when NOT resuming from a checkpoint (resume must keep the
     * prior batches' DLQ, same contract as the sinks). */
-  def initDlq(path: String): Unit = {
-    if (path.isEmpty) return
-    val p = java.nio.file.Paths.get(path)
-    if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
-    java.nio.file.Files.newBufferedWriter(p,
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.TRUNCATE_EXISTING).close()
-  }
-
-  /** K6: DLQ — JSONL of `{record, reason}` (`cmd/etl/main.go:475-478`,
-    * `319-325`). `record` is the already-rendered record object. */
-  def writeDlq(path: String, entries: Seq[(String, String)]): Unit = {
-    if (path.isEmpty || entries.isEmpty) return
-    val p = java.nio.file.Paths.get(path)
-    if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
-    val out = java.nio.file.Files.newBufferedWriter(p,
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.APPEND)
-    try entries.foreach { case (record, reason) =>
-      val esc = reason.replace("\\", "\\\\").replace("\"", "\\\"")
-      out.write(s"""{"record":$record,"reason":"$esc"}""")
-      out.write("\n")
-    } finally out.close()
-  }
+  def initDlq(path: String): Unit =
+    if (path.nonEmpty) openTarget(path, fresh = true, org.apache.spark.sql
+      .SparkSession.active.sparkContext.hadoopConfiguration).close()
 
   /** K7: builder — dispatch on output_type (`builder.go:15-55`), with the
     * Spark-native additions. Unknown type or missing connector → Left.

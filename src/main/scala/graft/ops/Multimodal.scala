@@ -405,14 +405,25 @@ object Multimodal {
       (cos, _) <- firstChild(b, ss, se, "stco")
       (scs, _) <- firstChild(b, ss, se, "stsc")
     } yield {
-      // stsz: flags, uniform size (0 = per-sample table), count
+      // an entry count at `at` whose table (right after it) would run
+      // past the blob is corrupt: throw before allocating for it
+      def count(at: Int, entryBytes: Int): Int = {
+        val n = be32(b, at).toInt
+        if (n > (b.length - at - 4) / entryBytes)
+          throw new IllegalArgumentException(s"table count $n past the end")
+        n
+      }
+      // stsz: flags, uniform size (0 = per-sample table), count; a
+      // uniform size has no table, so its count bounds nothing here
       val uniform = be32(b, szs + 4).toInt
-      val n = be32(b, szs + 8).toInt
-      val sizes = Array.tabulate(n)(i =>
-        if (uniform != 0) uniform else be32(b, szs + 12 + 4 * i).toInt)
-      val nCh = be32(b, cos + 4).toInt
+      val n = if (uniform != 0) be32(b, szs + 8).toInt else count(szs + 8, 4)
+      val table =
+        if (uniform != 0) Array.emptyIntArray
+        else Array.tabulate(n)(i => be32(b, szs + 12 + 4 * i).toInt)
+      def sizes(i: Int): Int = if (uniform != 0) uniform else table(i)
+      val nCh = count(cos + 4, 4)
       val chunkOff = Array.tabulate(nCh)(i => be32(b, cos + 8 + 4 * i))
-      val nSc = be32(b, scs + 4).toInt
+      val nSc = count(scs + 4, 12)
       val stsc = Array.tabulate(nSc)(i =>
         (be32(b, scs + 8 + 12 * i).toInt,   // first_chunk, 1-based
           be32(b, scs + 12 + 12 * i).toInt)) // samples_per_chunk

@@ -128,6 +128,10 @@ object Ranking {
           case a: org.apache.spark.sql.catalyst.util.ArrayData => a.copy()
           case m: org.apache.spark.sql.catalyst.util.MapData => m.copy()
           case ir: org.apache.spark.sql.catalyst.InternalRow => ir.copy()
+          // a byte array compares by reference; a wrapped copy compares
+          // by content and, unlike a ByteBuffer, collects to the driver
+          case b: Array[Byte] =>
+            scala.collection.immutable.ArraySeq.unsafeWrapArray(b.clone())
           case v => v // null / boxed primitives / Decimal — immutable
         }
         j += 1

@@ -112,7 +112,7 @@ object StreamingPipeline {
   }
 
   /** Per-micro-batch sink writer: kept rows go to the configured sink,
-    * failures to the DLQ ([[graft.etl.Pipeline.writeKept]]) — the exact
+    * which writes its own DLQ ([[graft.etl.Pipeline.writeKept]]) — the exact
     * once-per-batch semantics the reference's BatchedSink provided
     * (`internal/sink/batched.go`), with Spark supplying the
     * time+size batching. Sink's write lifecycle (first call truncates,
@@ -123,7 +123,7 @@ object StreamingPipeline {
       triggerMs: Long = 1000): Either[String, StreamingQuery] =
     start(transformed, cfg, checkpoint, Trigger.ProcessingTime(
         triggerMs, java.util.concurrent.TimeUnit.MILLISECONDS)) { (batch, sink) =>
-      Pipeline.writeKept(batch, sink, cfg)
+      Pipeline.writeKept(batch, sink)
     }
 
   /** Result of a drain-the-input streaming run: the merged report. */
@@ -143,7 +143,7 @@ object StreamingPipeline {
     @volatile var acc = EtlReport()
     start(transformedStream(readLines(spark, inDir, maxFilesPerTrigger), cfg),
         cfg, checkpoint, Trigger.AvailableNow()) { (batch, sink) =>
-      acc = EtlReport.merge(acc, Pipeline.process(batch, sink, cfg))
+      acc = EtlReport.merge(acc, Pipeline.process(batch, sink))
     }.map { q => q.awaitTermination(); StreamRunResult(acc) }
   }
 

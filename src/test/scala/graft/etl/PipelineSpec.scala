@@ -406,7 +406,7 @@ class PipelineSpec extends SparkSpec {
     ).map { case (name, sink) =>
       val transformed = TransformRegistry(cfg)(Normalize(
         Normalize.parseLines(spark, fixturePath))).fold(e => fail(e), identity)
-      name -> timingFree(Pipeline.process(transformed, sink, cfg))
+      name -> timingFree(Pipeline.process(transformed, sink))
     }.toMap finally server.stop(0)
     assert(reports("stdout").totalLines == 6 && reports("rotate").totalLines == 6,
       s"driver-side sinks must complete the observed counters: $reports")
@@ -435,6 +435,30 @@ class PipelineSpec extends SparkSpec {
     assert(stdinJobs == 2, s"runStdin: $stdinJobs jobs for two batches")
     assert(spark.sparkContext.getPersistentRDDs.keySet == persistedBefore,
       "a batch must leave no persisted RDD behind")
+  }
+
+  test("runStdin: a batch runs on the executors, not folded into a local relation") {
+    // a probe transform sees each batch's normalized frame; over a local
+    // relation the optimizer folds parse and normalize into the relation
+    // itself, and the batch would run on the driver, interpreted
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]()
+    TransformRegistry.register("test_plan_probe", _ => df => {
+      plans.add(df.queryExecution.optimizedPlan); df
+    })
+    val cfg = EtlConfig.default.copy(outputType = "file",
+      outputPath = s"${tempDir("etl-stdin-plan")}/out.jsonl",
+      transforms = Seq("filter_redact", "test_plan_probe"))
+    val in = new java.io.FileInputStream(fixturePath)
+    val report = try Pipeline.runStdin(spark, cfg, in, batchLines = 4)
+      .fold(e => fail(e), identity) finally in.close()
+    assert(report.totalLines == 6 && report.writtenOk == 3)
+    assert(plans.size == 2, s"${plans.size} batches")
+    plans.forEach { p =>
+      assert(p.collectFirst {
+        case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => l
+      }.isEmpty, s"stdin batch planned over a local relation:\n$p")
+    }
   }
 
   test("breakdown exactness: across 4 partitions, at the cap and one or two under it") {

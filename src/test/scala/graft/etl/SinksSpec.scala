@@ -102,22 +102,28 @@ class SinksSpec extends SparkSpec {
       assert(flaky.retry.writesWithRetries == 1)
       assert(flaky.retry.maxRetriesPerWrite == 2)
 
-      val dead = new Sinks.HttpSink(s"http://localhost:$port/dead", policy).write(df)
+      val dlq = s"${tempDir("dlqdead")}/dlq.jsonl"
+      val dead = new Sinks.HttpSink(s"http://localhost:$port/dead", policy,
+        dlqPath = dlq).write(df)
       assert(dead.writtenOk == 0 && dead.writeFailed == 1)
-      assert(dead.dlq.size == 1)
       // reasons carry the ACTUAL error (err.Error() parity) ...
-      assert(dead.dlq.head._2 == "unexpected status 500")
+      assert(dead.dlqWritten == 1 &&
+        dead.dlqReasons == Map("unexpected status 500" -> 1L))
+      val lines = java.nio.file.Files.readAllLines(java.nio.file.Paths.get(dlq))
+      assert(lines.size == 1 &&
+        lines.get(0).endsWith(""","reason":"unexpected status 500"}"""))
       // ... and with NO dlq configured nothing was "written" anywhere
       // (the reference only counts dlq_written with a live dlqWriter)
-      assert(dead.dlqWritten == 0 && dead.dlqReasons.isEmpty)
+      val lost = new Sinks.HttpSink(s"http://localhost:$port/dead", policy).write(df)
+      assert(lost.writeFailed == 1)
+      assert(lost.dlqWritten == 0 && lost.dlqReasons.isEmpty)
     } finally server.stop(0)
   }
 
   test("http sink: total outage writes DLQ distributed, no driver materialization") {
     // EVERY record fails — the failure set is the whole batch. The sink
     // must (a) write the full DLQ via the distributed path, (b) report
-    // exact counts + reasons from aggregation, (c) surface only a
-    // capped driver-side sample.
+    // exact counts + reasons from aggregation.
     val server = HttpServer.create(new java.net.InetSocketAddress(0), 0)
     server.createContext("/dead", (ex: HttpExchange) => {
       ex.sendResponseHeaders(500, -1); ex.close()
@@ -137,9 +143,6 @@ class SinksSpec extends SparkSpec {
       assert(res.writtenOk == 0 && res.writeFailed == n)
       assert(res.dlqWritten == n)
       assert(res.dlqReasons == Map("unexpected status 500" -> n.toLong))
-      assert(res.dlq.size == Sinks.HttpSink.DlqSampleCap,
-        s"driver sample must be capped, got ${res.dlq.size}")
-      assert(res.dlqHandled.nonEmpty, "sink must own the DLQ write")
       val lines = java.nio.file.Files.readAllLines(
         java.nio.file.Paths.get(dlq))
       assert(lines.size == n, s"distributed DLQ must hold all $n failures")
@@ -156,11 +159,91 @@ class SinksSpec extends SparkSpec {
   test("DLQ file: {record, reason} JSONL appended (openDLQ semantics)") {
     val dir = tempDir("dlq")
     val path = s"$dir/sub/dlq.jsonl" // parent dirs created
-    Sinks.writeDlq(path, Seq(("""{"TS":"t"}""", "write failed after 3 retries")))
-    Sinks.writeDlq(path, Seq(("""{"TS":"u"}""", "boom")))
+    // an unparsable URL fails every record before any connection, with
+    // an error message that quotes the URL: the reason must be escaped
+    val sink = new Sinks.HttpSink("http://localhost:1/\"bad\\path",
+      new Sinks.RetryPolicy(0, 1, 2, 0), dlqPath = path)
+    val first = sink.write(normalized(recordLine))
+    val second = sink.write(normalized(recordLine))
+    assert(first.dlqWritten == 1 && second.dlqWritten == 1)
     val lines = java.nio.file.Files.readAllLines(java.nio.file.Paths.get(path))
     assert(lines.size == 2)
-    assert(lines.get(0) == """{"record":{"TS":"t"},"reason":"write failed after 3 retries"}""")
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    lines.forEach { l =>
+      val node = mapper.readTree(l)
+      assert(node.get("record").get("Message").asText() == "hello", l)
+      assert(first.dlqReasons.keySet == Set(node.get("reason").asText()), l)
+    }
+    assert(first.dlqReasons.keys.head.contains("\"bad\\path"),
+      first.dlqReasons)
+  }
+
+  test("single-file targets append in place: a second write keeps the inode and the first batch's bytes") {
+    import java.nio.file.{Files, Paths}
+    def inode(p: String) = Files.getAttribute(Paths.get(p), "unix:ino")
+    def rec(i: Int) =
+      s"""{"ts":"2025-01-01T00:00:00Z","level":"INFO","msg":"m$i"}"""
+    val dir = tempDir("inplace")
+    val out = s"$dir/out.jsonl"
+    val file = new Sinks.FileSink(out)
+    file.write(normalized(rec(1), rec(2)))
+    val (ino, bytes) = (inode(out), Files.readAllBytes(Paths.get(out)))
+    file.write(normalized(rec(3)))
+    assert(inode(out) == ino, "the file sink's append must not replace its target")
+    val after = Files.readAllBytes(Paths.get(out))
+    assert(after.take(bytes.length).sameElements(bytes) &&
+      new String(after, "UTF-8").linesIterator.size == 3)
+
+    val server = HttpServer.create(new java.net.InetSocketAddress(0), 0)
+    server.createContext("/dead", (ex: HttpExchange) => {
+      ex.sendResponseHeaders(500, -1); ex.close()
+    })
+    server.start()
+    try {
+      val dlq = s"$dir/dlq.jsonl"
+      val http = new Sinks.HttpSink(
+        s"http://localhost:${server.getAddress.getPort}/dead",
+        new Sinks.RetryPolicy(0, 1, 2, 0), dlqPath = dlq)
+      http.write(normalized(rec(1), rec(2)))
+      val (dIno, dBytes) = (inode(dlq), Files.readAllBytes(Paths.get(dlq)))
+      http.write(normalized(rec(3)))
+      assert(inode(dlq) == dIno, "the DLQ append must not replace its file")
+      val dAfter = Files.readAllBytes(Paths.get(dlq))
+      assert(dAfter.take(dBytes.length).sameElements(dBytes) &&
+        new String(dAfter, "UTF-8").linesIterator.size == 3)
+    } finally server.stop(0)
+  }
+
+  test("a resumed sink cuts a torn last line before it appends") {
+    import java.nio.file.{Files, Paths}
+    val dir = tempDir("torn")
+    val out = s"$dir/out.jsonl"
+    // a crash mid-append left half a record after the last whole line
+    Files.writeString(Paths.get(out), "{\"TS\":\"whole\"}\n{\"TS\":\"to")
+    val res = new Sinks.FileSink(out, startAppend = true)
+      .write(normalized(recordLine))
+    assert(res.writtenOk == 1)
+    val lines = Files.readAllLines(Paths.get(out))
+    assert(lines.size == 2, lines)
+    assert(lines.get(0) == "{\"TS\":\"whole\"}")
+    assert(lines.get(1).startsWith("{\"TS\":\"2025-01-01T00:00:00Z\""), lines)
+    // a file that is one torn line is cut to nothing
+    Files.writeString(Paths.get(out), "{\"TS\":\"to")
+    new Sinks.FileSink(out, startAppend = true).write(normalized(recordLine))
+    assert(Files.readAllLines(Paths.get(out)).size == 1)
+  }
+
+  test("a filesystem without append fails the second write with a pointer to parquet") {
+    // first write creates the target (no append needed); the second
+    // must fail clearly instead of copying the target
+    spark.sparkContext.hadoopConfiguration.set("fs.noappend.impl",
+      classOf[NoAppendFileSystem].getName)
+    val out = s"noappend://${tempDir("noappend")}/out.jsonl"
+    val sink = new Sinks.FileSink(out)
+    assert(sink.write(normalized(recordLine)).writtenOk == 1)
+    val e = intercept[UnsupportedOperationException](
+      sink.write(normalized(recordLine)))
+    assert(e.getMessage.contains("output_type=parquet|s3"), e.getMessage)
   }
 
   test("sink builder: dispatch + kafka gated on connector + unknown type") {
@@ -243,15 +326,17 @@ class SinksSpec extends SparkSpec {
 
   test("fresh pipeline run truncates the DLQ (os.Create parity); resume keeps it") {
     val dir = tempDir("dlqfresh")
-    val path = s"$dir/dlq.jsonl"
-    Sinks.writeDlq(path, Seq(("""{"TS":"stale"}""", "old failure")))
-    assert(java.nio.file.Files.readAllLines(
-      java.nio.file.Paths.get(path)).size == 1)
-    Sinks.initDlq(path) // what a fresh run does before writing
-    assert(java.nio.file.Files.readAllLines(
-      java.nio.file.Paths.get(path)).isEmpty, "fresh run must truncate")
-    Sinks.writeDlq(path, Seq(("""{"TS":"new"}""", "boom")))
-    val lines = java.nio.file.Files.readAllLines(java.nio.file.Paths.get(path))
+    val path = java.nio.file.Paths.get(s"$dir/dlq.jsonl")
+    java.nio.file.Files.writeString(path,
+      "{\"record\":{\"TS\":\"stale\"},\"reason\":\"old failure\"}\n")
+    assert(java.nio.file.Files.readAllLines(path).size == 1)
+    Sinks.initDlq(path.toString) // what a fresh run does before writing
+    assert(java.nio.file.Files.readAllLines(path).isEmpty,
+      "fresh run must truncate")
+    java.nio.file.Files.writeString(path,
+      "{\"record\":{\"TS\":\"new\"},\"reason\":\"boom\"}\n",
+      java.nio.file.StandardOpenOption.APPEND)
+    val lines = java.nio.file.Files.readAllLines(path)
     assert(lines.size == 1 && lines.get(0).contains("new"))
   }
 
@@ -281,4 +366,15 @@ class SinksSpec extends SparkSpec {
       "3 small records must stay in one un-rotated file under the 10MB floor")
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir/r.jsonl.1")))
   }
+}
+
+/** The local filesystem under its own scheme, minus `append` — the
+  * shape of an object store to the single-file writer. */
+class NoAppendFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getScheme: String = "noappend"
+  override def getUri: java.net.URI = java.net.URI.create("noappend:///")
+  override def append(f: org.apache.hadoop.fs.Path, bufferSize: Int,
+      progress: org.apache.hadoop.util.Progressable)
+      : org.apache.hadoop.fs.FSDataOutputStream =
+    throw new UnsupportedOperationException("append is not supported")
 }

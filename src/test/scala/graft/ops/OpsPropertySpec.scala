@@ -301,7 +301,13 @@ class OpsPropertySpec extends SparkSpec {
             Seq(5, 5), Some(2))) ++
         (0 until 8).map(MediaFixtures.plantedAvcMp4) ++
         (0 until 8).map(MediaFixtures.plantedTar) ++
-        (0 until 8).map(MediaFixtures.plantedZip)
+        (0 until 8).map(MediaFixtures.plantedZip) ++
+        (0 until 4).flatMap(m => Seq(MediaFixtures.plantedFragMp4(m),
+          MediaFixtures.plantedTimelineMp4(m),
+          MediaFixtures.plantedTimelineTreeMp4(m),
+          MediaFixtures.plantedTimelineTracksMp4(m),
+          MediaFixtures.plantedWebm(m), MediaFixtures.plantedWebmLaced(m),
+          MediaFixtures.plantedWebmTracks(m), MediaFixtures.plantedWebmCues(m)))
     val rnd = new scala.util.Random(7)
     val randoms = (1 to 60).map { i =>
       val b = new Array[Byte](rnd.nextInt(400)); rnd.nextBytes(b); b
@@ -316,7 +322,23 @@ class OpsPropertySpec extends SparkSpec {
         v(rnd.nextInt(v.length)) = rnd.nextInt(256).toByte
       v
     }
-    val inputs = randoms ++ truncated ++ corrupted ++
+    // sample tables whose entry count claims ~2^31 entries (stsz with a
+    // per-sample table and with a uniform size, stco, stsc): a walk
+    // must fail on the count, not allocate for it. Fields are u32s at
+    // byte offsets from the box type: stsz uniform +8, count +12;
+    // stco/stsc count +8.
+    val huge = 0x7fffffffL
+    val hugeCounts = Seq(Seq("stsz" -> (12, huge)),
+        Seq("stsz" -> (8, 1L), "stsz" -> (12, huge)),
+        Seq("stco" -> (8, huge)), Seq("stsc" -> (8, huge))).map { fields =>
+      val b = MediaFixtures.plantedAvcMp4(0).clone()
+      fields.foreach { case (box, (off, v)) =>
+        val at = new String(b, "ISO-8859-1").indexOf(box) + off
+        (0 until 4).foreach(k => b(at + k) = (v >> (24 - 8 * k)).toByte)
+      }
+      b
+    }
+    val inputs = randoms ++ truncated ++ corrupted ++ hugeCounts ++
       Seq(Array.empty[Byte], Array[Byte](0xff.toByte, 0xd8.toByte))
     inputs.zipWithIndex.foreach { case (b, i) =>
       val o = Multimodal.Exif.orientation(b)
@@ -344,6 +366,16 @@ class OpsPropertySpec extends SparkSpec {
       assert(kf.nonEmpty && kf.forall(e =>
         e.kf_idx == -1 || (e.sample_no >= 1 && e.offset >= 0 &&
           e.size >= 0)), s"input $i")
+      // the remaining walks: rows of this blob (a sentinel row, or none
+      // where a walk documents none), never a throw
+      val ids = Multimodal.Mp4SpsWalk.info(1L, b).map(_.media_id) ++
+        Multimodal.Mp4FrameTypeWalk.frames(1L, b).map(_.media_id) ++
+        Multimodal.Mp4FragmentWalk.index(1L, b).map(_.media_id) ++
+        Multimodal.Mp4TimelineWalk.index(1L, b).map(_.media_id) ++
+        Multimodal.Mp4TrackTimelineWalk.index(1L, b).map(_.media_id) ++
+        Multimodal.WebmWalk.index(1L, b).map(_.media_id) ++
+        Multimodal.WebmWalk.cues(1L, b).map(_.media_id)
+      assert(ids.forall(_ == 1L), s"input $i")
     }
   }
 
@@ -363,14 +395,24 @@ class OpsPropertySpec extends SparkSpec {
         .select((col("id") * 2654435761L % mod + neg).as("k"), col("id"))
       val got = Ranking.withDenseRank(d.repartition(parts), Seq("k"), "dr")
         .select("id", "dr").as[(Long, Long)].collect().toMap
-      val want = {
-        val ks = d.select("k", "id").as[(Long, Long)].collect()
-        val rankOf = ks.map(_._1).distinct.sorted.zipWithIndex
+      val ks = d.select("k", "id").as[(Long, Long)].collect()
+      def denseBy[K: Ordering](key: Long => K): Map[Long, Long] = {
+        val rankOf = ks.toSeq.map(x => key(x._1)).distinct.sorted.zipWithIndex
           .map { case (k, i) => k -> (i + 1L) }.toMap
-        ks.map { case (k, id) => id -> rankOf(k) }.toMap
+        ks.map { case (k, id) => id -> rankOf(key(k)) }.toMap
       }
+      val want = denseBy(identity)
+      // the same classes keyed by a binary column: equal keys must
+      // compare by content, not by array reference
+      val db = d.select(col("k").cast("string").cast("binary").as("kb"),
+        col("id"))
+      val gotB = Ranking.withDenseRank(db.repartition(parts), Seq("kb"), "dr")
+        .select("id", "dr").as[(Long, Long)].collect().toMap
+      // ASCII digits and '-': byte order is string order
+      val wantB = denseBy(_.toString)
       Dedup.releaseCaches()
       assert(got == want, s"n=$n mod=$mod parts=$parts neg=$neg")
+      assert(gotB == wantB, s"binary key: n=$n mod=$mod parts=$parts neg=$neg")
     }
   }
 
