@@ -8,6 +8,15 @@
 #   scripts/verify_all.sh [sfDir] [outDir]
 #
 # Defaults: sf0.01 (the driver's gate SF) into /tmp/verify_all/q.
+#
+# SPARK_GRAFT_VERIFY_ONLY=<name>[,<name>...] runs only the named
+# queries (graft.Verify skips the rest), and compare_oracle.py compares
+# only the query directories that were written, so one oracle family
+# gates in minutes, e.g. every multimodal line:
+#
+#   SPARK_GRAFT_VERIFY_ONLY=$(grep -rhoE '"mm_[a-z0-9_]+"' \
+#     src/main/scala/graft | tr -d '"' | sort -u | paste -sd,) \
+#     scripts/verify_all.sh
 set -u
 SF="${1:-/root/testdata/sf0.01}"
 OUT="${2:-/tmp/verify_all/q}"

@@ -258,8 +258,11 @@ object EtlConfig {
     nonneg(cfg.outputMaxBytes, "output_max_bytes")
     nonneg(cfg.outputMaxFiles, "output_max_files")
     if (cfg.dlqPath.nonEmpty) {
-      if (cfg.dlqPath.startsWith("s3://"))
-        errs += s"DLQ path with s3:// scheme is not supported: ${cfg.dlqPath}"
+      // the DLQ is truncated once and then only appended to, which no
+      // object-store scheme supports
+      Seq("s3://", "s3a://", "s3n://").find(cfg.dlqPath.startsWith).foreach { s =>
+        errs += s"DLQ path with $s scheme is not supported: ${cfg.dlqPath}"
+      }
       if (cfg.dlqPath.trim.isEmpty)
         errs += "DLQ path cannot be empty or whitespace-only"
     }

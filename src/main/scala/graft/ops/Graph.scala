@@ -92,7 +92,12 @@ object Graph {
 
   /** Shared iteration core over a (src, dst, w) edge frame already
     * partitioned on src. `seedPred` (over the node id as `src`)
-    * switches uniform teleport to seed-restricted teleport. */
+    * switches uniform teleport to seed-restricted teleport.
+    *
+    * Single-action contract: the last iteration is not checkpointed,
+    * so the returned top-k frame is one join deep over the previous
+    * checkpoint. Each action on it re-runs that final join; a caller
+    * that needs more than one action should persist the result. */
   private def pageRankCore(edges: DataFrame, iterations: Int,
       k: Int, seedPred: Option[Column] = None): DataFrame = {
     val deg = edges.groupBy("src").agg(sum("w").as("outw"))

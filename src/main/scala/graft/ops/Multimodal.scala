@@ -1,8 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.reflect.runtime.universe.TypeTag
 
 /** Multimodal column plumbing: image/audio/video as opaque `binary`
   * columns with typed metadata, decoded/feature-extracted per partition.
@@ -27,7 +28,14 @@ import org.apache.spark.sql.types._
   * per-partition (one decoder instance per task, amortized init —
   * the Scala analogue of `mapInPandas` batch semantics); feature
   * vectors come back as narrow typed columns so downstream joins/aggs
-  * never carry the blob.
+  * never carry the blob. Every per-blob operator runs through one
+  * helper, [[perBlob]].
+  *
+  * MP4 box layout lives only in [[Bmff]]: the MP4 walks compose its
+  * box, sample-entry, sample-table and fragment readers and read no
+  * box field themselves. Bounds contract: a table count or optional
+  * field that runs past its own box throws, and the walk returns its
+  * corrupt-input sentinel row instead of reading a neighbouring box.
   */
 object Multimodal {
 
@@ -312,51 +320,27 @@ object Multimodal {
     * corrupt payloads → the filterable width=-1 sentinel. */
   object Mp4MetaDecoder extends MediaDecoder {
     private val Containers = Set("moov", "trak", "mdia", "minf", "stbl")
-    private def box4(b: Array[Byte], o: Int): String =
-      new String(b, o, 4, java.nio.charset.StandardCharsets.US_ASCII)
-    private def be32(b: Array[Byte], o: Int): Long =
-      ((b(o) & 0xffL) << 24) | ((b(o + 1) & 0xffL) << 16) |
-        ((b(o + 2) & 0xffL) << 8) | (b(o + 3) & 0xffL)
 
     def decode(id: Long, mime: String, bytes: Array[Byte]): MediaFeatures = {
+      import Bmff._
       val sentinel = MediaFeatures(id, mime, bytes.length.toLong,
         width = -1, height = -1, n_frames = 0, feature = new Array[Float](8),
         decoder = "mp4-meta")
-      if (mime != "video/mp4" && mime != "video/quicktime") return sentinel
+      if (!Mp4Mimes(mime)) return sentinel
       var width = 0
       var height = 0
       var frames = 0
-      def walk(start: Int, end: Int, depth: Int): Unit = {
-        var o = start
-        while (o + 8 <= end) {
-          val size = be32(bytes, o)
-          val typ = box4(bytes, o + 4)
-          // size 1 (64-bit largesize) / 0 (to-eof) are legal but not
-          // produced by the fixtures; bail on anything malformed
-          if (size < 8 || o + size > end || depth > 8) return
-          val (ps, pe) = (o + 8, o + size.toInt)
-          if (Containers(typ)) walk(ps, pe, depth + 1)
-          else if (typ == "tkhd" && pe - ps >= 84) {
-            val v = bytes(ps) & 0xff
-            // v0 payload: 4 vf + 20 times/ids + 16 layer/group/volume
-            // + 36 matrix = 76 before width (84 total); v1 widens the
-            // three time/duration fields to 64-bit: +12 → 88 (96 total)
-            val whOff = ps + (if (v == 1) 88 else 76)
-            if (whOff + 8 <= pe) {
-              val w = (be32(bytes, whOff) >> 16).toInt   // 16.16 fixed
-              val h = (be32(bytes, whOff + 4) >> 16).toInt
-              // audio traks carry 0x0 — keep the video trak's dims
-              if (w > 0 && h > 0) { width = w; height = h }
-            }
-          } else if (typ == "stsz" && pe - ps >= 12) {
-            frames = math.max(frames, be32(bytes, ps + 8).toInt)
-          }
-          o += size.toInt
+      def walk(boxes: List[(String, Int, Int)], depth: Int): Unit =
+        if (depth <= 8) boxes.foreach { case (typ, ps, pe) =>
+          if (Containers(typ)) walk(children(bytes, ps, pe), depth + 1)
+          else if (typ == "tkhd") tkhdDims(bytes, ps, pe).foreach { case (w, h) =>
+            // audio traks carry 0x0 — keep the video trak's dims
+            if (w > 0 && h > 0) { width = w; height = h }
+          } else if (typ == "stsz")
+            stszCount(bytes, ps, pe).foreach(n => frames = math.max(frames, n))
         }
-      }
       try {
-        if (bytes.length < 12 || box4(bytes, 4) != "ftyp") return sentinel
-        walk(0, bytes.length, 0)
+        walk(top(bytes), 0)
         if (width <= 0 && frames <= 0) return sentinel
         val hist = new Array[Long](8)
         bytes.foreach(b => hist((b & 0xff) >> 5) += 1)
@@ -367,16 +351,50 @@ object Multimodal {
     }
   }
 
-  /** Shared ISO-BMFF primitives for the MP4 metadata walk and the
-    * MJPEG frame sampler. */
+  /** The ISO-BMFF (ISO 14496-12) box layer: every box-layout decision
+    * the MP4 walks make lives here and only here — the box header,
+    * the `moov > trak > mdia > minf > stbl` path, the first `stsd`
+    * sample entry and its `avcC`/`hvcC` decoder configuration, the
+    * `stsz`/`stco`/`stsc`/`stss` sample tables, and the fragment boxes
+    * (`trex`, `mfhd`, `tfhd`, `tfdt`, `trun`). The walks compose these
+    * into rows and never read a box field themselves.
+    *
+    * Bounds contract: a table count or optional field that runs past
+    * its own box throws, and [[rowsOr]] turns the throw into the
+    * walk's corrupt-input sentinel, so a corrupt count never reads a
+    * neighbouring box's bytes as entries or allocates for entries
+    * that are not there. */
   private[ops] object Bmff {
+    private val AvcFormats = Set("avc1", "avc3")
+    private val HevcFormats = Set("hvc1", "hev1")
+
     def box4(b: Array[Byte], o: Int): String =
       new String(b, o, 4, java.nio.charset.StandardCharsets.US_ASCII)
+    def be16(b: Array[Byte], o: Int): Int =
+      ((b(o) & 0xff) << 8) | (b(o + 1) & 0xff)
     def be32(b: Array[Byte], o: Int): Long =
       ((b(o) & 0xffL) << 24) | ((b(o + 1) & 0xffL) << 16) |
         ((b(o + 2) & 0xffL) << 8) | (b(o + 3) & 0xffL)
+
+    /** Throws unless the `n` bytes at `at` lie inside a box that ends
+      * at `end` (the bounds contract). */
+    def need(at: Int, n: Long, end: Int): Unit =
+      if (at + n > end)
+        throw new IllegalArgumentException(s"$n bytes at $at past box end $end")
+
+    /** The u32 entry count at `at`, whose `entryBytes`-wide table
+      * follows it inside a box that ends at `end`. */
+    def count(b: Array[Byte], at: Int, end: Int, entryBytes: Int): Int = {
+      need(at, 4, end)
+      val n = be32(b, at)
+      need(at + 4, n * entryBytes, end)
+      n.toInt
+    }
+
     /** Direct children `(type, payloadStart, boxEnd)` of `[start, end)`;
-      * stops at the first malformed size (truncated tail tolerated). */
+      * stops at the first malformed size (truncated tail tolerated).
+      * Sizes 1 (64-bit largesize) and 0 (to end of file) are legal
+      * but not written by any fixture here, so they stop it too. */
     def children(b: Array[Byte], start: Int, end: Int): List[(String, Int, Int)] = {
       val out = scala.collection.mutable.ListBuffer[(String, Int, Int)]()
       var o = start
@@ -395,35 +413,158 @@ object Multimodal {
         typ: String): Option[(Int, Int)] =
       children(b, start, end).collectFirst { case (`typ`, s, e) => (s, e) }
 
+    /** Top-level boxes of an MP4 blob; Nil when it is null, too short
+      * for a box header plus brand, or not opened by `ftyp`. */
+    def top(b: Array[Byte]): List[(String, Int, Int)] =
+      if (b == null || b.length < 12 || box4(b, 4) != "ftyp") Nil
+      else children(b, 0, b.length)
+
+    /** A walk's rows, or its one `sentinel` row when the walk throws
+      * (the bounds contract) or finds nothing. */
+    def rowsOr[T](sentinel: T)(rows: => Seq[T]): Seq[T] =
+      try { val r = rows; if (r.isEmpty) Seq(sentinel) else r }
+      catch { case _: Exception => Seq(sentinel) }
+
+    /** Payload spans of every `moov > trak > mdia > minf > stbl` under
+      * the `moov` boxes among `boxes`, in file order. */
+    def stbls(b: Array[Byte], boxes: List[(String, Int, Int)]): List[(Int, Int)] =
+      for {
+        (t, ms, me) <- boxes if t == "moov"
+        (tt, ts, te) <- children(b, ms, me) if tt == "trak"
+        (mt, mds, mde) <- children(b, ts, te) if mt == "mdia"
+        (it, ifs, ife) <- children(b, mds, mde) if it == "minf"
+        (st, ss, se) <- children(b, ifs, ife) if st == "stbl"
+      } yield (ss, se)
+
+    /** The rows of the first track (in file order) for which `rows`
+      * yields any; later tracks are never read. */
+    def firstTrack[T](b: Array[Byte])(rows: (Int, Int) => Seq[T]): Seq[T] =
+      stbls(b, top(b)).iterator.map(rows.tupled).find(_.nonEmpty)
+        .getOrElse(Nil)
+
+    /** A `tkhd`'s presentation (width, height), 16.16 fixed point;
+      * None when the box is too short. v0 payload: 4 vf + 20
+      * times/ids + 16 layer/group/volume + 36 matrix = 76 before
+      * width (84 total); v1 widens the three time/duration fields to
+      * 64-bit: +12 → 88 (96 total). */
+    def tkhdDims(b: Array[Byte], ps: Int, pe: Int): Option[(Int, Int)] =
+      if (pe - ps < 84) None
+      else {
+        val whOff = ps + (if ((b(ps) & 0xff) == 1) 88 else 76)
+        if (whOff + 8 > pe) None
+        else Some(((be32(b, whOff) >> 16).toInt, (be32(b, whOff + 4) >> 16).toInt))
+      }
+
+    /** An `stsz`'s sample count (after flags and the uniform size);
+      * None when the box is shorter than that header. */
+    def stszCount(b: Array[Byte], ps: Int, pe: Int): Option[Int] =
+      if (pe - ps >= 12) Some(be32(b, ps + 8).toInt) else None
+
+    /** The first sample entry of an `stbl`'s `stsd`: format fourcc and
+      * the entry's span `[start, end)`. */
+    case class SampleEntry(fmt: String, start: Int, end: Int) {
+      /** Where the entry's child boxes start: its 8-byte header plus
+        * the 78 fixed VisualSampleEntry bytes. */
+      def cfgStart: Int = start + 8 + 78
+      /** The VisualSampleEntry width/height (entry offsets 32/34);
+        * (-1, -1) when the entry is too short. */
+      def dims(b: Array[Byte]): (Int, Int) =
+        if (end - start >= 36) (be16(b, start + 32), be16(b, start + 34))
+        else (-1, -1)
+    }
+    /** None when the `stsd` is absent, too short, or lists no entry. */
+    def sampleEntry(b: Array[Byte], ss: Int, se: Int): Option[SampleEntry] =
+      for {
+        (sds, sde) <- firstChild(b, ss, se, "stsd")
+        // stsd payload: ver/flags + entry_count, then the first
+        // entry's size + format fourcc
+        if sde - sds >= 16 && be32(b, sds + 4) >= 1
+      } yield {
+        val e = sds + 8
+        SampleEntry(box4(b, e + 4), e, math.min(sde, e + be32(b, e).toInt))
+      }
+
+    /** The `avcC` (AVC) or `hvcC` (HEVC) payload span of a sample
+      * entry, with the HEVC flag; None for other formats. */
+    def nalConfig(b: Array[Byte], e: SampleEntry): Option[(Boolean, Int, Int)] =
+      if (e.cfgStart >= e.end) None
+      else if (AvcFormats(e.fmt))
+        firstChild(b, e.cfgStart, e.end, "avcC").map { case (s, t) => (false, s, t) }
+      else if (HevcFormats(e.fmt))
+        firstChild(b, e.cfgStart, e.end, "hvcC").map { case (s, t) => (true, s, t) }
+      else None
+
+    /** (profile_idc, level_idc, NAL length-prefix size) of a decoder
+      * configuration; None when it is too short. hvcC (ISO 14496-15
+      * §8.3.3.1): profile_idc rides the low 5 bits of byte 1
+      * (profile_space/tier above it), level_idc is byte 12,
+      * lengthSizeMinusOne the low 2 bits of byte 21. */
+    def profileLevelNal(b: Array[Byte], hevc: Boolean, as: Int,
+        ae: Int): Option[(Int, Int, Int)] =
+      if (!hevc && ae - as >= 5)
+        Some(((b(as + 1) & 0xff), (b(as + 3) & 0xff), (b(as + 4) & 3) + 1))
+      else if (hevc && ae - as >= 22)
+        Some(((b(as + 1) & 0x1f), (b(as + 12) & 0xff), (b(as + 21) & 3) + 1))
+      else None
+
+    /** The first SPS NAL of an avcC: 5-byte header, then the SPS
+      * count (low 5 bits) and each SPS's 2-byte length. */
+    def avccSps(b: Array[Byte], as: Int, ae: Int): Option[Array[Byte]] =
+      if (ae - as < 8 || (b(as + 5) & 0x1f) < 1) None
+      else {
+        val l = be16(b, as + 6)
+        if (as + 8 + l <= ae) Some(b.slice(as + 8, as + 8 + l)) else None
+      }
+
+    /** The first NAL of `nalType` (33 SPS, 34 PPS) in an hvcC's
+      * parameter-set arrays, which start after byte 22. */
+    def hvccNal(b: Array[Byte], as: Int, ae: Int,
+        nalType: Int): Option[Array[Byte]] =
+      if (ae - as < 23) None
+      else {
+        val numArrays = b(as + 22) & 0xff
+        var p = as + 23
+        var found: Option[Array[Byte]] = None
+        var a = 0
+        while (a < numArrays && found.isEmpty && p + 3 <= ae) {
+          val t = b(p) & 0x3f
+          val n = be16(b, p + 1)
+          p += 3
+          var k = 0
+          while (k < n && found.isEmpty && p + 2 <= ae) {
+            val l = be16(b, p)
+            if (t == nalType && p + 2 + l <= ae)
+              found = Some(b.slice(p + 2, p + 2 + l))
+            p += 2 + l
+            k += 1
+          }
+          a += 1
+        }
+        found
+      }
+
     /** (offset, length) of every sample addressed by the `stsz` /
       * `stco` / `stsc` tables of one `stbl` box — the random-access
-      * map shared by the MJPEG frame sampler and the keyframe index.
-      * None when any table is missing. */
+      * map shared by the MJPEG frame sampler, the keyframe index and
+      * the frame-type walk. None when any table is missing. */
     def sampleRangesIn(b: Array[Byte], ss: Int,
         se: Int): Option[Seq[(Long, Int)]] = for {
-      (szs, _) <- firstChild(b, ss, se, "stsz")
-      (cos, _) <- firstChild(b, ss, se, "stco")
-      (scs, _) <- firstChild(b, ss, se, "stsc")
+      (szs, sze) <- firstChild(b, ss, se, "stsz")
+      (cos, coe) <- firstChild(b, ss, se, "stco")
+      (scs, sce) <- firstChild(b, ss, se, "stsc")
     } yield {
-      // an entry count at `at` whose table (right after it) would run
-      // past the blob is corrupt: throw before allocating for it
-      def count(at: Int, entryBytes: Int): Int = {
-        val n = be32(b, at).toInt
-        if (n > (b.length - at - 4) / entryBytes)
-          throw new IllegalArgumentException(s"table count $n past the end")
-        n
-      }
       // stsz: flags, uniform size (0 = per-sample table), count; a
       // uniform size has no table, so its count bounds nothing here
+      need(szs, 12, sze)
       val uniform = be32(b, szs + 4).toInt
-      val n = if (uniform != 0) be32(b, szs + 8).toInt else count(szs + 8, 4)
+      val n = if (uniform != 0) be32(b, szs + 8).toInt else count(b, szs + 8, sze, 4)
       val table =
         if (uniform != 0) Array.emptyIntArray
         else Array.tabulate(n)(i => be32(b, szs + 12 + 4 * i).toInt)
       def sizes(i: Int): Int = if (uniform != 0) uniform else table(i)
-      val nCh = count(cos + 4, 4)
+      val nCh = count(b, cos + 4, coe, 4)
       val chunkOff = Array.tabulate(nCh)(i => be32(b, cos + 8 + 4 * i))
-      val nSc = count(scs + 4, 12)
+      val nSc = count(b, scs + 4, sce, 12)
       val stsc = Array.tabulate(nSc)(i =>
         (be32(b, scs + 8 + 12 * i).toInt,   // first_chunk, 1-based
           be32(b, scs + 12 + 12 * i).toInt)) // samples_per_chunk
@@ -444,6 +585,132 @@ object Multimodal {
         c += 1
       }
       out.toSeq
+    }
+
+    /** The 1-based sync-sample numbers of an `stbl`'s `stss`; None
+      * when the table is absent, which per ISO 14496-12 §8.6.2 makes
+      * every sample a sync sample. */
+    def syncSamples(b: Array[Byte], ss: Int, se: Int): Option[Seq[Int]] =
+      firstChild(b, ss, se, "stss").map { case (sy, sye) =>
+        (0 until count(b, sy + 4, sye, 4)).map(i => be32(b, sy + 8 + 4 * i).toInt)
+      }
+
+    /** One `trex` (§8.8.3): a track's default sample duration, size
+      * and flags. */
+    case class Trex(trackId: Long, dur: Long, size: Int, sampleFlags: Int)
+    /** The `moov > mvex > trex` boxes among `boxes` that hold every
+      * default: track_ID at +4, default sample description index +8,
+      * duration +12, size +16, flags +20. */
+    def trexes(b: Array[Byte], boxes: List[(String, Int, Int)]): List[Trex] =
+      for {
+        (t, ms, me) <- boxes if t == "moov"
+        (xt, xs, xe) <- children(b, ms, me) if xt == "mvex"
+        (rt, rs, re) <- children(b, xs, xe) if rt == "trex"
+        if re - rs >= 24
+      } yield Trex(be32(b, rs + 4), be32(b, rs + 12),
+        be32(b, rs + 16).toInt, be32(b, rs + 20).toInt)
+
+    /** The `mfhd` sequence number of a `moof` payload; -1 if none. */
+    def seqNo(b: Array[Byte], ms: Int, me: Int): Int =
+      children(b, ms, me).collectFirst {
+        case ("mfhd", hs, he) if he - hs >= 8 => be32(b, hs + 4).toInt
+      }.getOrElse(-1)
+
+    /** One `tfhd` (§8.8.7): the optional fields its flags carry, in
+      * order — base_data_offset (u64), sample description index,
+      * default duration, size and flags. `baseIsMoof` is the
+      * default-base-is-moof flag. */
+    case class Tfhd(trackId: Long, base: Option[Long], dur: Option[Long],
+        size: Option[Int], sampleFlags: Option[Int], baseIsMoof: Boolean)
+    def tfhd(b: Array[Byte], hs: Int, he: Int): Tfhd = {
+      need(hs, 8, he)
+      val flags = be32(b, hs).toInt & 0xffffff
+      var p = hs + 8 // version/flags + track_ID
+      def field(flag: Int, width: Int): Option[Long] =
+        if ((flags & flag) == 0) None
+        else {
+          need(p, width, he)
+          val v = if (width == 8) (be32(b, p) << 32) | be32(b, p + 4)
+            else be32(b, p)
+          p += width
+          Some(v)
+        }
+      val base = field(0x1, 8)
+      field(0x2, 4)
+      val dur = field(0x8, 4)
+      val size = field(0x10, 4)
+      Tfhd(be32(b, hs + 4), base, dur, size.map(_.toInt),
+        field(0x20, 4).map(_.toInt), (flags & 0x020000) != 0)
+    }
+
+    /** `tfdt` baseMediaDecodeTime (§8.8.12: u32 in v0, u64 in v1);
+      * None when the box is too short for its version. */
+    def tfdt(b: Array[Byte], hs: Int, he: Int): Option[Long] =
+      if ((b(hs) & 0xff) == 0 && he - hs >= 8) Some(be32(b, hs + 4))
+      else if (he - hs >= 12) Some((be32(b, hs + 4) << 32) | be32(b, hs + 8))
+      else None
+
+    /** One `sidx` payload (§8.16.3): (timescale, earliest
+      * presentation time, references as (isChildSidx,
+      * referenced_size, subsegment_duration)); None when the box is
+      * too short for its reference table. */
+    def parseSidx(b: Array[Byte], ss: Int,
+        se: Int): Option[(Long, Long, IndexedSeq[(Boolean, Long, Long)])] =
+      if (se - ss < 24) None
+      else {
+        val v = b(ss) & 0xff
+        val timescale = be32(b, ss + 8)
+        var p = ss + 12
+        val ept =
+          if (v == 0) { val x = be32(b, p); p += 8; x }
+          else { val x = (be32(b, p) << 32) | be32(b, p + 4); p += 16; x }
+        if (p + 4 > se) None
+        else {
+          val cnt = (be32(b, p) & 0xffff).toInt
+          p += 4
+          if (cnt < 0 || se - p < cnt.toLong * 12) None
+          else Some((timescale, ept, (0 until cnt).map { i =>
+            val w = be32(b, p + 12 * i)
+            ((w & 0x80000000L) != 0, w & 0x7fffffffL, be32(b, p + 12 * i + 4))
+          }))
+        }
+      }
+
+    /** One `trun` (§8.8.8): `n` entries of `entryW` bytes from
+      * `entries`, after the optional signed data_offset and
+      * first_sample_flags. */
+    case class Trun(flags: Int, n: Int, dataOffset: Option[Int],
+        firstFlags: Option[Int], entries: Int, entryW: Int) {
+      /** Entry `k`'s field for `flag` (0x100 duration, 0x200 size,
+        * 0x400 flags, 0x800 composition offset, stored in that
+        * order); None when the run does not carry it. */
+      def field(b: Array[Byte], k: Int, flag: Int): Option[Long] =
+        if ((flags & flag) == 0) None
+        else Some(be32(b, entries + k * entryW +
+          4 * Integer.bitCount(flags & 0xf00 & (flag - 1))))
+      /** Sum of the run's sample durations, each from its entry or
+        * else `default`; throws when a sample has neither. */
+      def durSum(b: Array[Byte], default: Long): Long =
+        (0 until n).foldLeft(0L) { (sum, k) =>
+          val d = field(b, k, 0x100).getOrElse(default)
+          if (d < 0) throw new IllegalArgumentException("no duration")
+          sum + d
+        }
+    }
+    def trun(b: Array[Byte], rs: Int, re: Int): Trun = {
+      need(rs, 8, re)
+      val flags = be32(b, rs).toInt & 0xffffff
+      val n = be32(b, rs + 4).toInt
+      var p = rs + 8
+      def field(flag: Int): Option[Int] =
+        if ((flags & flag) == 0) None
+        else { need(p, 4, re); p += 4; Some(be32(b, p - 4).toInt) }
+      val dataOffset = field(0x1)
+      val firstFlags = field(0x4)
+      val entryW = 4 * Integer.bitCount(flags & 0xf00)
+      if (n < 0) throw new IllegalArgumentException("trun count")
+      need(p, n.toLong * entryW, re)
+      Trun(flags, n, dataOffset, firstFlags, p, entryW)
     }
   }
 
@@ -473,28 +740,13 @@ object Multimodal {
 
     /** (offset, length) of every sample in the first MJPEG trak, in
       * presentation order; Nil when the container has none. */
-    private[ops] def jpegSampleRanges(bytes: Array[Byte]): Seq[(Long, Int)] = {
-      import Bmff._
-      if (bytes.length < 12 || box4(bytes, 4) != "ftyp") return Nil
-      val stbls = for {
-        (t, ms, me) <- children(bytes, 0, bytes.length) if t == "moov"
-        (tt, ts, te) <- children(bytes, ms, me) if tt == "trak"
-        (mt, mds, mde) <- children(bytes, ts, te) if mt == "mdia"
-        (it, ifs, ife) <- children(bytes, mds, mde) if it == "minf"
-        (st, ss, se) <- children(bytes, ifs, ife) if st == "stbl"
-      } yield (ss, se)
-      stbls.iterator.map { case (ss, se) =>
-        val ranges = for {
-          (sds, sde) <- firstChild(bytes, ss, se, "stsd")
-          // stsd payload: ver/flags + entry_count, then the first
-          // entry's size + format fourcc
-          if sde - sds >= 16 && be32(bytes, sds + 4) >= 1 &&
-            JpegFormats(box4(bytes, sds + 12))
+    private[ops] def jpegSampleRanges(bytes: Array[Byte]): Seq[(Long, Int)] =
+      Bmff.firstTrack(bytes) { (ss, se) =>
+        (for {
+          e <- Bmff.sampleEntry(bytes, ss, se) if JpegFormats(e.fmt)
           r <- Bmff.sampleRangesIn(bytes, ss, se)
-        } yield r
-        ranges.getOrElse(Nil)
-      }.find(_.nonEmpty).getOrElse(Nil)
-    }
+        } yield r).getOrElse(Nil)
+      }
 
     /** Decode up to `maxFrames` evenly-strided frames of an MJPEG
       * track. Non-video mimes, containers without a JPEG track, and
@@ -503,7 +755,7 @@ object Multimodal {
       * the width = -1 sentinel row like every other decoder here. */
     def decodeFrames(id: Long, mime: String, bytes: Array[Byte],
         maxFrames: Int = 4): Seq[FrameFeatures] = {
-      if (mime != "video/mp4" && mime != "video/quicktime") return Nil
+      if (!Mp4Mimes(mime)) return Nil
       val ranges =
         try jpegSampleRanges(bytes) catch { case _: Exception => Nil }
       if (ranges.isEmpty) return Nil
@@ -551,87 +803,46 @@ object Multimodal {
   object Mp4KeyframeWalk {
     import Bmff._
 
-    private val AvcFormats = Set("avc1", "avc3")
-    private val HevcFormats = Set("hvc1", "hev1")
-
-    def index(id: Long, bytes: Array[Byte]): Seq[KeyframeEntry] = {
-      val len = if (bytes == null) 0 else bytes.length
-      val sentinel =
-        Seq(KeyframeEntry(id, -1, -1, -1L, -1, -1, -1, -1, ""))
-      try {
-        if (len < 12 || box4(bytes, 4) != "ftyp") return sentinel
-        val stbls = for {
-          (t, ms, me) <- children(bytes, 0, len) if t == "moov"
-          (tt, ts, te) <- children(bytes, ms, me) if tt == "trak"
-          (mt, mds, mde) <- children(bytes, ts, te) if mt == "mdia"
-          (it, ifs, ife) <- children(bytes, mds, mde) if it == "minf"
-          (st, ss, se) <- children(bytes, ifs, ife) if st == "stbl"
-        } yield (ss, se)
-        val rows = stbls.iterator.map { case (ss, se) =>
-          val r = for {
-            (sds, sde) <- firstChild(bytes, ss, se, "stsd")
-            if sde - sds >= 16 && be32(bytes, sds + 4) >= 1
-            ranges <- sampleRangesIn(bytes, ss, se)
-            if ranges.nonEmpty
+    def index(id: Long, bytes: Array[Byte]): Seq[KeyframeEntry] =
+      rowsOr(KeyframeEntry(id, -1, -1, -1L, -1, -1, -1, -1, "")) {
+        firstTrack(bytes) { (ss, se) =>
+          (for {
+            e <- sampleEntry(bytes, ss, se)
+            ranges <- sampleRangesIn(bytes, ss, se) if ranges.nonEmpty
           } yield {
-            // avcC rides inside the (Visual)SampleEntry: 8-byte entry
-            // header + 78 fixed bytes, then child boxes
-            val entryEnd = math.min(sde, sds + 8 + be32(bytes, sds + 8).toInt)
-            val fmt = box4(bytes, sds + 12)
-            val cfgStart = sds + 8 + 8 + 78
-            val (profile, level, nal) =
-              if (AvcFormats(fmt) && cfgStart < entryEnd) {
-                firstChild(bytes, cfgStart, entryEnd, "avcC") match {
-                  case Some((as, ae)) if ae - as >= 5 =>
-                    ((bytes(as + 1) & 0xff), (bytes(as + 3) & 0xff),
-                      (bytes(as + 4) & 3) + 1)
-                  case _ => (-1, -1, -1)
-                }
-              } else if (HevcFormats(fmt) && cfgStart < entryEnd) {
-                // hvcC (ISO 14496-15 §8.3.3.1): profile_idc rides the
-                // low 5 bits of byte 1 (profile_space/tier above it),
-                // level_idc is byte 12, lengthSizeMinusOne the low 2
-                // bits of byte 21
-                firstChild(bytes, cfgStart, entryEnd, "hvcC") match {
-                  case Some((as, ae)) if ae - as >= 22 =>
-                    ((bytes(as + 1) & 0x1f), (bytes(as + 12) & 0xff),
-                      (bytes(as + 21) & 3) + 1)
-                  case _ => (-1, -1, -1)
-                }
-              } else (-1, -1, -1)
+            val (profile, level, nal) = nalConfig(bytes, e)
+              .flatMap { case (hevc, as, ae) => profileLevelNal(bytes, hevc, as, ae) }
+              .getOrElse((-1, -1, -1))
             // stss absent ⇒ every sample is a sync sample (the spec's
             // all-intra rule — exactly right for MJPEG tracks too)
-            val syncs = firstChild(bytes, ss, se, "stss") match {
-              case Some((sy, sye)) =>
-                val n = be32(bytes, sy + 4).toInt
-                (0 until n).map(i => be32(bytes, sy + 8 + 4 * i).toInt)
-                  .filter(s => s >= 1 && s <= ranges.size)
-              case None => 1 to ranges.size
-            }
+            val syncs = syncSamples(bytes, ss, se)
+              .fold[Seq[Int]](1 to ranges.size)(_.filter(s => s >= 1 && s <= ranges.size))
             syncs.zipWithIndex.map { case (s, i) =>
               val (off, sz) = ranges(s - 1)
-              KeyframeEntry(id, i, s, off, sz, profile, level, nal, fmt)
+              KeyframeEntry(id, i, s, off, sz, profile, level, nal, e.fmt)
             }
-          }
-          r.getOrElse(Seq.empty)
-        }.find(_.nonEmpty).getOrElse(Seq.empty)
-        if (rows.isEmpty) sentinel else rows
-      } catch { case _: Exception => sentinel }
-    }
-  }
-
-  /** Per-partition keyframe-index extraction over a media frame —
-    * blobs never leave their arrival partition; only the narrow seek
-    * rows shuffle (the [[tarMembers]] shape). */
-  def keyframeIndex(media: DataFrame): Dataset[KeyframeEntry] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("media_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.flatMap { case (id, bytes) => Mp4KeyframeWalk.index(id, bytes) }
+          }).getOrElse(Nil)
+        }
       }
   }
+
+  /** Runs `walk` over each `(media_id, payload)` row of `media` per
+    * partition: blobs never leave their arrival partition, and only
+    * the walk's narrow rows shuffle. With `mime` the walk also gets
+    * `meta.mime`; without it, it gets null and `meta` is not scanned. */
+  private def perBlob[T <: Product : TypeTag](media: DataFrame,
+      mime: Boolean = false)(
+      walk: (Long, Array[Byte], String) => IterableOnce[T]): Dataset[T] =
+    media.select(Seq(col("media_id"), col("payload")) ++
+        (if (mime) Seq(col("meta.mime")) else Nil): _*)
+      .mapPartitions(_.flatMap(r => walk(r.getLong(0),
+        r.getAs[Array[Byte]](1), if (mime) r.getString(2) else null)))(
+        Encoders.product[T])
+
+  /** Per-partition keyframe-index extraction over a media frame
+    * ([[perBlob]]). */
+  def keyframeIndex(media: DataFrame): Dataset[KeyframeEntry] =
+    perBlob(media)((id, b, _) => Mp4KeyframeWalk.index(id, b))
 
   /** One SPS row per video track: TRUE coded dimensions, display
     * (conformance-cropped) dimensions, profile/level/chroma decoded
@@ -827,102 +1038,27 @@ object Multimodal {
   object Mp4SpsWalk {
     import Bmff._
 
-    private val AvcFormats = Set("avc1", "avc3")
-    private val HevcFormats = Set("hvc1", "hev1")
-
-    private def be16(b: Array[Byte], o: Int): Int =
-      ((b(o) & 0xff) << 8) | (b(o + 1) & 0xff)
-
-    def info(id: Long, bytes: Array[Byte]): Seq[SpsEntry] = {
-      val len = if (bytes == null) 0 else bytes.length
-      val sentinel = Seq(SpsEntry(id, "", -1, -1, -1, -1, -1, -1, -1,
-        -1, -1, dims_match = false))
-      try {
-        if (len < 12 || box4(bytes, 4) != "ftyp") return sentinel
-        val entries = for {
-          (t, ms, me) <- children(bytes, 0, len) if t == "moov"
-          (tt, ts, te) <- children(bytes, ms, me) if tt == "trak"
-          (mt, mds, mde) <- children(bytes, ts, te) if mt == "mdia"
-          (it, ifs, ife) <- children(bytes, mds, mde) if it == "minf"
-          (st, ss, se) <- children(bytes, ifs, ife) if st == "stbl"
-          (sds, sde) <- firstChild(bytes, ss, se, "stsd").toList
-          if sde - sds >= 16 && be32(bytes, sds + 4) >= 1
-        } yield (sds, sde)
-        val rows = entries.iterator.flatMap { case (sds, sde) =>
-          val entry = sds + 8
-          val entryEnd = math.min(sde, entry + be32(bytes, entry).toInt)
-          val fmt = box4(bytes, entry + 4)
-          // VisualSampleEntry: width/height at entry offsets 32/34
-          val (cw, ch) =
-            if (entryEnd - entry >= 36) (be16(bytes, entry + 32),
-              be16(bytes, entry + 34))
-            else (-1, -1)
-          val cfgStart = entry + 8 + 78
-          val sps: Option[(String, Array[Byte])] =
-            if (AvcFormats(fmt) && cfgStart < entryEnd)
-              firstChild(bytes, cfgStart, entryEnd, "avcC").flatMap {
-                case (as, ae) =>
-                  if (ae - as >= 8 && (bytes(as + 5) & 0x1f) >= 1) {
-                    val l = be16(bytes, as + 6)
-                    if (as + 8 + l <= ae)
-                      Some((fmt, bytes.slice(as + 8, as + 8 + l)))
-                    else None
-                  } else None
-              }
-            else if (HevcFormats(fmt) && cfgStart < entryEnd)
-              firstChild(bytes, cfgStart, entryEnd, "hvcC").flatMap {
-                case (as, ae) =>
-                  if (ae - as < 23) None
-                  else {
-                    val numArrays = bytes(as + 22) & 0xff
-                    var p = as + 23
-                    var found: Option[Array[Byte]] = None
-                    var a = 0
-                    while (a < numArrays && found.isEmpty && p + 3 <= ae) {
-                      val nalType = bytes(p) & 0x3f
-                      val n = be16(bytes, p + 1)
-                      p += 3
-                      var k = 0
-                      while (k < n && found.isEmpty && p + 2 <= ae) {
-                        val l = be16(bytes, p)
-                        if (nalType == 33 && p + 2 + l <= ae)
-                          found = Some(bytes.slice(p + 2, p + 2 + l))
-                        p += 2 + l
-                        k += 1
-                      }
-                      a += 1
-                    }
-                    found.map(n => (fmt, n))
-                  }
-              }
-            else None
-          sps.flatMap { case (codec, nal) =>
-            val parsed =
-              if (AvcFormats(codec)) SpsParse.parseAvc(nal)
-              else SpsParse.parseHevc(nal)
-            parsed.map { case (pr, lv, chr, cwid, chei, dw, dh) =>
-              SpsEntry(id, codec, pr, lv, chr, cwid, chei, dw, dh,
+    def info(id: Long, bytes: Array[Byte]): Seq[SpsEntry] =
+      rowsOr(SpsEntry(id, "", -1, -1, -1, -1, -1, -1, -1, -1, -1,
+          dims_match = false)) {
+        stbls(bytes, top(bytes)).flatMap { case (ss, se) =>
+          sampleEntry(bytes, ss, se).toList.flatMap { e =>
+            val (cw, ch) = e.dims(bytes)
+            nalConfig(bytes, e).flatMap { case (hevc, as, ae) =>
+              if (hevc) hvccNal(bytes, as, ae, 33).flatMap(SpsParse.parseHevc)
+              else avccSps(bytes, as, ae).flatMap(SpsParse.parseAvc)
+            }.map { case (pr, lv, chr, cwid, chei, dw, dh) =>
+              SpsEntry(id, e.fmt, pr, lv, chr, cwid, chei, dw, dh,
                 cw, ch, dims_match = cw == dw && ch == dh)
             }
           }
-        }.toSeq
-        if (rows.isEmpty) sentinel else rows
-      } catch { case _: Exception => sentinel }
-    }
-  }
-
-  /** Per-partition SPS extraction over a media frame — the
-    * [[keyframeIndex]] shape: blobs never leave their arrival
-    * partition; only the narrow dimension rows shuffle. */
-  def spsIndex(media: DataFrame): Dataset[SpsEntry] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("media_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.flatMap { case (id, bytes) => Mp4SpsWalk.info(id, bytes) }
+        }
       }
   }
+
+  /** Per-partition SPS extraction over a media frame ([[perBlob]]). */
+  def spsIndex(media: DataFrame): Dataset[SpsEntry] =
+    perBlob(media)((id, b, _) => Mp4SpsWalk.info(id, b))
 
   /** One row per SAMPLE of a video track: the frame type (I/P/B)
     * decoded from the slice header's exp-Golomb bitstream — the
@@ -1024,11 +1160,6 @@ object Multimodal {
     }
   }
 
-  /** Frame-type walk: locate the video track (the [[Mp4KeyframeWalk]]
-    * layout), read the NAL length-prefix size and parameter sets from
-    * `avcC`/`hvcC`, then walk each sample's access unit — skipping
-    * non-VCL NALs (SEI/AUD/filler) — and decode the FIRST VCL slice
-    * header. Corrupt → sentinel, never task death. */
   /** Resolved NAL-track decode config from one `stsd` box: codec
     * format, NAL length-prefix size, and the HEVC PPS-derived slice
     * layout bits — everything the per-sample slice walk needs, shared
@@ -1038,99 +1169,45 @@ object Multimodal {
 
   private[ops] object NalTrackCfg {
     import Bmff._
-    private val AvcFormats = Set("avc1", "avc3")
-    private val HevcFormats = Set("hvc1", "hev1")
-    private def be16(b: Array[Byte], o: Int): Int =
-      ((b(o) & 0xff) << 8) | (b(o + 1) & 0xff)
 
     /** From the stbl's stsd entry; None for non-NAL codecs. */
     def resolve(bytes: Array[Byte], ss: Int, se: Int): Option[NalTrackCfg] =
       for {
-        (sds, sde) <- firstChild(bytes, ss, se, "stsd")
-        if sde - sds >= 16 && be32(bytes, sds + 4) >= 1
-        entry = sds + 8
-        entryEnd = math.min(sde, entry + be32(bytes, entry).toInt)
-        fmt = box4(bytes, entry + 4)
-        cfgStart = entry + 8 + 78
-        hevc = HevcFormats(fmt)
-        if (AvcFormats(fmt) || hevc) && cfgStart < entryEnd
-        nalLen <- {
-          if (!hevc)
-            firstChild(bytes, cfgStart, entryEnd, "avcC").collect {
-              case (as, ae) if ae - as >= 5 => (bytes(as + 4) & 3) + 1
-            }
-          else
-            firstChild(bytes, cfgStart, entryEnd, "hvcC").collect {
-              case (as, ae) if ae - as >= 22 => (bytes(as + 21) & 3) + 1
-            }
-        }
+        e <- sampleEntry(bytes, ss, se)
+        (hevc, as, ae) <- nalConfig(bytes, e)
+        (_, _, nalLen) <- profileLevelNal(bytes, hevc, as, ae)
       } yield {
         // HEVC: the slice-segment header's leading-bit layout depends
         // on the PPS — pull it from the hvcC arrays
         val (dep, extra) =
           if (!hevc) (false, 0)
-          else (for {
-            (as, ae) <- firstChild(bytes, cfgStart, entryEnd, "hvcC")
-            if ae - as >= 23
-            pps <- {
-              val numArrays = bytes(as + 22) & 0xff
-              var p = as + 23
-              var found: Option[Array[Byte]] = None
-              var a = 0
-              while (a < numArrays && found.isEmpty && p + 3 <= ae) {
-                val nt = bytes(p) & 0x3f
-                val cnt = be16(bytes, p + 1)
-                p += 3
-                var k = 0
-                while (k < cnt && found.isEmpty && p + 2 <= ae) {
-                  val l = be16(bytes, p)
-                  if (nt == 34 && p + 2 + l <= ae)
-                    found = Some(bytes.slice(p + 2, p + 2 + l))
-                  p += 2 + l
-                  k += 1
-                }
-                a += 1
-              }
-              found
-            }
-            flags <- SliceParse.hevcPpsFlags(pps)
-          } yield flags).getOrElse((false, 0))
-        NalTrackCfg(fmt, hevc, nalLen, extra, dep)
+          else hvccNal(bytes, as, ae, 34).flatMap(SliceParse.hevcPpsFlags)
+            .getOrElse((false, 0))
+        NalTrackCfg(e.fmt, hevc, nalLen, extra, dep)
       }
   }
 
+  /** Frame-type walk: locate the video track (the [[Mp4KeyframeWalk]]
+    * layout), read the NAL length-prefix size and parameter sets from
+    * `avcC`/`hvcC`, then walk each sample's access unit — skipping
+    * non-VCL NALs (SEI/AUD/filler) — and decode the FIRST VCL slice
+    * header. Corrupt → sentinel, never task death. */
   object Mp4FrameTypeWalk {
     import Bmff._
 
-    def frames(id: Long, bytes: Array[Byte]): Seq[FrameTypeEntry] = {
-      val len = if (bytes == null) 0 else bytes.length
-      val sentinel = Seq(FrameTypeEntry(id, -1, "", -1, "?",
-        sync_claimed = false, is_rap = false, sync_consistent = false))
-      try {
-        if (len < 12 || box4(bytes, 4) != "ftyp") return sentinel
-        val stbls = for {
-          (t, ms, me) <- children(bytes, 0, len) if t == "moov"
-          (tt, ts, te) <- children(bytes, ms, me) if tt == "trak"
-          (mt, mds, mde) <- children(bytes, ts, te) if mt == "mdia"
-          (it, ifs, ife) <- children(bytes, mds, mde) if it == "minf"
-          (st, ss, se) <- children(bytes, ifs, ife) if st == "stbl"
-        } yield (ss, se)
-        val rows = stbls.iterator.map { case (ss, se) =>
-          val r = for {
+    def frames(id: Long, bytes: Array[Byte]): Seq[FrameTypeEntry] =
+      rowsOr(FrameTypeEntry(id, -1, "", -1, "?", sync_claimed = false,
+          is_rap = false, sync_consistent = false)) {
+        firstTrack(bytes) { (ss, se) =>
+          (for {
             cfg <- NalTrackCfg.resolve(bytes, ss, se)
-            ranges <- sampleRangesIn(bytes, ss, se)
-            if ranges.nonEmpty
+            ranges <- sampleRangesIn(bytes, ss, se) if ranges.nonEmpty
           } yield {
-            val syncSet = firstChild(bytes, ss, se, "stss") match {
-              case Some((sy, _)) =>
-                val n = be32(bytes, sy + 4).toInt
-                (0 until n).map(i => be32(bytes, sy + 8 + 4 * i).toInt)
-                  .toSet
-              case None => (1 to ranges.size).toSet
-            }
+            val syncSet = syncSamples(bytes, ss, se).map(_.toSet)
+              .getOrElse((1 to ranges.size).toSet)
             ranges.zipWithIndex.map { case ((off, sz), i) =>
               val sampleNo = i + 1
-              val end = math.min(off + sz, len.toLong).toInt
+              val end = math.min(off + sz, bytes.length.toLong).toInt
               val (nalType, frameType, rap) = SliceParse.firstVclInfo(
                 bytes, off.toInt, end, cfg.hevc, cfg.nalLen,
                 cfg.extraBits, cfg.depEnabled)
@@ -1139,27 +1216,16 @@ object Multimodal {
                 sync_claimed = claimed, is_rap = rap,
                 sync_consistent = claimed == rap)
             }
-          }
-          r.getOrElse(Seq.empty)
-        }.find(_.nonEmpty).getOrElse(Seq.empty)
-        if (rows.isEmpty) sentinel else rows
-      } catch { case _: Exception => sentinel }
-    }
-  }
-
-  /** Per-partition frame-type extraction over a media frame — the
-    * [[keyframeIndex]] shape: blobs never leave their arrival
-    * partition; only the narrow frame-type rows shuffle. At 100 TB
-    * the GOP audit is a pure map-side scan of the shard bytes. */
-  def frameTypeIndex(media: DataFrame): Dataset[FrameTypeEntry] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("media_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.flatMap { case (id, bytes) => Mp4FrameTypeWalk.frames(id, bytes) }
+          }).getOrElse(Nil)
+        }
       }
   }
+
+  /** Per-partition frame-type extraction over a media frame
+    * ([[perBlob]]). At 100 TB the GOP audit is a pure map-side scan
+    * of the shard bytes. */
+  def frameTypeIndex(media: DataFrame): Dataset[FrameTypeEntry] =
+    perBlob(media)((id, b, _) => Mp4FrameTypeWalk.frames(id, b))
 
   /** One row per SAMPLE of a FRAGMENTED MP4 (fMP4 — the DASH/CMAF
     * wire format video corpora actually ship in): fragment index,
@@ -1188,123 +1254,53 @@ object Multimodal {
   object Mp4FragmentWalk {
     import Bmff._
 
-    def index(id: Long, bytes: Array[Byte]): Seq[FragmentSample] = {
-      val len = if (bytes == null) 0 else bytes.length
-      val sentinel = Seq(FragmentSample(id, -1, -1, -1, -1L, -1,
-        sync_claimed = false, -1, "?", is_rap = false,
-        sync_consistent = false, ""))
-      try {
-        if (len < 12 || box4(bytes, 4) != "ftyp") return sentinel
-        val top = children(bytes, 0, len)
-        // decode config + trex defaults from the movie box
-        val moov = top.collectFirst { case ("moov", ms, me) => (ms, me) }
-        val cfgOpt = moov.flatMap { case (ms, me) =>
-          (for {
-            (tt, ts, te) <- children(bytes, ms, me) if tt == "trak"
-            (mt, mds, mde) <- children(bytes, ts, te) if mt == "mdia"
-            (it, ifs, ife) <- children(bytes, mds, mde) if it == "minf"
-            (st, ss, se) <- children(bytes, ifs, ife) if st == "stbl"
-            cfg <- NalTrackCfg.resolve(bytes, ss, se).toList
-          } yield cfg).headOption
-        }
-        val cfg = cfgOpt.getOrElse(return sentinel)
-        // trex (§8.8.3): version/flags, track_ID, default_sample_
-        // description_index, default_duration, default_SIZE, default_FLAGS
-        val (trexSize, trexFlags) = (for {
-          (ms, me) <- moov.toList
-          (xt, xs, xe) <- children(bytes, ms, me) if xt == "mvex"
-          (rt, rs, re) <- children(bytes, xs, xe) if rt == "trex"
-          if re - rs >= 24
-        } yield (be32(bytes, rs + 16).toInt, be32(bytes, rs + 20).toInt))
-          .headOption.getOrElse((-1, 0))
+    def index(id: Long, bytes: Array[Byte]): Seq[FragmentSample] =
+      rowsOr(FragmentSample(id, -1, -1, -1, -1L, -1, sync_claimed = false,
+          -1, "?", is_rap = false, sync_consistent = false, "")) {
+        val boxes = top(bytes)
+        // decode config + trex defaults from the first movie box
+        val moov = boxes.filter(_._1 == "moov").take(1)
+        val cfg = stbls(bytes, moov).flatMap { case (ss, se) =>
+          NalTrackCfg.resolve(bytes, ss, se) }.headOption
+          .getOrElse(throw new IllegalArgumentException("no NAL track"))
+        val (trexSize, trexFlags) =
+          trexes(bytes, moov).headOption.fold((-1, 0))(t => (t.size, t.sampleFlags))
         var fragIdx = 0
         var sampleNo = 0
         val out = scala.collection.mutable.ArrayBuffer[FragmentSample]()
-        top.foreach {
+        boxes.foreach {
           case ("moof", ms, me) =>
             val moofStart = ms - 8 // children() spans exclude the header
-            val seqNo = children(bytes, ms, me).collectFirst {
-              case ("mfhd", hs, he) if he - hs >= 8 =>
-                be32(bytes, hs + 4).toInt
-            }.getOrElse(-1)
+            val seq = seqNo(bytes, ms, me)
             // §8.8.7 default ladder across trafs: with neither an
             // explicit base-data-offset nor default-base-is-moof, the
             // moof-start default applies only to the FIRST traf —
             // every later traf defaults to the end of the previous
-            // traf's data (r16 ADVICE fix; previously moofStart was
-            // applied unconditionally, silently mis-addressing
-            // multi-track fragments without explicit offsets)
+            // traf's data
             var prevTrafEnd = moofStart.toLong
             children(bytes, ms, me).foreach {
               case ("traf", ts, te) =>
-                // tfhd (§8.8.7): flags gate the optional fields
-                val tfhd = children(bytes, ts, te).collectFirst {
-                  case ("tfhd", hs, he) => (hs, he)
-                }
-                val (baseOff, defSize, defFlags) = tfhd match {
-                  case Some((hs, _)) =>
-                    val flags = be32(bytes, hs).toInt & 0xffffff
-                    var p = hs + 8 // version/flags + track_ID
-                    val base: Long =
-                      if ((flags & 0x1) != 0) {
-                        val v = (be32(bytes, p) << 32) | be32(bytes, p + 4)
-                        p += 8
-                        v
-                      } else if ((flags & 0x020000) != 0) moofStart.toLong
-                      else prevTrafEnd // first traf: moof start;
-                                       // later trafs: previous traf end
-                    if ((flags & 0x2) != 0) p += 4  // sample_desc_index
-                    if ((flags & 0x8) != 0) p += 4  // default_duration
-                    val ds = if ((flags & 0x10) != 0) {
-                      val v = be32(bytes, p).toInt; p += 4; v
-                    } else trexSize
-                    val df = if ((flags & 0x20) != 0) {
-                      val v = be32(bytes, p).toInt; p += 4; v
-                    } else trexFlags
-                    (base, ds, df)
-                  case None => (prevTrafEnd, trexSize, trexFlags)
-                }
+                val traf = children(bytes, ts, te)
+                val h = traf.collectFirst { case ("tfhd", hs, he) => tfhd(bytes, hs, he) }
+                val baseOff = h.flatMap(_.base).getOrElse(
+                  if (h.exists(_.baseIsMoof)) moofStart.toLong else prevTrafEnd)
+                val defSize = h.flatMap(_.size).getOrElse(trexSize)
+                val defFlags = h.flatMap(_.sampleFlags).getOrElse(trexFlags)
                 var cur = -1L // running data cursor across truns
-                children(bytes, ts, te).foreach {
+                traf.foreach {
                   case ("trun", rs, re) =>
-                    val flags = be32(bytes, rs).toInt & 0xffffff
-                    val n = be32(bytes, rs + 4).toInt
-                    var p = rs + 8
-                    if ((flags & 0x1) != 0) {
-                      if (p + 4 > re)
-                        throw new IllegalArgumentException("trun header")
-                      cur = baseOff + be32(bytes, p).toInt // signed s32
-                      p += 4
-                    } else if (cur < 0) cur = baseOff
-                    val firstFlags =
-                      if ((flags & 0x4) != 0) {
-                        if (p + 4 > re)
-                          throw new IllegalArgumentException("trun header")
-                        val v = be32(bytes, p).toInt; p += 4; Some(v)
-                      } else None
-                    // per-entry width from the flags, once: a malformed
-                    // sample_count must hit the corrupt-input sentinel,
-                    // not read past the trun box into adjacent box
-                    // bytes (r16 ADVICE fix — the old `p <= re` guard
-                    // allowed up to four 4-byte reads to overrun)
-                    val entryW = (if ((flags & 0x100) != 0) 4 else 0) +
-                      (if ((flags & 0x200) != 0) 4 else 0) +
-                      (if ((flags & 0x400) != 0) 4 else 0) +
-                      (if ((flags & 0x800) != 0) 4 else 0)
-                    if (n < 0 || re - p < n.toLong * entryW)
-                      throw new IllegalArgumentException("trun overrun")
+                    val r = trun(bytes, rs, re)
+                    r.dataOffset match {
+                      case Some(d) => cur = baseOff + d
+                      case None => if (cur < 0) cur = baseOff
+                    }
                     var k = 0
-                    while (k < n) {
-                      if ((flags & 0x100) != 0) p += 4 // duration
-                      val sz = if ((flags & 0x200) != 0) {
-                        val v = be32(bytes, p).toInt; p += 4; v
-                      } else defSize
-                      val sf = if ((flags & 0x400) != 0) {
-                        val v = be32(bytes, p).toInt; p += 4; v
-                      } else if (k == 0) firstFlags.getOrElse(defFlags)
-                      else defFlags
-                      if ((flags & 0x800) != 0) p += 4 // composition offset
-                      if (sz < 0 || cur < 0 || cur + sz > len)
+                    while (k < r.n) {
+                      val sz = r.field(bytes, k, 0x200).fold(defSize)(_.toInt)
+                      val sf = r.field(bytes, k, 0x400).fold(
+                        if (k == 0) r.firstFlags.getOrElse(defFlags)
+                        else defFlags)(_.toInt)
+                      if (sz < 0 || cur < 0 || cur + sz > bytes.length)
                         throw new IllegalArgumentException("bad run")
                       sampleNo += 1
                       val claimed = (sf & 0x10000) == 0 // !non_sync
@@ -1312,7 +1308,7 @@ object Multimodal {
                         SliceParse.firstVclInfo(bytes, cur.toInt,
                           (cur + sz).toInt, cfg.hevc, cfg.nalLen,
                           cfg.extraBits, cfg.depEnabled)
-                      out += FragmentSample(id, fragIdx, seqNo, sampleNo,
+                      out += FragmentSample(id, fragIdx, seq, sampleNo,
                         cur, sz, sync_claimed = claimed, nalType,
                         frameType, is_rap = rap,
                         sync_consistent = claimed == rap, cfg.fmt)
@@ -1330,23 +1326,14 @@ object Multimodal {
             fragIdx += 1
           case _ =>
         }
-        if (out.isEmpty) sentinel else out.toSeq
-      } catch { case _: Exception => sentinel }
-    }
-  }
-
-  /** Per-partition fragment-sample extraction — the [[keyframeIndex]]
-    * shape: CMAF/DASH shard blobs never leave their arrival
-    * partition; only the narrow per-sample index rows shuffle. */
-  def fragmentIndex(media: DataFrame): Dataset[FragmentSample] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("media_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.flatMap { case (id, bytes) => Mp4FragmentWalk.index(id, bytes) }
+        out.toSeq
       }
   }
+
+  /** Per-partition fragment-sample extraction ([[perBlob]]):
+    * CMAF/DASH shard blobs never leave their arrival partition. */
+  def fragmentIndex(media: DataFrame): Dataset[FragmentSample] =
+    perBlob(media)((id, b, _) => Mp4FragmentWalk.index(id, b))
 
   /** One audited DASH/CMAF segment: the timing every ingest
     * cross-checks — the fragment's accumulated trun durations
@@ -1402,49 +1389,14 @@ object Multimodal {
   object Mp4TimelineWalk {
     import Bmff._
 
-    def index(id: Long, bytes: Array[Byte]): Seq[TimelineSegment] = {
-      val len = if (bytes == null) 0 else bytes.length
-      val sentinel = Seq(TimelineSegment(id, -1, -1, -1, -1L, -1L, -1L,
-        -1L, -1L, -1L, tfdt_consistent = false,
-        sidx_dur_consistent = false, sidx_size_consistent = false,
-        tree_dur_consistent = false, tree_size_consistent = false,
-        tree_ept_consistent = false))
-      try {
-        if (len < 12 || box4(bytes, 4) != "ftyp") return sentinel
-        val top = children(bytes, 0, len)
+    def index(id: Long, bytes: Array[Byte]): Seq[TimelineSegment] =
+      rowsOr(TimelineSegment(id, -1, -1, -1, -1L, -1L, -1L, -1L, -1L, -1L,
+          tfdt_consistent = false, sidx_dur_consistent = false,
+          sidx_size_consistent = false, tree_dur_consistent = false,
+          tree_size_consistent = false, tree_ept_consistent = false)) {
+        val top = Bmff.top(bytes)
         // trex default duration (§8.8.3) — the 'C' rung of the ladder
-        val trexDur = (for {
-          (mt, ms, me) <- top if mt == "moov"
-          (xt, xs, xe) <- children(bytes, ms, me) if xt == "mvex"
-          (rt, rs, re) <- children(bytes, xs, xe) if rt == "trex"
-          if re - rs >= 24
-        } yield be32(bytes, rs + 12)).headOption.getOrElse(-1L)
-        // one sidx box payload (§8.16.3): (timescale, ept,
-        // refs = (isChildSidx, referenced_size, subsegment_duration))
-        def parseSidx(ss: Int, se: Int)
-            : Option[(Long, Long, IndexedSeq[(Boolean, Long, Long)])] = {
-          if (se - ss < 24) None
-          else {
-            val v = bytes(ss) & 0xff
-            val timescale = be32(bytes, ss + 8)
-            var p = ss + 12
-            val ept =
-              if (v == 0) { val x = be32(bytes, p); p += 8; x }
-              else { val x = (be32(bytes, p) << 32) |
-                be32(bytes, p + 4); p += 16; x }
-            if (p + 4 > se) None
-            else {
-              val cnt = (be32(bytes, p) & 0xffff).toInt
-              p += 4
-              if (cnt < 0 || se - p < cnt.toLong * 12) None
-              else Some((timescale, ept, (0 until cnt).map { i =>
-                val w = be32(bytes, p + 12 * i)
-                ((w & 0x80000000L) != 0, w & 0x7fffffffL,
-                  be32(bytes, p + 12 * i + 4))
-              }))
-            }
-          }
-        }
+        val trexDur = trexes(bytes, top).headOption.fold(-1L)(_.dur)
         // sidx TREE (r18, verdict #3 — closes the r17 vacuous-true
         // sentinel): a hierarchical index (multi-period DASH) sets a
         // reference's top bit (type 1) to point at a CHILD sidx box
@@ -1466,7 +1418,7 @@ object Multimodal {
         val sidx: Option[(Long, Long,
             IndexedSeq[(Long, Long, Boolean, Boolean, Boolean)])] =
           sidxSpans.headOption.flatMap { case (rs, re) =>
-            parseSidx(rs, re).flatMap { case (ts0, ept0, refs0) =>
+            parseSidx(bytes, rs, re).flatMap { case (ts0, ept0, refs0) =>
               var next = 1
               var bad = false
               // claimed presentation clock: root ept + every leaf
@@ -1488,7 +1440,7 @@ object Multimodal {
                   } else {
                     val (cs, ce) = sidxSpans(next)
                     next += 1
-                    parseSidx(cs, ce) match {
+                    parseSidx(bytes, cs, ce) match {
                       case None => bad = true; IndexedSeq.empty
                       case Some((_, cept, crefs)) =>
                         // the child's ept claim vs the accumulated
@@ -1525,59 +1477,22 @@ object Multimodal {
         val out = scala.collection.mutable.ArrayBuffer[TimelineSegment]()
         top.zipWithIndex.foreach {
           case (("moof", ms, me), ti) =>
-            val seqNo = children(bytes, ms, me).collectFirst {
-              case ("mfhd", hs, he) if he - hs >= 8 =>
-                be32(bytes, hs + 4).toInt
-            }.getOrElse(-1)
+            val seq = seqNo(bytes, ms, me)
             var durSum = 0L
             var nSamples = 0
             var tfdtV = -1L
             children(bytes, ms, me).foreach {
               case ("traf", ts, te) =>
-                // tfhd: walk the flag ladder to the default duration
-                val defDur = children(bytes, ts, te).collectFirst {
-                  case ("tfhd", hs, he) =>
-                    val flags = be32(bytes, hs).toInt & 0xffffff
-                    var p = hs + 8
-                    if ((flags & 0x1) != 0) p += 8
-                    if ((flags & 0x2) != 0) p += 4
-                    if ((flags & 0x8) != 0) {
-                      if (p + 4 > he)
-                        throw new IllegalArgumentException("tfhd")
-                      be32(bytes, p)
-                    } else trexDur
+                val traf = children(bytes, ts, te)
+                val defDur = traf.collectFirst { case ("tfhd", hs, he) =>
+                  tfhd(bytes, hs, he).dur.getOrElse(trexDur)
                 }.getOrElse(trexDur)
-                children(bytes, ts, te).foreach {
-                  case ("tfdt", hs, he) =>
-                    val v = bytes(hs) & 0xff
-                    if (v == 0 && he - hs >= 8) tfdtV = be32(bytes, hs + 4)
-                    else if (he - hs >= 12)
-                      tfdtV = (be32(bytes, hs + 4) << 32) |
-                        be32(bytes, hs + 8)
+                traf.foreach {
+                  case ("tfdt", hs, he) => tfdt(bytes, hs, he).foreach(tfdtV = _)
                   case ("trun", rs, re) =>
-                    val flags = be32(bytes, rs).toInt & 0xffffff
-                    val n = be32(bytes, rs + 4).toInt
-                    var p = rs + 8
-                    if ((flags & 0x1) != 0) p += 4
-                    if ((flags & 0x4) != 0) p += 4
-                    val entryW = (if ((flags & 0x100) != 0) 4 else 0) +
-                      (if ((flags & 0x200) != 0) 4 else 0) +
-                      (if ((flags & 0x400) != 0) 4 else 0) +
-                      (if ((flags & 0x800) != 0) 4 else 0)
-                    if (n < 0 || p > re || re - p < n.toLong * entryW)
-                      throw new IllegalArgumentException("trun overrun")
-                    var k = 0
-                    while (k < n) {
-                      val d =
-                        if ((flags & 0x100) != 0) {
-                          val v = be32(bytes, p); p += entryW; v
-                        } else defDur
-                      if (d < 0)
-                        throw new IllegalArgumentException("no duration")
-                      durSum += d
-                      nSamples += 1
-                      k += 1
-                    }
+                    val r = trun(bytes, rs, re)
+                    durSum += r.durSum(bytes, defDur)
+                    nSamples += r.n
                   case _ =>
                 }
               case _ =>
@@ -1599,7 +1514,7 @@ object Multimodal {
               if (tfdtV < 0) true // no decode-time claim to audit
               else if (fragIdx == 0) sidx.isEmpty || tfdtV == ept
               else expectedTfdt < 0 || tfdtV == expectedTfdt
-            out += TimelineSegment(id, fragIdx, seqNo, nSamples, durSum,
+            out += TimelineSegment(id, fragIdx, seq, nSamples, durSum,
               tfdtV, sDur, sSize, actual, timescale,
               tfdt_consistent = tfdtOk,
               sidx_dur_consistent = sDur < 0 || sDur == durSum,
@@ -1614,9 +1529,8 @@ object Multimodal {
             fragIdx += 1
           case _ =>
         }
-        if (out.isEmpty) sentinel else out.toSeq
-      } catch { case _: Exception => sentinel }
-    }
+        out.toSeq
+      }
   }
 
   /** One per-(fragment, track) decode-time audit row — see
@@ -1647,118 +1561,56 @@ object Multimodal {
   object Mp4TrackTimelineWalk {
     import Bmff._
 
-    def index(id: Long, bytes: Array[Byte]): Seq[TrackSegment] = {
-      val len = if (bytes == null) 0 else bytes.length
-      val sentinel = Seq(TrackSegment(id, -1, -1, -1, -1, -1L, -1L,
-        tfdt_consistent = false))
-      try {
-        if (len < 12 || box4(bytes, 4) != "ftyp") return sentinel
-        val top = children(bytes, 0, len)
+    def index(id: Long, bytes: Array[Byte]): Seq[TrackSegment] =
+      rowsOr(TrackSegment(id, -1, -1, -1, -1, -1L, -1L,
+          tfdt_consistent = false)) {
+        val top = Bmff.top(bytes)
         // per-track trex defaults (§8.8.3): track_ID → default dur
-        val trexDur: Map[Long, Long] = (for {
-          (mt, ms, me) <- top if mt == "moov"
-          (xt, xs, xe) <- children(bytes, ms, me) if xt == "mvex"
-          (rt, rs, re) <- children(bytes, xs, xe) if rt == "trex"
-          if re - rs >= 24
-        } yield be32(bytes, rs + 4) -> be32(bytes, rs + 12)).toMap
+        val trexDur = trexes(bytes, top).map(t => t.trackId -> t.dur).toMap
         // per-track accumulated decode clock, seeded by first tfdt
         val expected = scala.collection.mutable.HashMap[Long, Long]()
         var fragIdx = 0
         val out = scala.collection.mutable.ArrayBuffer[TrackSegment]()
         top.foreach {
           case ("moof", ms, me) =>
-            val seqNo = children(bytes, ms, me).collectFirst {
-              case ("mfhd", hs, he) if he - hs >= 8 =>
-                be32(bytes, hs + 4).toInt
-            }.getOrElse(-1)
+            val seq = seqNo(bytes, ms, me)
             children(bytes, ms, me).foreach {
               case ("traf", ts, te) =>
-                val (trackId, defDur) = children(bytes, ts, te)
-                  .collectFirst { case ("tfhd", hs, he) =>
-                    if (he - hs < 8)
-                      throw new IllegalArgumentException("tfhd")
-                    val flags = be32(bytes, hs).toInt & 0xffffff
-                    val tid = be32(bytes, hs + 4)
-                    var p = hs + 8
-                    if ((flags & 0x1) != 0) p += 8
-                    if ((flags & 0x2) != 0) p += 4
-                    val d =
-                      if ((flags & 0x8) != 0) {
-                        if (p + 4 > he)
-                          throw new IllegalArgumentException("tfhd dur")
-                        be32(bytes, p)
-                      } else trexDur.getOrElse(tid, -1L)
-                    (tid, d)
-                  }.getOrElse(
-                    throw new IllegalArgumentException("traf w/o tfhd"))
+                val traf = children(bytes, ts, te)
+                val h = traf.collectFirst { case ("tfhd", hs, he) => tfhd(bytes, hs, he) }
+                  .getOrElse(throw new IllegalArgumentException("traf w/o tfhd"))
+                val defDur = h.dur.getOrElse(trexDur.getOrElse(h.trackId, -1L))
                 var tfdtV = -1L
                 var durSum = 0L
                 var nSamples = 0
-                children(bytes, ts, te).foreach {
-                  case ("tfdt", hs, he) =>
-                    val v = bytes(hs) & 0xff
-                    if (v == 0 && he - hs >= 8)
-                      tfdtV = be32(bytes, hs + 4)
-                    else if (he - hs >= 12)
-                      tfdtV = (be32(bytes, hs + 4) << 32) |
-                        be32(bytes, hs + 8)
+                traf.foreach {
+                  case ("tfdt", hs, he) => tfdt(bytes, hs, he).foreach(tfdtV = _)
                   case ("trun", rs, re) =>
-                    val flags = be32(bytes, rs).toInt & 0xffffff
-                    val n = be32(bytes, rs + 4).toInt
-                    var p = rs + 8
-                    if ((flags & 0x1) != 0) p += 4
-                    if ((flags & 0x4) != 0) p += 4
-                    val entryW = (if ((flags & 0x100) != 0) 4 else 0) +
-                      (if ((flags & 0x200) != 0) 4 else 0) +
-                      (if ((flags & 0x400) != 0) 4 else 0) +
-                      (if ((flags & 0x800) != 0) 4 else 0)
-                    if (n < 0 || p > re || re - p < n.toLong * entryW)
-                      throw new IllegalArgumentException("trun overrun")
-                    var k = 0
-                    while (k < n) {
-                      val d =
-                        if ((flags & 0x100) != 0) {
-                          val v = be32(bytes, p); p += entryW; v
-                        } else defDur
-                      if (d < 0)
-                        throw new IllegalArgumentException("no duration")
-                      durSum += d
-                      nSamples += 1
-                      k += 1
-                    }
+                    val r = trun(bytes, rs, re)
+                    durSum += r.durSum(bytes, defDur)
+                    nSamples += r.n
                   case _ =>
                 }
-                val exp = expected.get(trackId)
+                val exp = expected.get(h.trackId)
                 val tfdtOk =
                   if (tfdtV < 0) true // no decode-time claim to audit
                   else exp.forall(_ == tfdtV)
-                out += TrackSegment(id, fragIdx, seqNo, trackId.toInt,
+                out += TrackSegment(id, fragIdx, seq, h.trackId.toInt,
                   nSamples, durSum, tfdtV, tfdt_consistent = tfdtOk)
-                if (tfdtV >= 0) expected(trackId) = tfdtV + durSum
-                else exp.foreach(e => expected(trackId) = e + durSum)
+                if (tfdtV >= 0) expected(h.trackId) = tfdtV + durSum
+                else exp.foreach(e => expected(h.trackId) = e + durSum)
               case _ =>
             }
             fragIdx += 1
           case _ =>
         }
-        if (out.isEmpty) sentinel else out.toSeq
-      } catch { case _: Exception => sentinel }
-    }
-  }
-
-  /** Per-partition multi-track timeline audit — the [[fragmentIndex]]
-    * shape: shard blobs never leave their arrival partition; only the
-    * narrow per-traf audit rows shuffle. */
-  def trackTimelineIndex(media: DataFrame): Dataset[TrackSegment] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("media_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.flatMap { case (id, bytes) =>
-          Mp4TrackTimelineWalk.index(id, bytes) }
+        out.toSeq
       }
   }
+
+  /** Per-partition multi-track timeline audit ([[perBlob]]). */
+  def trackTimelineIndex(media: DataFrame): Dataset[TrackSegment] =
+    perBlob(media)((id, b, _) => Mp4TrackTimelineWalk.index(id, b))
 
   /** One WebM/Matroska SimpleBlock audit row: the container's
     * keyframe CLAIM (the SimpleBlock flags bit a player's seek index
@@ -2261,44 +2113,17 @@ object Multimodal {
       measured_frame_ticks: Long, default_dur_ok: Boolean,
       timescale: Long, codec: String, track_type: Int)
 
-  /** Per-partition WebM seek-index audit — the [[fragmentIndex]]
-    * shape: shard blobs never leave their arrival partition; only the
-    * narrow per-cue audit rows shuffle. */
-  def webmCuesIndex(media: DataFrame): Dataset[WebmCue] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("media_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.flatMap { case (id, bytes) => WebmWalk.cues(id, bytes) }
-      }
-  }
+  /** Per-partition WebM seek-index audit ([[perBlob]]). */
+  def webmCuesIndex(media: DataFrame): Dataset[WebmCue] =
+    perBlob(media)((id, b, _) => WebmWalk.cues(id, b))
 
-  /** Per-partition WebM block audit — the [[fragmentIndex]] shape:
-    * shard blobs never leave their arrival partition; only the
-    * narrow per-block audit rows shuffle. */
-  def webmIndex(media: DataFrame): Dataset[WebmBlock] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("media_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.flatMap { case (id, bytes) => WebmWalk.index(id, bytes) }
-      }
-  }
+  /** Per-partition WebM block audit ([[perBlob]]). */
+  def webmIndex(media: DataFrame): Dataset[WebmBlock] =
+    perBlob(media)((id, b, _) => WebmWalk.index(id, b))
 
-  /** Per-partition segment-timeline audit — the [[fragmentIndex]]
-    * shape: shard blobs never leave their arrival partition; only
-    * the narrow per-fragment audit rows shuffle. */
-  def timelineIndex(media: DataFrame): Dataset[TimelineSegment] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("media_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.flatMap { case (id, bytes) => Mp4TimelineWalk.index(id, bytes) }
-      }
-  }
+  /** Per-partition segment-timeline audit ([[perBlob]]). */
+  def timelineIndex(media: DataFrame): Dataset[TimelineSegment] =
+    perBlob(media)((id, b, _) => Mp4TimelineWalk.index(id, b))
 
   /** One resized image row: the re-encoded payload plus its true
     * output dimensions (width = -1 sentinel for non-image/corrupt
@@ -2488,71 +2313,60 @@ object Multimodal {
     * (-1, -1) with orientation 0. Same per-partition decode shape as
     * [[extractFeatures]] (JDK codec work — no Catalyst expression can
     * exist for it). */
-  def exifFeatures(media: DataFrame): Dataset[ExifMeta] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("media_id"), col("payload"), col("meta.mime"))
-      .as[(Long, Array[Byte], String)]
-      .mapPartitions { rows =>
-        rows.map { case (id, bytes, mime) =>
-          // null payload must hit the sentinel, not NPE the partition
-          // (the module's corrupt-blob rule)
-          val len = if (bytes == null) 0L else bytes.length.toLong
-          val img =
-            if (bytes == null || mime == null || !mime.startsWith("image/"))
-              null
-            else try javax.imageio.ImageIO.read(
-              new java.io.ByteArrayInputStream(bytes))
-            catch { case _: Exception => null }
-          if (img == null) ExifMeta(id, len, 0, -1, -1)
-          else {
-            val o = Exif.orientation(bytes)
-            val swap = o >= 5 && o <= 8
-            ExifMeta(id, bytes.length.toLong, o,
-              if (swap) img.getHeight else img.getWidth,
-              if (swap) img.getWidth else img.getHeight)
-          }
-        }
+  def exifFeatures(media: DataFrame): Dataset[ExifMeta] =
+    perBlob(media, mime = true) { (id, bytes, mime) =>
+      // null payload must hit the sentinel, not NPE the partition
+      // (the module's corrupt-blob rule)
+      val len = if (bytes == null) 0L else bytes.length.toLong
+      val img =
+        if (bytes == null || mime == null || !mime.startsWith("image/"))
+          null
+        else try javax.imageio.ImageIO.read(
+          new java.io.ByteArrayInputStream(bytes))
+        catch { case _: Exception => null }
+      if (img == null) Some(ExifMeta(id, len, 0, -1, -1))
+      else {
+        val o = Exif.orientation(bytes)
+        val swap = o >= 5 && o <= 8
+        Some(ExifMeta(id, bytes.length.toLong, o,
+          if (swap) img.getHeight else img.getWidth,
+          if (swap) img.getWidth else img.getHeight))
       }
-  }
+    }
 
   def resizeImages(media: DataFrame, maxDim: Int = 256): Dataset[ResizedMedia] = {
     require(maxDim > 0, "maxDim must be positive")
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("media_id"), col("payload"), col("meta.mime"))
-      .as[(Long, Array[Byte], String)]
-      .mapPartitions { rows =>
-        rows.map { case (id, bytes, mime) =>
-          val img =
-            if (mime == null || !mime.startsWith("image/")) null
-            else try javax.imageio.ImageIO.read(
-              new java.io.ByteArrayInputStream(bytes))
-            catch { case _: Exception => null }
-          if (img == null) ResizedMedia(id, mime, -1, -1, bytes)
-          else {
-            // viewer-correct pipeline: honor the EXIF orientation tag
-            // BEFORE resizing (a rotated capture otherwise ships
-            // sideways thumbnails with swapped aspect)
-            val oriented = applyOrientation(img, Exif.orientation(bytes))
-            val (w, h) = (oriented.getWidth, oriented.getHeight)
-            val scale = math.min(1.0, maxDim.toDouble / math.max(w, h))
-            val nw = math.max(1, math.round(w * scale).toInt)
-            val nh = math.max(1, math.round(h * scale).toInt)
-            val out = new java.awt.image.BufferedImage(nw, nh,
-              java.awt.image.BufferedImage.TYPE_INT_RGB)
-            val g = out.createGraphics()
-            g.setRenderingHint(
-              java.awt.RenderingHints.KEY_INTERPOLATION,
-              java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-            g.drawImage(oriented, 0, 0, nw, nh, null)
-            g.dispose()
-            val bos = new java.io.ByteArrayOutputStream()
-            javax.imageio.ImageIO.write(out, "png", bos)
-            ResizedMedia(id, mime, nw, nh, bos.toByteArray)
-          }
+    perBlob(media, mime = true) { (id, bytes, mime) =>
+      Some {
+        val img =
+          if (mime == null || !mime.startsWith("image/")) null
+          else try javax.imageio.ImageIO.read(
+            new java.io.ByteArrayInputStream(bytes))
+          catch { case _: Exception => null }
+        if (img == null) ResizedMedia(id, mime, -1, -1, bytes)
+        else {
+          // viewer-correct pipeline: honor the EXIF orientation tag
+          // BEFORE resizing (a rotated capture otherwise ships
+          // sideways thumbnails with swapped aspect)
+          val oriented = applyOrientation(img, Exif.orientation(bytes))
+          val (w, h) = (oriented.getWidth, oriented.getHeight)
+          val scale = math.min(1.0, maxDim.toDouble / math.max(w, h))
+          val nw = math.max(1, math.round(w * scale).toInt)
+          val nh = math.max(1, math.round(h * scale).toInt)
+          val out = new java.awt.image.BufferedImage(nw, nh,
+            java.awt.image.BufferedImage.TYPE_INT_RGB)
+          val g = out.createGraphics()
+          g.setRenderingHint(
+            java.awt.RenderingHints.KEY_INTERPOLATION,
+            java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
+          g.drawImage(oriented, 0, 0, nw, nh, null)
+          g.dispose()
+          val bos = new java.io.ByteArrayOutputStream()
+          javax.imageio.ImageIO.write(out, "png", bos)
+          ResizedMedia(id, mime, nw, nh, bos.toByteArray)
         }
       }
+    }
   }
 
   case class AudioSpectrum(
@@ -2614,80 +2428,74 @@ object Multimodal {
     * [[imageDHashes]]. */
   def audioSpectra(media: DataFrame, fftSize: Int = 4096): Dataset[AudioSpectrum] = {
     require(fftSize >= 64 && (fftSize & (fftSize - 1)) == 0)
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("media_id"), col("payload"), col("meta.mime"))
-      .as[(Long, Array[Byte], String)]
-      .mapPartitions { rows =>
-        rows.flatMap { case (id, bytes, mime) =>
-          if (mime == null || !mime.contains("wav")) None
-          else try {
-            val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
-              new java.io.ByteArrayInputStream(bytes))
-            val fmt = ais.getFormat
-            if (fmt.getSampleSizeInBits != 16) None
-            else {
-              val rate = fmt.getSampleRate.toInt
-              val ch = fmt.getChannels
-              val frameBytes = 2 * ch
-              val buf = new Array[Byte](fftSize * frameBytes)
-              var off = 0
-              var r = 0
-              while (off < buf.length && r >= 0) {
-                r = ais.read(buf, off, buf.length - off)
-                if (r > 0) off += r
-              }
-              val nFrames = off / frameBytes
-              val re = new Array[Double](fftSize)
-              val im = new Array[Double](fftSize)
-              val le = fmt.isBigEndian == false
-              var k = 0
-              while (k < nFrames) {
-                val b0 = buf(k * frameBytes) & 0xff
-                val b1 = buf(k * frameBytes + 1) & 0xff
-                val s = (if (le) (b1 << 8) | b0 else (b0 << 8) | b1).toShort
-                // Hann window: kills the rectangular-window leakage
-                // that would smear a pure tone across every bin
-                val w = 0.5 * (1 - math.cos(2 * math.Pi * k / (fftSize - 1)))
-                re(k) = s / 32768.0 * w
-                k += 1
-              }
-              fft(re, im)
-              val bins = fftSize / 2
-              val mags = new Array[Double](bins)
-              var num = 0.0
-              var den = 0.0
-              var bi = 0
-              while (bi < bins) {
-                mags(bi) = math.sqrt(re(bi) * re(bi) + im(bi) * im(bi))
-                num += (bi.toDouble * rate / fftSize) * mags(bi)
-                den += mags(bi)
-                bi += 1
-              }
-              val bands = new Array[Float](8)
-              var total = 0.0
-              // exact floor(log2): the double-division form can land
-              // just below the integer at exact powers of two and
-              // truncate to k-1, shifting energy across a band edge
-              def log2floor(v: Int): Int =
-                31 - java.lang.Integer.numberOfLeadingZeros(v)
-              bi = 1 // skip DC
-              while (bi < bins) {
-                // octave bands: band = floor(log2(bin)) clamped to 8
-                val b = math.min(7,
-                  log2floor(bi) * 8 / log2floor(bins))
-                bands(b) = bands(b) + (mags(bi) * mags(bi)).toFloat
-                total += mags(bi) * mags(bi)
-                bi += 1
-              }
-              if (total > 0) { var q = 0; while (q < 8) {
-                bands(q) = (bands(q) / total).toFloat; q += 1 } }
-              Some(AudioSpectrum(id, rate, nFrames.toLong,
-                if (den > 0) num / den else 0.0, bands))
-            }
-          } catch { case _: Exception => None }
+    perBlob(media, mime = true) { (id, bytes, mime) =>
+      if (mime == null || !mime.contains("wav")) None
+      else try {
+        val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
+          new java.io.ByteArrayInputStream(bytes))
+        val fmt = ais.getFormat
+        if (fmt.getSampleSizeInBits != 16) None
+        else {
+          val rate = fmt.getSampleRate.toInt
+          val ch = fmt.getChannels
+          val frameBytes = 2 * ch
+          val buf = new Array[Byte](fftSize * frameBytes)
+          var off = 0
+          var r = 0
+          while (off < buf.length && r >= 0) {
+            r = ais.read(buf, off, buf.length - off)
+            if (r > 0) off += r
+          }
+          val nFrames = off / frameBytes
+          val re = new Array[Double](fftSize)
+          val im = new Array[Double](fftSize)
+          val le = fmt.isBigEndian == false
+          var k = 0
+          while (k < nFrames) {
+            val b0 = buf(k * frameBytes) & 0xff
+            val b1 = buf(k * frameBytes + 1) & 0xff
+            val s = (if (le) (b1 << 8) | b0 else (b0 << 8) | b1).toShort
+            // Hann window: kills the rectangular-window leakage
+            // that would smear a pure tone across every bin
+            val w = 0.5 * (1 - math.cos(2 * math.Pi * k / (fftSize - 1)))
+            re(k) = s / 32768.0 * w
+            k += 1
+          }
+          fft(re, im)
+          val bins = fftSize / 2
+          val mags = new Array[Double](bins)
+          var num = 0.0
+          var den = 0.0
+          var bi = 0
+          while (bi < bins) {
+            mags(bi) = math.sqrt(re(bi) * re(bi) + im(bi) * im(bi))
+            num += (bi.toDouble * rate / fftSize) * mags(bi)
+            den += mags(bi)
+            bi += 1
+          }
+          val bands = new Array[Float](8)
+          var total = 0.0
+          // exact floor(log2): the double-division form can land
+          // just below the integer at exact powers of two and
+          // truncate to k-1, shifting energy across a band edge
+          def log2floor(v: Int): Int =
+            31 - java.lang.Integer.numberOfLeadingZeros(v)
+          bi = 1 // skip DC
+          while (bi < bins) {
+            // octave bands: band = floor(log2(bin)) clamped to 8
+            val b = math.min(7,
+              log2floor(bi) * 8 / log2floor(bins))
+            bands(b) = bands(b) + (mags(bi) * mags(bi)).toFloat
+            total += mags(bi) * mags(bi)
+            bi += 1
+          }
+          if (total > 0) { var q = 0; while (q < 8) {
+            bands(q) = (bands(q) / total).toFloat; q += 1 } }
+          Some(AudioSpectrum(id, rate, nFrames.toLong,
+            if (den > 0) num / den else 0.0, bands))
         }
-      }
+      } catch { case _: Exception => None }
+    }
   }
 
   /** Perceptual difference hash (dHash): bilinear-scale to 9×8
@@ -3120,82 +2928,46 @@ object Multimodal {
     * anyway — gzip is not random-accessible). Corrupt/over-cap
     * envelopes yield the sentinel row. */
   def tgzMembers(media: DataFrame,
-      inflateCap: Int = 1 << 26): Dataset[TarMember] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("media_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.flatMap { case (id, bytes) =>
-          val inner = if (bytes == null) null else gunzipCapped(bytes, inflateCap)
-          if (inner == null)
-            Seq(TarMember(id, -1, "",
-              (if (bytes == null) 0 else bytes.length).toLong, -1L))
-          else TarWalk.members(id, inner)
-        }
-      }
-  }
+      inflateCap: Int = 1 << 26): Dataset[TarMember] =
+    perBlob(media) { (id, bytes, _) =>
+      val inner = if (bytes == null) null else gunzipCapped(bytes, inflateCap)
+      if (inner == null)
+        Seq(TarMember(id, -1, "",
+          (if (bytes == null) 0 else bytes.length).toLong, -1L))
+      else TarWalk.members(id, inner)
+    }
 
   /** Per-partition ZIP central-directory enumeration over a media
     * frame — blobs stay put, only narrow member rows shuffle. */
-  def zipMembers(media: DataFrame): Dataset[ZipMember] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("media_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.flatMap { case (id, bytes) => ZipWalk.members(id, bytes) }
-      }
-  }
+  def zipMembers(media: DataFrame): Dataset[ZipMember] =
+    perBlob(media)((id, b, _) => ZipWalk.members(id, b))
 
   /** Per-partition ustar member enumeration over a media frame — blobs
     * never leave their arrival partition; only the narrow member index
     * rows (name, size, offset) shuffle. */
-  def tarMembers(media: DataFrame): Dataset[TarMember] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("media_id"), col("payload"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { rows =>
-        rows.flatMap { case (id, bytes) => TarWalk.members(id, bytes) }
-      }
-  }
+  def tarMembers(media: DataFrame): Dataset[TarMember] =
+    perBlob(media)((id, b, _) => TarWalk.members(id, b))
 
   /** Per-partition animated-GIF metadata over a media frame — blobs
     * never leave their arrival partition (the [[extractFeatures]]
     * contract); non-GIF mimes fall out as sentinels without touching
     * payload bytes. */
-  def gifAnimations(media: DataFrame): Dataset[GifAnimMeta] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("media_id"), col("payload"), col("meta.mime"))
-      .as[(Long, Array[Byte], String)]
-      .mapPartitions { rows =>
-        rows.map { case (id, bytes, mime) =>
-          if (mime == "image/gif") GifAnim.meta(id, bytes)
-          else GifAnimMeta(id,
-            (if (bytes == null) 0 else bytes.length).toLong,
-            -1, -1, 0, 0L, -1)
-        }
-      }
-  }
+  def gifAnimations(media: DataFrame): Dataset[GifAnimMeta] =
+    perBlob(media, mime = true) { (id, bytes, mime) =>
+      if (mime == "image/gif") Some(GifAnim.meta(id, bytes))
+      else Some(GifAnimMeta(id,
+        (if (bytes == null) 0 else bytes.length).toLong, -1, -1, 0, 0L, -1))
+    }
 
-  def imageDHashes(media: DataFrame): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("media_id"), col("payload"), col("meta.mime"))
-      .as[(Long, Array[Byte], String)]
-      .mapPartitions { rows =>
-        rows.flatMap { case (id, bytes, mime) =>
-          val img =
-            if (mime == null || !mime.startsWith("image/")) null
-            else try javax.imageio.ImageIO.read(
-              new java.io.ByteArrayInputStream(bytes))
-            catch { case _: Exception => null }
-          if (img == null) None else Some((id, dhashOf(img)))
-        }
-      }.toDF("media_id", "dhash")
-  }
+  def imageDHashes(media: DataFrame): DataFrame =
+    perBlob(media, mime = true) { (id, bytes, mime) =>
+      val img =
+        if (mime == null || !mime.startsWith("image/")) null
+        else try javax.imageio.ImageIO.read(
+          new java.io.ByteArrayInputStream(bytes))
+        catch { case _: Exception => null }
+      if (img == null) None else Some((id, dhashOf(img)))
+    }.toDF("media_id", "dhash")
 
   /** Image near-dup pairs within `maxHamming` dHash bits — rides the
     * SAME exact-recall pigeonhole chunk buckets as text SimHash
@@ -3211,17 +2983,9 @@ object Multimodal {
     * of [[extractFeatures]]: blobs stay in their partition, each task
     * walks its containers once and emits narrow per-frame feature rows
     * (media_id, frame_idx, dims, luminance histogram). */
-  def sampleFrames(media: DataFrame, maxFrames: Int = 4): Dataset[FrameFeatures] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("media_id"), col("payload"), col("meta.mime"))
-      .as[(Long, Array[Byte], String)]
-      .mapPartitions { rows =>
-        rows.flatMap { case (id, bytes, mime) =>
-          Mp4FrameSampler.decodeFrames(id, mime, bytes, maxFrames)
-        }
-      }
-  }
+  def sampleFrames(media: DataFrame, maxFrames: Int = 4): Dataset[FrameFeatures] =
+    perBlob(media, mime = true)((id, b, mime) =>
+      Mp4FrameSampler.decodeFrames(id, mime, b, maxFrames))
 
   /** Production dispatch decoder: real JDK decode where the platform
     * provides it (images → [[ImageIoDecoder]], WAV audio →
@@ -3278,14 +3042,6 @@ object Multimodal {
 
   /** Per-partition decode → typed features. One decoder per task. */
   def extractFeatures(media: DataFrame,
-      decoder: MediaDecoder = DeterministicFakeDecoder): Dataset[MediaFeatures] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("media_id"), col("payload"), col("meta.mime"))
-      .as[(Long, Array[Byte], String)]
-      .mapPartitions { rows =>
-        val d = decoder // one instance per partition/task
-        rows.map { case (id, bytes, mime) => d.decode(id, mime, bytes) }
-      }
-  }
+      decoder: MediaDecoder = DeterministicFakeDecoder): Dataset[MediaFeatures] =
+    perBlob(media, mime = true)((id, b, mime) => Some(decoder.decode(id, mime, b)))
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset}
 import graft.ops.Multimodal
 
 /** Streaming media metadata extraction — the ingest half of the
@@ -26,11 +26,18 @@ import graft.ops.Multimodal
   */
 object StreamingMedia {
 
+  /** The shared `foreachBatch` body: `rows` of each micro-batch
+    * overwrite that batch's own `batch_id=<id>` partition under
+    * `path`, so a checkpoint replay rewrites identical rows. */
+  private def appender(path: String)(
+      rows: DataFrame => Dataset[_]): (DataFrame, Long) => Unit =
+    (batch: DataFrame, batchId: Long) =>
+      rows(batch).toDF().write.mode("overwrite")
+        .parquet(s"$path/batch_id=$batchId")
+
   /** `foreachBatch` body decoding each micro-batch of media rows. */
   def metaAppender(metaPath: String): (DataFrame, Long) => Unit =
-    (batch: DataFrame, batchId: Long) =>
-      Multimodal.extractFeatures(batch, Multimodal.JdkMediaDecoder)
-        .write.mode("overwrite").parquet(s"$metaPath/batch_id=$batchId")
+    appender(metaPath)(Multimodal.extractFeatures(_, Multimodal.JdkMediaDecoder))
 
   /** `foreachBatch` body building the keyframe SEEK INDEX per
     * micro-batch ([[graft.ops.Multimodal.keyframeIndex]] — `stss` +
@@ -40,9 +47,7 @@ object StreamingMedia {
     * [[metaAppender]] (the walk is a pure function of payload bytes,
     * so checkpoint replay rewrites identical rows). */
   def keyframeAppender(indexPath: String): (DataFrame, Long) => Unit =
-    (batch: DataFrame, batchId: Long) =>
-      Multimodal.keyframeIndex(batch).toDF()
-        .write.mode("overwrite").parquet(s"$indexPath/batch_id=$batchId")
+    appender(indexPath)(Multimodal.keyframeIndex)
 
   /** `foreachBatch` body extracting TRUE coded dimensions per
     * micro-batch ([[graft.ops.Multimodal.spsIndex]] — the SPS NAL's
@@ -50,9 +55,7 @@ object StreamingMedia {
     * `dims_match` gate lands in the metadata store incrementally,
     * same stateless exactly-once layout as [[metaAppender]]. */
   def spsAppender(indexPath: String): (DataFrame, Long) => Unit =
-    (batch: DataFrame, batchId: Long) =>
-      Multimodal.spsIndex(batch).toDF()
-        .write.mode("overwrite").parquet(s"$indexPath/batch_id=$batchId")
+    appender(indexPath)(Multimodal.spsIndex)
 
   /** `foreachBatch` body decoding per-sample FRAME TYPES per
     * micro-batch ([[graft.ops.Multimodal.frameTypeIndex]] — slice
@@ -61,9 +64,7 @@ object StreamingMedia {
     * store incrementally, same stateless exactly-once layout as
     * [[metaAppender]]. */
   def frameTypeAppender(indexPath: String): (DataFrame, Long) => Unit =
-    (batch: DataFrame, batchId: Long) =>
-      Multimodal.frameTypeIndex(batch).toDF()
-        .write.mode("overwrite").parquet(s"$indexPath/batch_id=$batchId")
+    appender(indexPath)(Multimodal.frameTypeIndex)
 
   /** `foreachBatch` body walking FRAGMENTED MP4s per micro-batch
     * ([[graft.ops.Multimodal.fragmentIndex]] — tfhd/trun sample
@@ -71,9 +72,7 @@ object StreamingMedia {
     * the metadata store as they arrive, same stateless exactly-once
     * layout as [[metaAppender]]. */
   def fragmentAppender(indexPath: String): (DataFrame, Long) => Unit =
-    (batch: DataFrame, batchId: Long) =>
-      Multimodal.fragmentIndex(batch).toDF()
-        .write.mode("overwrite").parquet(s"$indexPath/batch_id=$batchId")
+    appender(indexPath)(Multimodal.fragmentIndex)
 
   /** `foreachBatch` body auditing DASH/CMAF SEGMENT TIMELINES per
     * micro-batch ([[graft.ops.Multimodal.timelineIndex]] — sidx/tfdt
@@ -81,9 +80,7 @@ object StreamingMedia {
     * timeline lie" gate lands incrementally as shards arrive, same
     * stateless exactly-once layout as [[metaAppender]]. */
   def timelineAppender(indexPath: String): (DataFrame, Long) => Unit =
-    (batch: DataFrame, batchId: Long) =>
-      Multimodal.timelineIndex(batch).toDF()
-        .write.mode("overwrite").parquet(s"$indexPath/batch_id=$batchId")
+    appender(indexPath)(Multimodal.timelineIndex)
 
   /** `foreachBatch` body auditing MUXED MULTI-TRACK fMP4 decode
     * clocks per micro-batch ([[graft.ops.Multimodal
@@ -91,25 +88,19 @@ object StreamingMedia {
     * durations, r18): same stateless exactly-once layout as
     * [[metaAppender]]. */
   def trackTimelineAppender(indexPath: String): (DataFrame, Long) => Unit =
-    (batch: DataFrame, batchId: Long) =>
-      Multimodal.trackTimelineIndex(batch).toDF()
-        .write.mode("overwrite").parquet(s"$indexPath/batch_id=$batchId")
+    appender(indexPath)(Multimodal.trackTimelineIndex)
 
   /** `foreachBatch` body auditing WebM/Matroska SimpleBlocks per
     * micro-batch ([[graft.ops.Multimodal.webmIndex]] — EBML walk +
     * VP9 keyframe-claim cross-check, r16): same stateless
     * exactly-once layout as [[metaAppender]]. */
   def webmAppender(indexPath: String): (DataFrame, Long) => Unit =
-    (batch: DataFrame, batchId: Long) =>
-      Multimodal.webmIndex(batch).toDF()
-        .write.mode("overwrite").parquet(s"$indexPath/batch_id=$batchId")
+    appender(indexPath)(Multimodal.webmIndex)
 
   /** `foreachBatch` body auditing WebM SEEK TABLES per micro-batch
     * ([[graft.ops.Multimodal.webmCuesIndex]] — Cues/CuePoint claims
     * vs actual cluster layout + DefaultDuration vs measured cadence,
     * r18): same stateless exactly-once layout as [[metaAppender]]. */
   def webmCuesAppender(indexPath: String): (DataFrame, Long) => Unit =
-    (batch: DataFrame, batchId: Long) =>
-      Multimodal.webmCuesIndex(batch).toDF()
-        .write.mode("overwrite").parquet(s"$indexPath/batch_id=$batchId")
+    appender(indexPath)(Multimodal.webmCuesIndex)
 }

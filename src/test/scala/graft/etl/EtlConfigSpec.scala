@@ -101,6 +101,12 @@ class EtlConfigSpec extends TempDirs {
     assert(err.contains("sink_backoff_jitter_pct should be between 0.0 and 1.0, got: 1.50"))
     assert(err.contains("DLQ path with s3:// scheme is not supported: s3://bucket/x"))
     assert(err.contains("""invalid log_level "loud": must be debug, info, warn, or error"""))
+    for (scheme <- Seq("s3a", "s3n")) {
+      val Left(e) = EtlConfig.validate(EtlConfig.default.copy(
+        dlqPath = s"$scheme://bucket/dlq.jsonl")): @unchecked
+      assert(e.contains(
+        s"DLQ path with $scheme:// scheme is not supported: $scheme://bucket/dlq.jsonl"))
+    }
   }
 
   test("validation: output path required for file/rotate") {

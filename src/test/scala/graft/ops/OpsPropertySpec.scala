@@ -323,14 +323,14 @@ class OpsPropertySpec extends SparkSpec {
       v
     }
     // sample tables whose entry count claims ~2^31 entries (stsz with a
-    // per-sample table and with a uniform size, stco, stsc): a walk
-    // must fail on the count, not allocate for it. Fields are u32s at
-    // byte offsets from the box type: stsz uniform +8, count +12;
-    // stco/stsc count +8.
+    // per-sample table and with a uniform size, stco, stsc, stss), and
+    // an stss count one entry past its box (slot 0 plants two sync
+    // samples, and the mdat header follows the stss): a walk must fail
+    // on the count, not allocate for it or read the next box's bytes
+    // as entries. Fields are u32s at byte offsets from the box type:
+    // stsz uniform +8, count +12; stco/stsc/stss count +8.
     val huge = 0x7fffffffL
-    val hugeCounts = Seq(Seq("stsz" -> (12, huge)),
-        Seq("stsz" -> (8, 1L), "stsz" -> (12, huge)),
-        Seq("stco" -> (8, huge)), Seq("stsc" -> (8, huge))).map { fields =>
+    def planted(fields: (String, (Int, Long))*): Array[Byte] = {
       val b = MediaFixtures.plantedAvcMp4(0).clone()
       fields.foreach { case (box, (off, v)) =>
         val at = new String(b, "ISO-8859-1").indexOf(box) + off
@@ -338,8 +338,19 @@ class OpsPropertySpec extends SparkSpec {
       }
       b
     }
+    val pastBox = Seq(planted("stsz" -> (12, huge)),
+      planted("stco" -> (8, huge)), planted("stsc" -> (8, huge)),
+      planted("stss" -> (8, huge)), planted("stss" -> (8, 3L)))
+    // a uniform stsz size has no table, so its count runs past nothing
+    val hugeCounts = planted("stsz" -> (8, 1L), "stsz" -> (12, huge)) +: pastBox
     val inputs = randoms ++ truncated ++ corrupted ++ hugeCounts ++
       Seq(Array.empty[Byte], Array[Byte](0xff.toByte, 0xd8.toByte))
+    pastBox.zipWithIndex.foreach { case (b, i) =>
+      assert(Multimodal.Mp4KeyframeWalk.index(1L, b).map(_.kf_idx) == Seq(-1),
+        s"past-box count $i: keyframe rows instead of the sentinel")
+      assert(Multimodal.Mp4FrameTypeWalk.frames(1L, b).map(_.sample_no) == Seq(-1),
+        s"past-box count $i: frame-type rows instead of the sentinel")
+    }
     inputs.zipWithIndex.foreach { case (b, i) =>
       val o = Multimodal.Exif.orientation(b)
       assert(o >= 0 && o <= 8, s"input $i: orientation $o out of range")
