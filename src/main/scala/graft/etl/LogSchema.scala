@@ -16,7 +16,7 @@ import org.apache.spark.sql.types._
   *     be reproduced at the sink — see [[expressions.Rfc3339Parse]].
   *   - `Fields` is `map[string]any` in Go; here it is
   *     `MapType(String, String)` where non-string JSON values keep their
-  *     raw JSON text ("200", "true", "{\"a\":1}"). [[Sinks.recordJson]]
+  *     raw JSON text ("200", "true", "{\"a\":1}"). [[expressions.RenderRecord]]
   *     re-renders them as typed JSON, which round-trips everything except
   *     a string that itself looks like a JSON literal (documented delta).
   */

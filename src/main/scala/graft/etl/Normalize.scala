@@ -7,9 +7,12 @@ import org.apache.spark.sql.types._
 /** The normalize operator: dynamic raw JSONL → fixed normalized schema.
   *
   * Re-expresses `/root/reference/internal/stages/normalize.go:11-206` as
-  * pure Catalyst column expressions (whole-stage-codegen friendly, no
-  * UDFs), so Catalyst is free to prune/pipe/pushdown around it and the
-  * same expressions serve batch and Structured Streaming unchanged.
+  * Catalyst expressions (whole-stage-codegen friendly, no UDFs), so
+  * Catalyst is free to prune/pipe/pushdown around it and the same
+  * expressions serve batch and Structured Streaming unchanged. Each
+  * line is parsed ONCE, by the codegen kernel
+  * [[expressions.ParseLogLine]]; alias, trim, RFC3339 and error columns
+  * are column expressions over its struct.
   *
   * Semantics reproduced exactly:
   *   - alias fallback on *empty-after-trim* (not merely absent) for
@@ -43,6 +46,12 @@ object Normalize {
     * chain (`if out.X == "" { try alias }`). */
   private def firstNonEmpty(cs: Column*): Column = coalesce(cs.map(nonEmpty): _*)
 
+  /** Bridge a catalyst Expression into the public Column API. */
+  private def exprCol(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =
+    org.apache.spark.sql.graft.Bridge.column(e)
+  private def toExpr(c: Column) =
+    org.apache.spark.sql.graft.Bridge.expression(c)
+
   /** Normalize a DataFrame holding raw JSONL in `lineCol`.
     *
     * Output columns: the full [[LogSchema.NormalizedSchema]] plus
@@ -56,67 +65,49 @@ object Normalize {
     * them before counting, `cmd/etl/main.go:354-356`); [[parseLines]]
     * does this.
     */
-  /** Bridge a catalyst Expression into the public Column API. */
-  private def exprCol(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =
-    org.apache.spark.sql.graft.Bridge.column(e)
-  private def toExpr(c: Column) =
-    org.apache.spark.sql.graft.Bridge.expression(c)
-
   def normalize(df: DataFrame, lineCol: String = "line"): DataFrame = {
-    val line = col(lineCol)
-    // ONE full JSON parse per line via the custom codegen-capable
-    // [[expressions.JsonToStringMap]] (built-in from_json is
-    // CodegenFallback: one occurrence disables whole-stage codegen for
-    // the projection — measured ~4x on this path). Canonical fields come
-    // from map lookups — JSON scalars arrive as their raw text, matching
-    // the struct-parse coercion — and only the small nested `kubernetes`
-    // object (when present) pays a second, tiny parse.
-    val rawMap = exprCol(expressions.JsonToStringMap(toExpr(line)))
-
-    val withRaw = df.withColumn("_m", rawMap)
-
-    val m = col("_m")
-    // try_element_at: null (not ANSI error) when the key is absent
-    def f(key: String): Column = try_element_at(m, lit(key))
-    val k8sm = exprCol(expressions.JsonToStringMap(toExpr(f("kubernetes"))))
-    object k8s {
-      def getField(name: String): Column =
-        try_element_at(col("_k8s"), lit(name))
-    }
+    // ONE JSON parse per line, from the line's UTF-8 bytes, by the
+    // codegen kernel [[expressions.ParseLogLine]]: a struct of the
+    // canonical keys' slots, the three `kubernetes` fields and the
+    // residual `fields` map — null when the line is not a JSON object.
+    // JSON scalars arrive as their raw text (the struct-parse
+    // coercion). Built-in from_json is CodegenFallback: one occurrence
+    // disables whole-stage codegen for the projection (measured ~4x).
+    val parsed = df.withColumn("_p",
+      exprCol(expressions.ParseLogLine(toExpr(col(lineCol)))))
+    def f(key: String): Column = col("_p").getField(key)
 
     // PERFORMANCE SHAPE (measured, see git history): whole-stage-codegen
     // subexpression elimination does NOT apply inside CASE WHEN branches,
     // so shared subtrees must be hoisted into their own projection layer
     // as real attributes — otherwise every output column re-parses the
-    // JSON and re-runs the regex/timestamp work (≈10× slower). Each
-    // `withColumns` batch below is one layer; CollapseProject keeps the
-    // layers separate because the hoisted aliases are non-cheap and
-    // multiply referenced.
-    val withK8s = withRaw.withColumn("_k8s", k8sm)
-    val stage1 = withK8s.withColumns(Map(
+    // line and re-runs the regex/timestamp work (≈10× slower). The
+    // parsed struct `_p` is one such layer: every column below reads a
+    // field of it, and the line is parsed once. Each `withColumns`
+    // batch below is one more layer; CollapseProject keeps the layers
+    // separate because the hoisted aliases are non-cheap and multiply
+    // referenced.
+    val stage1 = parsed.withColumns(Map(
       "_ts_str" -> firstNonEmpty(f("ts"), f("time")),
       "_lvl" -> firstNonEmpty(f("level"), f("severity")),
       "message" -> firstNonEmpty(f("msg"), f("message")),
       "service" -> coalesce(
         firstNonEmpty(f("service"), f("app"), f("component")), lit("")),
       // Top-level namespace/pod override k8s.* when *present* (even
-      // empty), and are not trimmed — the map lookup yields null exactly
-      // when the key is absent.
-      "namespace" -> coalesce(f("namespace"), k8s.getField("namespace_name"), lit("")),
-      "pod" -> coalesce(f("pod"), k8s.getField("pod_name"), lit("")),
+      // empty), and are not trimmed — a slot is null exactly when the
+      // key is absent (or JSON null).
+      "namespace" -> coalesce(f("namespace"), f("kubernetes_namespace_name"), lit("")),
+      "pod" -> coalesce(f("pod"), f("kubernetes_pod_name"), lit("")),
       // node: top-level override is trimmed; empty result falls back to
       // trimmed hostname (`normalize.go:122-134`).
       "node" -> coalesce(nullif(
-        coalesce(trim(f("node")), k8s.getField("node_name")), lit("")),
+        coalesce(trim(f("node")), f("kubernetes_node_name")), lit("")),
         nonEmpty(f("hostname")), lit("")),
       "trace_id" -> coalesce(firstNonEmpty(f("trace_id"), f("trace")), lit("")),
-      // from_json yields a null map for corrupt input — the parse-failure
-      // signal (P1, `cmd/etl/main.go:365-374`).
-      "_json_failed" -> m.isNull,
-      // codegen-capable fixed-key removal (map_filter is a
-      // CodegenFallback higher-order function)
-      "_fields_raw" -> exprCol(expressions.MapRemoveKeys(toExpr(m),
-        LogSchema.CanonicalKeys))))
+      // a null struct is the parse-failure signal (P1,
+      // `cmd/etl/main.go:365-374`)
+      "_json_failed" -> col("_p").isNull,
+      "_fields_raw" -> f("fields")))
 
     // ONE-pass strict RFC3339 validate+parse+render via the codegen
     // [[expressions.Rfc3339Parse]] — replaces six chained regex/format
@@ -147,8 +138,7 @@ object Normalize {
       .withColumn("error_kind", when(col("_json_failed"), lit("json"))
         .when(col("error").isNotNull, lit("normalize")))
       .withColumn("level", when(col("error").isNull, upper(col("_lvl"))))
-      .drop("_m", "_k8s", "_ts_str", "_lvl", "_json_failed", "_fields_raw",
-        "_rfc")
+      .drop("_p", "_ts_str", "_lvl", "_json_failed", "_fields_raw", "_rfc")
   }
 
   /** Typed residual fields (SURVEY §7.4 option b): add a `fields_v`

@@ -1,8 +1,8 @@
 package graft.etl
 
-import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
-import org.apache.spark.sql.graft.Bridge
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path, RawLocalFileSystem}
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.graft.{Bridge, PartitionJob}
 import org.apache.spark.sql.functions.{coalesce, concat, count, expr, lit,
   max, sum, when, col}
 
@@ -26,11 +26,15 @@ import org.apache.spark.sql.functions.{coalesce, concat, count, expr, lit,
   *     (`builder.go:46-49`), become native here: parquet is a
   *     first-class output type on any Hadoop-FS scheme (s3a://,
   *     hdfs://);
+  *   - every sink writes the same Go-shaped record lines, rendered in
+  *     the tasks by one generated expression ([[rendered]]);
   *   - single-file JSONL output — the file sink (K2), the HTTP sink's
   *     DLQ (K6) and the curation CLI's JSONL output — has one writer,
-  *     [[writeLines]]: distributed part files, appended in place to the
-  *     one target. It needs a FileSystem with `append` (local, HDFS);
-  *     on object stores use `output_type=parquet|s3`.
+  *     [[writeLines]]: one job writes attempt-named part files without
+  *     Spark's commit protocol, and the driver appends the returned
+  *     attempts' files in place to the one target. It needs a
+  *     FileSystem with `append` (local, HDFS); on object stores use
+  *     `output_type=parquet|s3`.
   *
   * Failure protocol: writers NEVER throw for a record-level failure.
   * Only the HTTP sink (K4) can fail a record: it captures failures per
@@ -42,93 +46,20 @@ import org.apache.spark.sql.functions.{coalesce, concat, count, expr, lit,
   */
 object Sinks {
 
-  /** Go renders `model.Normalized` with struct field names (no json
-    * tags — `internal/model/normalized.go:3-13`): capitalized keys, in
-    * struct order, `Fields` map with sorted keys, HTML-escaped strings
-    * (encoding/json default). Values inside `fields` carry raw JSON text
-    * for non-strings (see [[LogSchema]]), re-rendered typed here. */
-  def renderRecord(r: Row): String = {
-    val sb = new java.lang.StringBuilder(160)
-    sb.append('{')
-    def str(s: String): Unit = {
-      sb.append('"')
-      var i = 0
-      while (i < s.length) {
-        val c = s.charAt(i)
-        c match {
-          case '"' => sb.append("\\\"")
-          case '\\' => sb.append("\\\\")
-          case '\n' => sb.append("\\n")
-          case '\r' => sb.append("\\r")
-          case '\t' => sb.append("\\t")
-          // encoding/json escapes HTML-significant chars by default
-          case '<' => sb.append("\\u003c")
-          case '>' => sb.append("\\u003e")
-          case '&' => sb.append("\\u0026")
-          case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
-          case c => sb.append(c)
-        }
-        i += 1
-      }
-      sb.append('"')
-    }
-    def field(name: String, v: String, comma: Boolean = true): Unit = {
-      str(name); sb.append(':'); str(if (v == null) "" else v)
-      if (comma) sb.append(',')
-    }
-    field("TS", r.getAs[String]("ts"))
-    field("Level", r.getAs[String]("level"))
-    field("Service", r.getAs[String]("service"))
-    field("Namespace", r.getAs[String]("namespace"))
-    field("Pod", r.getAs[String]("pod"))
-    field("Node", r.getAs[String]("node"))
-    field("Message", r.getAs[String]("message"))
-    field("TraceID", r.getAs[String]("trace_id"))
-    str("Fields"); sb.append(':')
-    val fields = r.getAs[Map[String, String]]("fields")
-    if (fields == null) sb.append("null")
-    else {
-      sb.append('{')
-      var first = true
-      fields.toSeq.sortBy(_._1).foreach { case (k, v) =>
-        if (!first) sb.append(',')
-        first = false
-        str(k); sb.append(':')
-        if (v == null) sb.append("null")
-        else if (isJsonLiteral(v)) sb.append(v)
-        else str(v)
-      }
-      sb.append('}')
-    }
-    sb.append('}')
-    sb.toString
-  }
+  /** The record columns of the sink frame in Go's struct order
+    * (`internal/model/normalized.go:3-13`). */
+  private val RecordColumns = Seq("ts", "level", "service", "namespace",
+    "pod", "node", "message", "trace_id", "fields")
 
-  /** Raw JSON text that should be emitted unquoted: numbers, booleans,
-    * null, objects, arrays — i.e. everything the map<string,string> parse
-    * produced from a non-string JSON value. Object/array-looking text is
-    * VERIFIED to parse: a string VALUE like "{oops" must be quoted, or
-    * the whole output line becomes invalid JSON (Go json.Marshal always
-    * quotes strings). Documented remaining delta: a string value whose
-    * text IS valid JSON (e.g. "[1]") re-types on render, and raw number
-    * text is emitted verbatim ("5.0" stays 5.0 where Go re-renders the
-    * parsed float as 5) — both still valid JSON. */
-  private def isJsonLiteral(v: String): Boolean = {
-    if (v.isEmpty) return false
-    val c = v.charAt(0)
-    ((c == '{' || c == '[') && parsesAsJson(v)) ||
-      v == "true" || v == "false" || v == "null" ||
-      ((c == '-' || (c >= '0' && c <= '9')) &&
-        v.matches("-?\\d+(\\.\\d+)?([eE][+-]?\\d+)?"))
+  /** Each record of a sink frame as the one JSON line Go's encoder
+    * writes for it — one generated expression,
+    * [[expressions.RenderRecord]], over the record columns; no row is
+    * deserialized. Every sink writes these lines. */
+  def rendered(df: DataFrame): Dataset[String] = {
+    import df.sparkSession.implicits._
+    df.select(Bridge.column(expressions.RenderRecord(
+      RecordColumns.map(c => Bridge.expression(df(c))))).as("line")).as[String]
   }
-
-  private val jsonCheckFactory = new com.fasterxml.jackson.core.JsonFactory()
-  private def parsesAsJson(v: String): Boolean =
-    try {
-      val p = jsonCheckFactory.createParser(v)
-      try { while (p.nextToken() != null) {} } finally p.close()
-      true
-    } catch { case _: Exception => false }
 
   /** Per-sink write outcome; feeds A6–A8 (report wiring in
     * [[Pipeline.process]]). `dlqWritten` counts the failed records the
@@ -212,13 +143,13 @@ object Sinks {
   final class StdoutSink(out: java.io.PrintStream = System.out) extends Sink {
     def write(df: DataFrame): WriteResult = {
       var n = 0L
-      Bridge.drainToDriver(df) { r => out.println(renderRecord(r)); n += 1 }
+      Bridge.drainToDriver(rendered(df)) { r => out.println(r.getString(0)); n += 1 }
       WriteResult(n, 0, RetryStats())
     }
   }
 
   /** K2: single-file JSONL, CLI parity with `os.Create` + JSONL encode
-    * (`builder.go:19-27`). Renders distributed (mapPartitions) and
+    * (`builder.go:19-27`). Renders in the tasks ([[rendered]]) and
     * writes through [[writeLines]]: the first write creates or
     * truncates the target, later writes (and every write of a sink
     * resumed from a checkpoint) append to it in place. */
@@ -226,61 +157,107 @@ object Sinks {
       extends Sink {
     private var fresh = !startAppend
     def write(df: DataFrame): WriteResult = {
-      import df.sparkSession.implicits._
-      val n = writeLines(df.mapPartitions(_.map(renderRecord)), path, fresh)
+      val n = writeLines(rendered(df), path, fresh)
       fresh = false
       WriteResult(n, 0, RetryStats())
     }
   }
 
-  /** The one single-file JSONL writer: writes `lines` as text part files
-    * next to `target` (distributed, one job), then streams them in part
-    * order into `target` and returns the number of lines added. `fresh`
-    * creates or truncates the target in place (`os.Create`); otherwise
+  /** The one single-file JSONL writer, in two steps and without
+    * Spark's file-commit protocol:
+    *   1. one job, inside one SQL execution (so metrics observed on
+    *      `lines`' plan complete): each task streams its partition's
+    *      lines into its own attempt-named file under
+    *      `<target>.spark-tmp` and returns (partition, file, line
+    *      count). An empty partition writes no file;
+    *   2. the driver appends, in partition order, the files of exactly
+    *      the attempts the job returned to `target`, then deletes the
+    *      temp dir. A failed or speculative attempt's file is never
+    *      read, and is deleted with the dir; so is what a crashed
+    *      earlier write left there, cleared before the job.
+    * Returns the number of lines added. `fresh` creates or truncates
+    * the target in place (`os.Create`), even for zero lines; otherwise
     * the target is created if absent and appended to, after a torn last
     * line is cut ([[cutTornLine]]). Only the new lines are written, so a
-    * batch costs its own bytes, not the output so far.
+    * batch costs its own bytes, not the output so far. Delivery is still
+    * AT-LEAST-ONCE: a crash during step 2 leaves the lines appended so
+    * far, and a replayed batch writes them again (see [[Sink]]).
     *
     * Any Hadoop FileSystem with `append` works (local, HDFS). The local
-    * FileSystem checksums its files and cannot append, so a local target
-    * is written through its raw FileSystem, and a stale `.crc` beside it
-    * is deleted. A FileSystem without `append` (object stores, s3a://)
-    * fails the first appending write with an
-    * UnsupportedOperationException that points to
-    * `output_type=parquet|s3`. Single writer per target. */
+    * FileSystem checksums its files and cannot append, so local temp
+    * files and a local target are written through its raw FileSystem,
+    * and created with java.nio ([[createFile]]): no `.crc` files and no
+    * `chmod` forks; a stale `.crc` beside the target is deleted. A
+    * FileSystem without `append` (object stores, s3a://) fails the
+    * first appending write with an UnsupportedOperationException that
+    * points to `output_type=parquet|s3`. Single writer per target. */
   private[graft] def writeLines(lines: Dataset[String], target: String,
       fresh: Boolean): Long = {
-    val tmp = new Path(target + ".spark-tmp")
-    lines.write.mode("overwrite").text(tmp.toString)
     val conf = lines.sparkSession.sparkContext.hadoopConfiguration
-    val fs = tmp.getFileSystem(conf)
+    val tmp = new Path(target + ".spark-tmp")
+    val fs = rawFileSystem(tmp, conf)
+    fs.delete(tmp, true)
+    val parts = PartitionJob.run(lines.toDF(), "writeLines") { (taskConf, ctx, rows) =>
+      if (!rows.hasNext) (ctx.partitionId(), null: String, 0L)
+      else {
+        val file = f"part-${ctx.partitionId()}%05d-attempt-${ctx.taskAttemptId()}"
+        val out = createFile(rawFileSystem(tmp, taskConf), new Path(tmp, file))
+        var n = 0L
+        var bytes = 0L
+        try rows.foreach { r =>
+          if (!r.isNullAt(0)) {
+            val line = r.getUTF8String(0)
+            line.writeTo(out)
+            bytes += line.numBytes
+          }
+          out.write('\n')
+          n += 1
+        } finally out.close()
+        PartitionJob.addOutput(ctx, bytes + n, n)
+        (ctx.partitionId(), file, n)
+      }
+    }.sortBy(_._1)
     val out = openTarget(target, fresh, conf)
-    var n = 0L
     try {
       val buf = new Array[Byte](1 << 16)
-      fs.listStatus(tmp).map(_.getPath).filter(_.getName.startsWith("part-"))
-        .sortBy(_.getName).foreach { p =>
-          val in = fs.open(p)
-          try {
-            var r = in.read(buf)
-            while (r > 0) {
-              var i = 0
-              while (i < r) { if (buf(i) == '\n') n += 1; i += 1 }
-              out.write(buf, 0, r); r = in.read(buf)
-            }
-          } finally in.close()
-        }
+      parts.filter(_._2 != null).foreach { case (_, file, _) =>
+        val in = fs.open(new Path(tmp, file))
+        try {
+          var r = in.read(buf)
+          while (r > 0) { out.write(buf, 0, r); r = in.read(buf) }
+        } finally in.close()
+      }
     } finally out.close()
     fs.delete(tmp, true)
-    n
+    parts.map(_._3).sum
+  }
+
+  /** The FileSystem of `p`, or its raw FileSystem when it checksums
+    * (the local one). Never changes the shared cached instance. */
+  private def rawFileSystem(p: Path, conf: org.apache.hadoop.conf.Configuration)
+      : FileSystem = p.getFileSystem(conf) match {
+    case c: ChecksumFileSystem => c.getRawFileSystem
+    case f => f
+  }
+
+  /** `p` created, or truncated in place, for writing through `fs`, with
+    * its parent directories. Hadoop's local FileSystem gives each file
+    * and directory it creates a permission by forking `chmod` when its
+    * native library is absent; a local file is created with java.nio
+    * instead, with the mode the process umask gives any new file. */
+  private def createFile(fs: FileSystem, p: Path): java.io.OutputStream = fs match {
+    case local: RawLocalFileSystem =>
+      val f = local.pathToFile(p).toPath
+      java.nio.file.Files.createDirectories(f.getParent)
+      new java.io.BufferedOutputStream(java.nio.file.Files.newOutputStream(f), 1 << 16)
+    case _ => fs.create(p, true)
   }
 
   /** `target` opened for writing through its Hadoop FileSystem: created
     * or truncated in place when `fresh`, else created if absent or
     * appended to after a torn last line is cut. */
   private def openTarget(target: String, fresh: Boolean,
-      conf: org.apache.hadoop.conf.Configuration)
-      : org.apache.hadoop.fs.FSDataOutputStream = {
+      conf: org.apache.hadoop.conf.Configuration): java.io.OutputStream = {
     val tgt = new Path(target)
     val fs = tgt.getFileSystem(conf) match {
       case c: ChecksumFileSystem =>
@@ -288,7 +265,7 @@ object Sinks {
         c.getRawFileSystem
       case f => f
     }
-    if (fresh || !fs.exists(tgt)) fs.create(tgt, true)
+    if (fresh || !fs.exists(tgt)) createFile(fs, tgt)
     else
       try { cutTornLine(fs, tgt); fs.append(tgt) }
       catch { case e: UnsupportedOperationException =>
@@ -386,8 +363,8 @@ object Sinks {
       initialized = true
       var n = 0L
       try {
-        Bridge.drainToDriver(df) { r =>
-          val data = renderRecord(r) + "\n"
+        Bridge.drainToDriver(rendered(df)) { r =>
+          val data = r.getString(0) + "\n"
           val bytes = data.getBytes("UTF-8").length
           // rotate whenever the record would overflow — even into an
           // empty base (rotate.go:41 has no size>0 guard: an oversized
@@ -445,13 +422,12 @@ object Sinks {
       // re-sending its records, which the documented at-least-once
       // contract already covers — instead of failing the whole write on
       // an unrecoverable checkpoint block. Unpersisted before return.
-      val status = df.mapPartitions { rows =>
+      val status = rendered(df).mapPartitions { bodies =>
         val client = java.net.http.HttpClient.newBuilder()
           .connectTimeout(java.time.Duration.ofMillis(tmo)).build()
         val rng = new java.util.Random(
           org.apache.spark.TaskContext.getPartitionId().toLong)
-        rows.map { row =>
-          val body = renderRecord(row)
+        bodies.map { body =>
           var lastErr: String = null
           val (ok, retries) = pol.run(() => {
             try {
@@ -546,9 +522,8 @@ object Sinks {
     */
   final class KafkaSink(bootstrapServers: String, topic: String) extends Sink {
     def write(df: DataFrame): WriteResult = {
-      import df.sparkSession.implicits._
       val obs = new org.apache.spark.sql.Observation()
-      df.mapPartitions(_.map(renderRecord)).toDF("value")
+      rendered(df).toDF("value")
         .observe(obs, count(lit(1)).as("n"))
         .write.format("kafka")
         .option("kafka.bootstrap.servers", bootstrapServers)

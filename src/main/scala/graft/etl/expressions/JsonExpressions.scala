@@ -1,6 +1,6 @@
 package graft.etl.expressions
 
-import com.fasterxml.jackson.core.{JsonFactory, JsonToken}
+import com.fasterxml.jackson.core.JsonToken
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -8,7 +8,8 @@ import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData, 
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Codegen-capable JSON-object → map<string,string> parse.
+/** Codegen-capable JSON-object → map<string,string> parse, registered
+  * as the SQL function `json_to_string_map`.
   *
   * Spark's `from_json` (JsonToStructs) is `CodegenFallback`: one
   * occurrence anywhere in a projection knocks the whole stage out of
@@ -24,6 +25,23 @@ import org.apache.spark.unsafe.types.UTF8String
   *     text; nested objects/arrays keep compact JSON text;
   *   - duplicate keys: last value wins;
   *   - JSON null value → null map value.
+  * Keys are decoded JSON names (escapes resolved): an escaped spelling
+  * of a name and its plain spelling are one key; the last one wins.
+  * Interpreted and generated code call the same static parse, so a plan
+  * that falls back from codegen returns the same map.
+  *
+  * The value rule is [[JsonText.value]], shared with the normalize
+  * kernel [[ParseLogLine]]: the normalize reads its canonical slots,
+  * the `kubernetes` fields and the residual `fields` map in one parse
+  * of a line, with the values this map holds under the same keys.
+  *
+  * The map keeps every key, in first-position order. Callers that need
+  * only some keys of a line should not build the whole map and then
+  * look keys up in it: each lookup scans the map, and a second parse of
+  * a nested value repeats work the first parse already did. The
+  * normalize therefore reads fixed slots through [[ParseLogLine]]; this
+  * function serves SQL callers, for whom a map of all keys is the
+  * result they asked for.
   */
 case class JsonToStringMap(child: Expression)
     extends UnaryExpression {
@@ -55,38 +73,20 @@ case class JsonToStringMap(child: Expression)
 }
 
 object JsonToStringMap {
-  private val factory = new JsonFactory()
-
   /** Static entry used by both interpreted eval and generated code.
     * Returns null (never throws) on anything Go's Unmarshal-to-map
     * would reject. */
   def parse(s: UTF8String): MapData = {
     if (s == null) return null
     try {
-      val parser = factory.createParser(s.getBytes)
+      val parser = JsonText.factory.createParser(s.getBytes)
       try {
         if (parser.nextToken() != JsonToken.START_OBJECT) return null
         val keys = new java.util.LinkedHashMap[String, UTF8String]()
         var tok = parser.nextToken()
         while (tok == JsonToken.FIELD_NAME) {
           val key = parser.currentName()
-          val v = parser.nextToken() match {
-            case JsonToken.VALUE_STRING =>
-              UTF8String.fromString(parser.getText)
-            case JsonToken.VALUE_NULL => null
-            case JsonToken.VALUE_NUMBER_INT | JsonToken.VALUE_NUMBER_FLOAT |
-                JsonToken.VALUE_TRUE | JsonToken.VALUE_FALSE =>
-              // raw literal text, exactly as from_json coerces scalars
-              UTF8String.fromString(parser.getText)
-            case JsonToken.START_OBJECT | JsonToken.START_ARRAY =>
-              val sw = new java.io.StringWriter()
-              val gen = factory.createGenerator(sw)
-              gen.copyCurrentStructure(parser)
-              gen.close()
-              UTF8String.fromString(sw.toString)
-            case _ => return null
-          }
-          keys.put(key, v)
+          keys.put(key, JsonText.utf8(JsonText.value(parser, parser.nextToken())))
           tok = parser.nextToken()
         }
         if (tok != JsonToken.END_OBJECT) return null

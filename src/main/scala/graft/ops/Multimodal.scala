@@ -94,9 +94,11 @@ object Multimodal {
 
   /** Deterministic fake decoder: dimensions and features derived purely
     * from the payload (content-addressed — same bytes, same features).
-    * Marks the stubbed codec path per the build contract. */
+    * A null payload is an empty one. Marks the stubbed codec path per
+    * the build contract. */
   object DeterministicFakeDecoder extends MediaDecoder {
-    def decode(id: Long, mime: String, bytes: Array[Byte]): MediaFeatures = {
+    def decode(id: Long, mime: String, payload: Array[Byte]): MediaFeatures = {
+      val bytes = if (payload == null) Array.emptyByteArray else payload
       val len = bytes.length
       // ??? real codec goes here; the fake derives everything from bytes
       val crc = new java.util.zip.CRC32
@@ -129,16 +131,18 @@ object Multimodal {
     * sentinel (width = -1, height = -1, n_frames = 0, zero feature)
     * instead of failing the task: at scale a single corrupt blob must
     * not kill a 10^6-row partition, and the sentinel rows are trivially
-    * filterable downstream (`width < 0`). */
+    * filterable downstream (`width < 0`). A null payload yields the
+    * sentinel with `byte_len` 0, as in every real decoder here. */
   object ImageIoDecoder extends MediaDecoder {
     def decode(id: Long, mime: String, bytes: Array[Byte]): MediaFeatures = {
       if (mime == null || !mime.startsWith("image/"))
         return DeterministicFakeDecoder.decode(id, mime, bytes)
       val img =
-        try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
+        if (bytes == null) null
+        else try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
         catch { case _: Exception => null }
       if (img == null)
-        return MediaFeatures(id, mime, bytes.length.toLong,
+        return MediaFeatures(id, mime, if (bytes == null) 0L else bytes.length.toLong,
           width = -1, height = -1, n_frames = 0, feature = new Array[Float](8),
           decoder = "imageio")
       val (w, h) = (img.getWidth, img.getHeight)
@@ -177,6 +181,7 @@ object Multimodal {
     def decode(id: Long, mime: String, bytes: Array[Byte]): MediaFeatures = {
       if (mime == null || !WavMimes.contains(mime))
         return DeterministicFakeDecoder.decode(id, mime, bytes)
+      if (bytes == null) return sentinel(id, mime, 0L)
       try {
         val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(
           new java.io.ByteArrayInputStream(bytes))
@@ -247,7 +252,8 @@ object Multimodal {
     def decode(id: Long, mime: String, bytes: Array[Byte]): MediaFeatures = {
       if (mime == null || !Mp3Mimes.contains(mime))
         return DeterministicFakeDecoder.decode(id, mime, bytes)
-      val sentinel = MediaFeatures(id, mime, bytes.length.toLong,
+      val sentinel = MediaFeatures(id, mime,
+        if (bytes == null) 0L else bytes.length.toLong,
         width = -1, height = -1, n_frames = 0, feature = new Array[Float](8),
         decoder = "mp3-meta")
       try {
@@ -323,7 +329,8 @@ object Multimodal {
 
     def decode(id: Long, mime: String, bytes: Array[Byte]): MediaFeatures = {
       import Bmff._
-      val sentinel = MediaFeatures(id, mime, bytes.length.toLong,
+      val sentinel = MediaFeatures(id, mime,
+        if (bytes == null) 0L else bytes.length.toLong,
         width = -1, height = -1, n_frames = 0, feature = new Array[Float](8),
         decoder = "mp4-meta")
       if (!Mp4Mimes(mime)) return sentinel

@@ -272,4 +272,110 @@ class NormalizeSpec extends SparkSpec {
       ("ERROR", "oom", "api", Map("attempt" -> "17", "ratio" -> "0.5")),
       ("INFO", "ok", "web", Map("attempt" -> "18", "ratio" -> "1.5"))))
   }
+
+  test("one-parse kernel: parity with the map-lookup normalize on edge-case lines") {
+    // each line's expected row is the output of the normalize it
+    // replaced (a full-line JSON map, 17 lookups, a second parse of
+    // `kubernetes` and a canonical-key removal): duplicate keys,
+    // kubernetes as object / JSON string / scalar / null / repeated,
+    // alias values that are JSON null or blank, malformed and
+    // non-object lines, multi-byte text, escaped keys, and residual
+    // object and array values. `fields` renders as its ordered entries.
+    val lines = Seq(
+      "{\"a\":1,\"ts\":\"2025-01-01T00:00:00Z\",\"level\":\"info\",\"b\":\"x\",\"level\":\"warn\",\"msg\":\"one\",\"a\":\"3\",\"msg\":\"two\"}",
+      "{\"ts\":\"2025-01-01T00:00:00Z\",\"level\":\"I\",\"msg\":\"m\",\"z\":null,\"y\":2,\"z\":\"last\",\"x\":[],\"y\":{}}",
+      "{\"ts\":\"2025-01-01T00:00:00Z\",\"level\":\"I\",\"msg\":\"m\",\"kubernetes\":{\"namespace_name\":\"ns\",\"pod_name\":\"p\",\"node_name\":\"n\",\"labels\":{\"app\":\"x\",\"pod_name\":\"inner\"}}}",
+      "{\"ts\":\"2025-01-01T00:00:00Z\",\"level\":\"I\",\"msg\":\"m\",\"kubernetes\":\"{\\\"namespace_name\\\":\\\"ns2\\\",\\\"pod_name\\\":7,\\\"node_name\\\":{\\\"z\\\":1.50}}\"}",
+      "{\"ts\":\"2025-01-01T00:00:00Z\",\"level\":\"I\",\"msg\":\"m\",\"kubernetes\":5,\"hostname\":\" h1 \"}",
+      "{\"ts\":\"2025-01-01T00:00:00Z\",\"level\":\"I\",\"msg\":\"m\",\"kubernetes\":null,\"node\":\"  \"}",
+      "{\"ts\":\"2025-01-01T00:00:00Z\",\"level\":\"I\",\"msg\":\"m\",\"kubernetes\":true,\"node\":\" n0 \",\"hostname\":\"h\"}",
+      "{\"ts\":\"2025-01-01T00:00:00Z\",\"level\":\"I\",\"msg\":\"m\",\"kubernetes\":[{\"pod_name\":\"a\"}]}",
+      "{\"ts\":\"2025-01-01T00:00:00Z\",\"level\":\"I\",\"msg\":\"m\",\"kubernetes\":\"{oops\"}",
+      "{\"ts\":\"2025-01-01T00:00:00Z\",\"level\":\"I\",\"msg\":\"m\",\"kubernetes\":\"{\\\"pod_name\\\":\\\"p\\\"} x\"}",
+      "{\"ts\":\"2025-01-01T00:00:00Z\",\"level\":\"I\",\"msg\":\"m\",\"kubernetes\":\"5\"}",
+      "{\"ts\":\"2025-01-01T00:00:00Z\",\"level\":\"I\",\"msg\":\"m\",\"kubernetes\":\"\\ufeff{\\\"pod_name\\\":\\\"bom\\\"}\"}",
+      "{\"ts\":\"2025-01-01T00:00:00Z\",\"level\":\"I\",\"msg\":\"m\",\"kubernetes\":{\"pod_name\":\"p1\",\"node_name\":\"n1\"},\"kubernetes\":{\"namespace_name\":\"ns3\"}}",
+      "{\"ts\":\"2025-01-01T00:00:00Z\",\"level\":\"I\",\"msg\":\"m\",\"kubernetes\":{\"pod_name\":\"p1\"},\"kubernetes\":7}",
+      "{\"ts\":\"2025-01-01T00:00:00Z\",\"level\":\"I\",\"msg\":\"m\",\"kubernetes\":5,\"kubernetes\":{\"pod_name\":\"p2\",\"pod_name\":\"p3\"}}",
+      "{\"ts\":\"2025-01-01T00:00:00Z\",\"level\":\"I\",\"msg\":\"m\",\"kubernetes\":{\"pod_name\":{\"a\":[1,2.50,-0,1e400]},\"node_name\":1.50,\"namespace_name\":1e5}}",
+      "{\"ts\":\"2025-01-01T00:00:00Z\",\"level\":\"I\",\"msg\":\"m\",\"kubernetes\":{\"pod_name\":-0,\"node_name\":true,\"namespace_name\":12345678901234567890123}}",
+      "{\"ts\":\"2025-01-01T00:00:00Z\",\"level\":\"I\",\"msg\":\"m\",\"kubernetes\":{\"pod_name\":1e400,\"node_name\":null,\"namespace_name\":-1.0E+2}}",
+      "{\"ts\":\"2025-01-01T00:00:00Z\",\"level\":\"I\",\"msg\":\"m\",\"kubernetes\":{\"deep\":{\"x\":{\"y\":[{\"pod_name\":\"no\"}]}},\"pod_name\":\"yes\"}}",
+      "{\"ts\":\"2025-01-01T00:00:00Z\",\"level\":\"I\",\"msg\":\"m\",\"namespace\":\"\",\"pod\":\" p \",\"node\":\" n \",\"kubernetes\":{\"namespace_name\":\"k\",\"pod_name\":\"kp\",\"node_name\":\"kn\"}}",
+      "{\"ts\":null,\"time\":\"2025-01-02T00:00:00+02:00\",\"level\":\"  \",\"severity\":\"warn\",\"msg\":null,\"message\":\" m \",\"service\":null,\"app\":\" \",\"component\":\"c\",\"trace_id\":\"\",\"trace\":\"t\"}",
+      "{\"ts\":\" \",\"time\":\"\\t\",\"level\":\"I\",\"msg\":\"m\"}",
+      "{\"ts\":\"2025-01-01T00:00:00Z\",\"level\":null,\"severity\":null,\"msg\":\"m\"}",
+      "{\"ts\":\"2025-01-01T00:00:00Z\",\"level\":5,\"msg\":true,\"service\":1.50,\"trace_id\":-0,\"pod\":{\"a\":1}}",
+      "[1,2]",
+      "\"str\"",
+      "42",
+      "null",
+      "true",
+      "   ",
+      "{\"ts\":\"2025-01-01T00:00:00Z\",\"level\":\"I\",\"msg\":\"m\"} x",
+      "{\"a\":1}{\"b\":2}",
+      "{\"a\":1,}",
+      "{\"a\":1",
+      "{\"a\" 1}",
+      "{\"a\":tru}",
+      "  {}  ",
+      "{}",
+      "\uFEFF{\"ts\":\"2025-01-01T00:00:00Z\",\"level\":\"I\",\"msg\":\"m\"}",
+      "{\"ts\":\"2025-01-01T00:00:00Z\",\"level\":\"I\",\"msg\":\"h\u00E9llo \u65E5\u672C \uD83D\uDE00\",\"\u043A\u043B\u044E\u0447\":\"\u0437\u043D\u0430\u0447\u0435\u043D\u0438\u0435\",\"\uD83D\uDE00\":\"\uD834\uDD1E\"}",
+      "{\"ts\":\"2025-01-01T00:00:00Z\",\"level\":\"I\",\"m\\u0073g\":\"via escape\",\"k\\\"ey\":\"v\",\"tab\\tkey\":\"\\u00e9\\ud83d\\ude00\",\"lone\":\"\\ud800\"}",
+      "{\"ts\":\"2025-01-01T00:00:00Z\",\"level\":\"I\",\"msg\":\"m\",\"\\u006bubernetes\":{\"pod_name\":\"escaped key\"}}",
+      "{\"ts\":\"2025-01-01T00:00:00Z\",\"level\":\"I\",\"msg\":\"m\",\"obj\":{\"b\":1,\"a\":[1,2,{\"c\":null}],\"f\":1.5e3},\"arr\":[true,false,null,1.50],\"nul\":null,\"num\":-1.0E+2,\"s\":\"[1]\",\"big\":12345678901234567890123,\"f\":1e400}"
+    )
+    val expected = Seq(
+      "{\"trace_id\":\"\",\"service\":\"\",\"namespace\":\"\",\"pod\":\"\",\"message\":\"two\",\"node\":\"\",\"ts\":\"2025-01-01T00:00:00Z\",\"ts_ts\":\"2025-01-01T00:00:00.000Z\",\"fields\":[{\"key\":\"a\",\"value\":\"3\"},{\"key\":\"b\",\"value\":\"x\"}],\"ts_offset_secs\":0,\"level\":\"WARN\"}",
+      "{\"trace_id\":\"\",\"service\":\"\",\"namespace\":\"\",\"pod\":\"\",\"message\":\"m\",\"node\":\"\",\"ts\":\"2025-01-01T00:00:00Z\",\"ts_ts\":\"2025-01-01T00:00:00.000Z\",\"fields\":[{\"key\":\"z\",\"value\":\"last\"},{\"key\":\"y\",\"value\":\"{}\"},{\"key\":\"x\",\"value\":\"[]\"}],\"ts_offset_secs\":0,\"level\":\"I\"}",
+      "{\"trace_id\":\"\",\"service\":\"\",\"namespace\":\"ns\",\"pod\":\"p\",\"message\":\"m\",\"node\":\"n\",\"ts\":\"2025-01-01T00:00:00Z\",\"ts_ts\":\"2025-01-01T00:00:00.000Z\",\"fields\":[],\"ts_offset_secs\":0,\"level\":\"I\"}",
+      "{\"trace_id\":\"\",\"service\":\"\",\"namespace\":\"ns2\",\"pod\":\"7\",\"message\":\"m\",\"node\":\"{\\\"z\\\":1.5}\",\"ts\":\"2025-01-01T00:00:00Z\",\"ts_ts\":\"2025-01-01T00:00:00.000Z\",\"fields\":[],\"ts_offset_secs\":0,\"level\":\"I\"}",
+      "{\"trace_id\":\"\",\"service\":\"\",\"namespace\":\"\",\"pod\":\"\",\"message\":\"m\",\"node\":\"h1\",\"ts\":\"2025-01-01T00:00:00Z\",\"ts_ts\":\"2025-01-01T00:00:00.000Z\",\"fields\":[],\"ts_offset_secs\":0,\"level\":\"I\"}",
+      "{\"trace_id\":\"\",\"service\":\"\",\"namespace\":\"\",\"pod\":\"\",\"message\":\"m\",\"node\":\"\",\"ts\":\"2025-01-01T00:00:00Z\",\"ts_ts\":\"2025-01-01T00:00:00.000Z\",\"fields\":[],\"ts_offset_secs\":0,\"level\":\"I\"}",
+      "{\"trace_id\":\"\",\"service\":\"\",\"namespace\":\"\",\"pod\":\"\",\"message\":\"m\",\"node\":\"n0\",\"ts\":\"2025-01-01T00:00:00Z\",\"ts_ts\":\"2025-01-01T00:00:00.000Z\",\"fields\":[],\"ts_offset_secs\":0,\"level\":\"I\"}",
+      "{\"trace_id\":\"\",\"service\":\"\",\"namespace\":\"\",\"pod\":\"\",\"message\":\"m\",\"node\":\"\",\"ts\":\"2025-01-01T00:00:00Z\",\"ts_ts\":\"2025-01-01T00:00:00.000Z\",\"fields\":[],\"ts_offset_secs\":0,\"level\":\"I\"}",
+      "{\"trace_id\":\"\",\"service\":\"\",\"namespace\":\"\",\"pod\":\"\",\"message\":\"m\",\"node\":\"\",\"ts\":\"2025-01-01T00:00:00Z\",\"ts_ts\":\"2025-01-01T00:00:00.000Z\",\"fields\":[],\"ts_offset_secs\":0,\"level\":\"I\"}",
+      "{\"trace_id\":\"\",\"service\":\"\",\"namespace\":\"\",\"pod\":\"\",\"message\":\"m\",\"node\":\"\",\"ts\":\"2025-01-01T00:00:00Z\",\"ts_ts\":\"2025-01-01T00:00:00.000Z\",\"fields\":[],\"ts_offset_secs\":0,\"level\":\"I\"}",
+      "{\"trace_id\":\"\",\"service\":\"\",\"namespace\":\"\",\"pod\":\"\",\"message\":\"m\",\"node\":\"\",\"ts\":\"2025-01-01T00:00:00Z\",\"ts_ts\":\"2025-01-01T00:00:00.000Z\",\"fields\":[],\"ts_offset_secs\":0,\"level\":\"I\"}",
+      "{\"trace_id\":\"\",\"service\":\"\",\"namespace\":\"\",\"pod\":\"bom\",\"message\":\"m\",\"node\":\"\",\"ts\":\"2025-01-01T00:00:00Z\",\"ts_ts\":\"2025-01-01T00:00:00.000Z\",\"fields\":[],\"ts_offset_secs\":0,\"level\":\"I\"}",
+      "{\"trace_id\":\"\",\"service\":\"\",\"namespace\":\"ns3\",\"pod\":\"\",\"message\":\"m\",\"node\":\"\",\"ts\":\"2025-01-01T00:00:00Z\",\"ts_ts\":\"2025-01-01T00:00:00.000Z\",\"fields\":[],\"ts_offset_secs\":0,\"level\":\"I\"}",
+      "{\"trace_id\":\"\",\"service\":\"\",\"namespace\":\"\",\"pod\":\"\",\"message\":\"m\",\"node\":\"\",\"ts\":\"2025-01-01T00:00:00Z\",\"ts_ts\":\"2025-01-01T00:00:00.000Z\",\"fields\":[],\"ts_offset_secs\":0,\"level\":\"I\"}",
+      "{\"trace_id\":\"\",\"service\":\"\",\"namespace\":\"\",\"pod\":\"p3\",\"message\":\"m\",\"node\":\"\",\"ts\":\"2025-01-01T00:00:00Z\",\"ts_ts\":\"2025-01-01T00:00:00.000Z\",\"fields\":[],\"ts_offset_secs\":0,\"level\":\"I\"}",
+      "{\"trace_id\":\"\",\"service\":\"\",\"namespace\":\"100000.0\",\"pod\":\"{\\\"a\\\":[1,2.5,0,\\\"Infinity\\\"]}\",\"message\":\"m\",\"node\":\"1.5\",\"ts\":\"2025-01-01T00:00:00Z\",\"ts_ts\":\"2025-01-01T00:00:00.000Z\",\"fields\":[],\"ts_offset_secs\":0,\"level\":\"I\"}",
+      "{\"trace_id\":\"\",\"service\":\"\",\"namespace\":\"12345678901234567890123\",\"pod\":\"0\",\"message\":\"m\",\"node\":\"true\",\"ts\":\"2025-01-01T00:00:00Z\",\"ts_ts\":\"2025-01-01T00:00:00.000Z\",\"fields\":[],\"ts_offset_secs\":0,\"level\":\"I\"}",
+      "{\"trace_id\":\"\",\"service\":\"\",\"namespace\":\"-100.0\",\"pod\":\"Infinity\",\"message\":\"m\",\"node\":\"\",\"ts\":\"2025-01-01T00:00:00Z\",\"ts_ts\":\"2025-01-01T00:00:00.000Z\",\"fields\":[],\"ts_offset_secs\":0,\"level\":\"I\"}",
+      "{\"trace_id\":\"\",\"service\":\"\",\"namespace\":\"\",\"pod\":\"yes\",\"message\":\"m\",\"node\":\"\",\"ts\":\"2025-01-01T00:00:00Z\",\"ts_ts\":\"2025-01-01T00:00:00.000Z\",\"fields\":[],\"ts_offset_secs\":0,\"level\":\"I\"}",
+      "{\"trace_id\":\"\",\"service\":\"\",\"namespace\":\"\",\"pod\":\" p \",\"message\":\"m\",\"node\":\"n\",\"ts\":\"2025-01-01T00:00:00Z\",\"ts_ts\":\"2025-01-01T00:00:00.000Z\",\"fields\":[],\"ts_offset_secs\":0,\"level\":\"I\"}",
+      "{\"trace_id\":\"t\",\"service\":\"c\",\"namespace\":\"\",\"pod\":\"\",\"message\":\"m\",\"node\":\"\",\"ts\":\"2025-01-02T00:00:00+02:00\",\"ts_ts\":\"2025-01-01T22:00:00.000Z\",\"fields\":[],\"ts_offset_secs\":7200,\"level\":\"WARN\"}",
+      "{\"trace_id\":\"\",\"service\":\"\",\"namespace\":\"\",\"pod\":\"\",\"message\":\"m\",\"node\":\"\",\"error\":\"invalid timestamp \\\"\\t\\\": expected RFC3339\",\"fields\":[],\"error_kind\":\"normalize\"}",
+      "{\"trace_id\":\"\",\"service\":\"\",\"namespace\":\"\",\"pod\":\"\",\"message\":\"m\",\"node\":\"\",\"ts\":\"2025-01-01T00:00:00Z\",\"error\":\"missing level: expected level/severity\",\"ts_ts\":\"2025-01-01T00:00:00.000Z\",\"fields\":[],\"ts_offset_secs\":0,\"error_kind\":\"normalize\"}",
+      "{\"trace_id\":\"-0\",\"service\":\"1.50\",\"namespace\":\"\",\"pod\":\"{\\\"a\\\":1}\",\"message\":\"true\",\"node\":\"\",\"ts\":\"2025-01-01T00:00:00Z\",\"ts_ts\":\"2025-01-01T00:00:00.000Z\",\"fields\":[],\"ts_offset_secs\":0,\"level\":\"5\"}",
+      "{\"trace_id\":\"\",\"service\":\"\",\"namespace\":\"\",\"pod\":\"\",\"node\":\"\",\"error\":\"invalid JSON\",\"error_kind\":\"json\"}",
+      "{\"trace_id\":\"\",\"service\":\"\",\"namespace\":\"\",\"pod\":\"\",\"node\":\"\",\"error\":\"invalid JSON\",\"error_kind\":\"json\"}",
+      "{\"trace_id\":\"\",\"service\":\"\",\"namespace\":\"\",\"pod\":\"\",\"node\":\"\",\"error\":\"invalid JSON\",\"error_kind\":\"json\"}",
+      "{\"trace_id\":\"\",\"service\":\"\",\"namespace\":\"\",\"pod\":\"\",\"node\":\"\",\"error\":\"invalid JSON\",\"error_kind\":\"json\"}",
+      "{\"trace_id\":\"\",\"service\":\"\",\"namespace\":\"\",\"pod\":\"\",\"node\":\"\",\"error\":\"invalid JSON\",\"error_kind\":\"json\"}",
+      "{\"trace_id\":\"\",\"service\":\"\",\"namespace\":\"\",\"pod\":\"\",\"node\":\"\",\"error\":\"invalid JSON\",\"error_kind\":\"json\"}",
+      "{\"trace_id\":\"\",\"service\":\"\",\"namespace\":\"\",\"pod\":\"\",\"node\":\"\",\"error\":\"invalid JSON\",\"error_kind\":\"json\"}",
+      "{\"trace_id\":\"\",\"service\":\"\",\"namespace\":\"\",\"pod\":\"\",\"node\":\"\",\"error\":\"invalid JSON\",\"error_kind\":\"json\"}",
+      "{\"trace_id\":\"\",\"service\":\"\",\"namespace\":\"\",\"pod\":\"\",\"node\":\"\",\"error\":\"invalid JSON\",\"error_kind\":\"json\"}",
+      "{\"trace_id\":\"\",\"service\":\"\",\"namespace\":\"\",\"pod\":\"\",\"node\":\"\",\"error\":\"invalid JSON\",\"error_kind\":\"json\"}",
+      "{\"trace_id\":\"\",\"service\":\"\",\"namespace\":\"\",\"pod\":\"\",\"node\":\"\",\"error\":\"invalid JSON\",\"error_kind\":\"json\"}",
+      "{\"trace_id\":\"\",\"service\":\"\",\"namespace\":\"\",\"pod\":\"\",\"node\":\"\",\"error\":\"invalid JSON\",\"error_kind\":\"json\"}",
+      "{\"trace_id\":\"\",\"service\":\"\",\"namespace\":\"\",\"pod\":\"\",\"node\":\"\",\"error\":\"missing timestamp: expected ts/time in RFC3339\",\"fields\":[],\"error_kind\":\"normalize\"}",
+      "{\"trace_id\":\"\",\"service\":\"\",\"namespace\":\"\",\"pod\":\"\",\"node\":\"\",\"error\":\"missing timestamp: expected ts/time in RFC3339\",\"fields\":[],\"error_kind\":\"normalize\"}",
+      "{\"trace_id\":\"\",\"service\":\"\",\"namespace\":\"\",\"pod\":\"\",\"message\":\"m\",\"node\":\"\",\"ts\":\"2025-01-01T00:00:00Z\",\"ts_ts\":\"2025-01-01T00:00:00.000Z\",\"fields\":[],\"ts_offset_secs\":0,\"level\":\"I\"}",
+      "{\"trace_id\":\"\",\"service\":\"\",\"namespace\":\"\",\"pod\":\"\",\"message\":\"h\u00E9llo \u65E5\u672C \uD83D\uDE00\",\"node\":\"\",\"ts\":\"2025-01-01T00:00:00Z\",\"ts_ts\":\"2025-01-01T00:00:00.000Z\",\"fields\":[{\"key\":\"\u043A\u043B\u044E\u0447\",\"value\":\"\u0437\u043D\u0430\u0447\u0435\u043D\u0438\u0435\"},{\"key\":\"\uD83D\uDE00\",\"value\":\"\uD834\uDD1E\"}],\"ts_offset_secs\":0,\"level\":\"I\"}",
+      "{\"trace_id\":\"\",\"service\":\"\",\"namespace\":\"\",\"pod\":\"\",\"message\":\"via escape\",\"node\":\"\",\"ts\":\"2025-01-01T00:00:00Z\",\"ts_ts\":\"2025-01-01T00:00:00.000Z\",\"fields\":[{\"key\":\"k\\\"ey\",\"value\":\"v\"},{\"key\":\"tab\\tkey\",\"value\":\"\u00E9\uD83D\uDE00\"},{\"key\":\"lone\",\"value\":\"?\"}],\"ts_offset_secs\":0,\"level\":\"I\"}",
+      "{\"trace_id\":\"\",\"service\":\"\",\"namespace\":\"\",\"pod\":\"escaped key\",\"message\":\"m\",\"node\":\"\",\"ts\":\"2025-01-01T00:00:00Z\",\"ts_ts\":\"2025-01-01T00:00:00.000Z\",\"fields\":[],\"ts_offset_secs\":0,\"level\":\"I\"}",
+      "{\"trace_id\":\"\",\"service\":\"\",\"namespace\":\"\",\"pod\":\"\",\"message\":\"m\",\"node\":\"\",\"ts\":\"2025-01-01T00:00:00Z\",\"ts_ts\":\"2025-01-01T00:00:00.000Z\",\"fields\":[{\"key\":\"obj\",\"value\":\"{\\\"b\\\":1,\\\"a\\\":[1,2,{\\\"c\\\":null}],\\\"f\\\":1500.0}\"},{\"key\":\"arr\",\"value\":\"[true,false,null,1.5]\"},{\"key\":\"nul\"},{\"key\":\"num\",\"value\":\"-1.0E+2\"},{\"key\":\"s\",\"value\":\"[1]\"},{\"key\":\"big\",\"value\":\"12345678901234567890123\"},{\"key\":\"f\",\"value\":\"1e400\"}],\"ts_offset_secs\":0,\"level\":\"I\"}"
+    )
+    val df = Normalize(lines.toDF("line"))
+    val cols = df.columns.toSeq.filter(_ != "line").map(c =>
+      if (c == "fields") map_entries(col(c)).as(c) else col(c))
+    val got = df.select(to_json(struct(cols: _*))).as[String].collect().toSeq
+    assert(got.size == expected.size)
+    lines.indices.foreach(i => assert(got(i) == expected(i), s"line ${lines(i)}"))
+  }
 }

@@ -19,18 +19,127 @@ class SinksSpec extends SparkSpec {
   private val recordLine =
     """{"ts":"2025-01-01T00:00:00Z","level":"INFO","msg":"hello","service":"svc","status":200,"flag":true,"name":"x"}"""
 
+  /** The lines of `df` as each driver-side and distributed sink writes
+    * them: stdout, file, rotate and http must agree byte for byte. */
+  private def renderedBySinks(df: org.apache.spark.sql.DataFrame): String = {
+    import java.nio.file.{Files, Paths}
+    val one = df.coalesce(1)
+    val dir = tempDir("rendered")
+    val buf = new java.io.ByteArrayOutputStream()
+    new Sinks.StdoutSink(new java.io.PrintStream(buf, true, "UTF-8")).write(one)
+    val stdout = buf.toString("UTF-8")
+    new Sinks.FileSink(s"$dir/file.jsonl").write(one)
+    new Sinks.RotatingSink(s"$dir/rot.jsonl", 1L << 30, 3).write(one)
+    val bodies = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val server = HttpServer.create(new java.net.InetSocketAddress(0), 0)
+    server.createContext("/in", (ex: HttpExchange) => {
+      bodies.add(new String(ex.getRequestBody.readAllBytes(), "UTF-8"))
+      ex.sendResponseHeaders(200, -1); ex.close()
+    })
+    server.start()
+    try new Sinks.HttpSink(s"http://localhost:${server.getAddress.getPort}/in",
+      new Sinks.RetryPolicy(0, 1, 2, 0)).write(one)
+    finally server.stop(0)
+    val http = bodies.toArray.map(_ + "\n").mkString
+    assert(Files.readString(Paths.get(s"$dir/file.jsonl")) == stdout, "file sink")
+    assert(Files.readString(Paths.get(s"$dir/rot.jsonl")) == stdout, "rotate sink")
+    assert(http == stdout, "http sink")
+    stdout
+  }
+
   test("renderRecord: Go field names, order, typed fields, HTML escaping") {
-    val row = normalized(recordLine).head()
-    val json = Sinks.renderRecord(row)
+    val json = Sinks.rendered(normalized(recordLine)).head()
     assert(json.startsWith("""{"TS":"2025-01-01T00:00:00Z","Level":"INFO","Service":"svc""""))
     // struct order: TS, Level, Service, Namespace, Pod, Node, Message, TraceID, Fields
     assert(json.indexOf("\"Message\"") > json.indexOf("\"Node\""))
     // typed field values: number/bool raw, string quoted; keys sorted
     assert(json.contains(""""Fields":{"flag":true,"name":"x","status":200}"""))
     // encoding/json HTML escaping
-    val row2 = normalized(
-      """{"ts":"2025-01-01T00:00:00Z","level":"I","msg":"a<b>&c"}""").head()
-    assert(Sinks.renderRecord(row2).contains("a\\u003cb\\u003e\\u0026c"))
+    val json2 = Sinks.rendered(normalized(
+      """{"ts":"2025-01-01T00:00:00Z","level":"I","msg":"a<b>&c"}""")).head()
+    assert(json2.contains("a\\u003cb\\u003e\\u0026c"))
+  }
+
+  test("render parity: stdout, file, rotate and http sinks write the same Go-shaped bytes") {
+    // expected lines are the renderer's output before it became a
+    // generated expression: HTML and control escapes, a non-BMP
+    // character, keys whose Java order differs from their UTF-8 byte
+    // order, number-like, JSON-like and "null" strings, a null value
+    // and an empty map
+    val lines = Seq(
+      "{\"ts\":\"2025-01-01T00:00:00Z\",\"level\":\"INFO\",\"msg\":\"a<b>&c \\u0001\\b\\f\\u001f\\u007f tab\\t nl\\n cr\\r q\\\" bs\\\\ \\ud83d\\ude00 \\u00e9\",\"service\":\"s<>\",\"trace_id\":\"t&\",\"<k>\":\"&v\",\"ctl\":\"\\u0002x\",\"nonbmp\":\"\\ud83d\\ude00\"}",
+      "{\"ts\":\"2025-01-01T00:00:00Z\",\"level\":\"INFO\",\"msg\":\"m\",\"\\ue000k\":\"private-use\",\"\\ud83d\\ude00k\":\"astral\",\"Zk\":\"upper\",\"ak\":\"lower\",\"\\u00e9\":\"latin\",\"\":\"empty key\"}",
+      "{\"ts\":\"2025-01-01T00:00:00Z\",\"level\":\"INFO\",\"msg\":\"m\",\"f1\":\"5.0\",\"f2\":\"-1e5\",\"f3\":\"{oops\",\"f4\":\"[1]\",\"f5\":\"null\",\"f6\":null,\"f7\":5.0,\"f8\":-1e5,\"f9\":\"true\",\"f10\":[1,{\"a\":\"<\"}],\"f11\":\"\",\"f12\":false,\"f13\":\"-\",\"f14\":\"1.\",\"f15\":\"1e\",\"f16\":\" 1\",\"f17\":\"0\",\"f18\":\"-0.5E+3\"}",
+      "{\"ts\":\"2025-01-01T00:00:00Z\",\"level\":\"INFO\",\"msg\":\"empty\"}",
+      "{\"ts\":\"2025-01-01T00:00:00Z\",\"level\":\"WARN\",\"msg\":\"k\",\"kubernetes\":{\"namespace_name\":\"ns\",\"pod_name\":\"p\",\"node_name\":\"n\"},\"app\":\"a\"}"
+    )
+    val expected = Seq(
+      "{\"TS\":\"2025-01-01T00:00:00Z\",\"Level\":\"INFO\",\"Service\":\"s\\u003c\\u003e\",\"Namespace\":\"\",\"Pod\":\"\",\"Node\":\"\",\"Message\":\"a\\u003cb\\u003e\\u0026c \\u0001\\u0008\\u000c\\u001f\u007F tab\\t nl\\n cr\\r q\\\" bs\\\\ \uD83D\uDE00 \u00E9\",\"TraceID\":\"t\\u0026\",\"Fields\":{\"\\u003ck\\u003e\":\"\\u0026v\",\"ctl\":\"\\u0002x\",\"nonbmp\":\"\uD83D\uDE00\"}}",
+      "{\"TS\":\"2025-01-01T00:00:00Z\",\"Level\":\"INFO\",\"Service\":\"\",\"Namespace\":\"\",\"Pod\":\"\",\"Node\":\"\",\"Message\":\"m\",\"TraceID\":\"\",\"Fields\":{\"\":\"empty key\",\"Zk\":\"upper\",\"ak\":\"lower\",\"\u00E9\":\"latin\",\"\uD83D\uDE00k\":\"astral\",\"\uE000k\":\"private-use\"}}",
+      "{\"TS\":\"2025-01-01T00:00:00Z\",\"Level\":\"INFO\",\"Service\":\"\",\"Namespace\":\"\",\"Pod\":\"\",\"Node\":\"\",\"Message\":\"m\",\"TraceID\":\"\",\"Fields\":{\"f1\":5.0,\"f10\":[1,{\"a\":\"<\"}],\"f11\":\"\",\"f12\":false,\"f13\":\"-\",\"f14\":\"1.\",\"f15\":\"1e\",\"f16\":\" 1\",\"f17\":0,\"f18\":-0.5E+3,\"f2\":-1e5,\"f3\":\"{oops\",\"f4\":[1],\"f5\":null,\"f6\":null,\"f7\":5.0,\"f8\":-1e5,\"f9\":true}}",
+      "{\"TS\":\"2025-01-01T00:00:00Z\",\"Level\":\"INFO\",\"Service\":\"\",\"Namespace\":\"\",\"Pod\":\"\",\"Node\":\"\",\"Message\":\"empty\",\"TraceID\":\"\",\"Fields\":{}}",
+      "{\"TS\":\"2025-01-01T00:00:00Z\",\"Level\":\"WARN\",\"Service\":\"a\",\"Namespace\":\"ns\",\"Pod\":\"p\",\"Node\":\"n\",\"Message\":\"k\",\"TraceID\":\"\",\"Fields\":{}}"
+    ).mkString("", "\n", "\n")
+    assert(renderedBySinks(normalized(lines: _*)) == expected)
+  }
+
+  test("render: a number-like string with a leading zero stays quoted (JSON's number grammar)") {
+    val line = renderedBySinks(normalized(
+      """{"ts":"2025-01-01T00:00:00Z","level":"INFO","msg":"m","zip":"02134","a":"00","b":"-01","c":"007.5","n":0,"d":-0.5,"e":"10"}""")).stripLineEnd
+    new com.fasterxml.jackson.databind.ObjectMapper().readTree(line) // whole line parses
+    assert(line.endsWith(
+      """"Fields":{"a":"00","b":"-01","c":"007.5","d":-0.5,"e":10,"n":0,"zip":"02134"}}"""), line)
+  }
+
+  test("render: U+2028 and U+2029 are escaped, as Go's encoder does") {
+    val line = renderedBySinks(normalized("{\"ts\":\"2025-01-01T00:00:00Z\"," +
+      "\"level\":\"INFO\",\"msg\":\"a\\u2028b\\u2029c\",\"k\":\"\\u2028\"}"))
+    assert(line.contains("\"Message\":\"a\\u2028b\\u2029c\""), line)
+    assert(line.contains("\"Fields\":{\"k\":\"\\u2028\"}"), line)
+    assert(!line.exists(c => c == '\u2028' || c == '\u2029'), line)
+  }
+
+  test("part writer: a stray attempt file is neither appended nor left behind; a crashed run's temp dir is cleared") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val dir = tempDir("stray")
+    val out = s"$dir/out.jsonl"
+    val tmp = Paths.get(out + ".spark-tmp")
+    // a crashed run left its temp dir behind, with a whole part file
+    Files.createDirectories(tmp.resolve("_temporary"))
+    Files.writeString(tmp.resolve("part-00000-attempt-7"), "crashed\n")
+    // a task attempt the job does not return (a failed or speculative
+    // copy) writes its own file next to the returned attempts' files
+    val tmpDir = tmp.toString
+    val lines = spark.range(0, 100, 1, 4).map { i =>
+      if (i == 0) Files.writeString(Files.createDirectories(Paths.get(tmpDir))
+        .resolve("part-00000-attempt-999999"), "stray\n")
+      i.toString
+    }
+    assert(Sinks.writeLines(lines, out, fresh = true) == 100)
+    assert(Files.readAllLines(Paths.get(out)).asScala == (0 until 100).map(_.toString))
+    assert(!Files.exists(tmp), "the temp dir must be deleted")
+  }
+
+  test("part writer: empty partitions, partition order, and a zero-row fresh write still creates the target") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val dir = tempDir("parts")
+    val out = s"$dir/out.jsonl"
+    // most of the 8 partitions are empty
+    assert(Sinks.writeLines(Seq("a", "b").toDS().repartition(8), out, fresh = true) == 2)
+    assert(Files.readAllLines(Paths.get(out)).asScala.sorted == Seq("a", "b"))
+    assert(Sinks.writeLines(spark.emptyDataset[String], out, fresh = true) == 0)
+    assert(Files.size(Paths.get(out)) == 0, "a fresh write truncates even with no rows")
+    val absent = s"$dir/absent.jsonl"
+    assert(Sinks.writeLines(spark.emptyDataset[String], absent, fresh = true) == 0)
+    assert(Files.exists(Paths.get(absent)) && Files.size(Paths.get(absent)) == 0)
+    // lines land in partition order
+    assert(Sinks.writeLines(spark.range(0, 1000, 1, 7).map(_.toString), out,
+      fresh = false) == 1000)
+    assert(Files.readAllLines(Paths.get(out)).asScala == (0 until 1000).map(_.toString))
+    val left = new java.io.File(dir.toString).list().toSeq
+    assert(left.sorted == Seq("absent.jsonl", "out.jsonl"), left)
   }
 
   test("rotating sink: checkpoint resume continues the NEWEST rotated file") {

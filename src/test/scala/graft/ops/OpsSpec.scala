@@ -732,6 +732,26 @@ class OpsSpec extends SparkSpec {
     assert(feats == Map(1L -> "imageio", 2L -> "wav", 3L -> "fake"))
   }
 
+  test("multimodal: a null payload yields each decoder's sentinel, not a failed task") {
+    // one null-payload row per decoder route: image, WAV, MP3, MP4 and
+    // a mime that falls to the fake decoder
+    val mimes = Seq("image/png", "audio/wav", "audio/mpeg", "video/mp4", "video/webm")
+    val media = mimes.zipWithIndex.map { case (m, i) => (i.toLong, m) }
+      .toDF("media_id", "mime")
+      .select(col("media_id"), lit(null).cast("binary").as("payload"),
+        struct(col("mime"), lit(0L).as("byte_len")).as("meta"))
+    val feats = Multimodal.extractFeatures(media, Multimodal.JdkMediaDecoder)
+      .collect().sortBy(_.media_id)
+    assert(feats.map(_.decoder).toSeq ==
+      Seq("imageio", "wav", "mp3-meta", "mp4-meta", "fake"))
+    assert(feats.forall(_.byte_len == 0), feats.map(_.byte_len).toSeq)
+    feats.take(4).foreach(f => assert(f.width == -1 && f.n_frames == 0, f))
+    // the fake decoder treats a null payload as an empty one
+    val empty = Multimodal.DeterministicFakeDecoder.decode(4L, "video/webm", Array.emptyByteArray)
+    assert(feats(4).width == empty.width && feats(4).n_frames == empty.n_frames &&
+      feats(4).feature.toSeq == empty.feature.toSeq)
+  }
+
   test("multimodal: Mp3MetaDecoder reads true rate/channels/frames from frame headers") {
     // committed 2,243-byte fixture: ID3v2 tag (30 B, syncsafe-skipped)
     // + 5 CBR frames (MPEG1 Layer III, 128 kbps, 44.1 kHz, joint
